@@ -13,6 +13,12 @@ row-at-a-time client loop (SURVEY §1.2, §7 risk 1):
   ``databases.py:200-206``) becomes a broadcast left-semi join against
   the vertex ids; edges with unresolvable endpoints are silently dropped,
   matching all three reference backends (SURVEY §2.1 quirk 3).
+- Every frame the engine builds from driver-held rows (each flushed
+  delta, the empty graph) comes from ``model.local_frame``: an
+  Arrow-backed ``LocalRelation`` with exact Catalyst statistics. The
+  ``auto`` traversal strategy trusts ``sizeInBytes``; a list-built frame
+  reports Long.MaxValue through the union and the semi-joins, and would
+  send every traversal after a write to the distributed kernel.
 - ``get_single_node`` = conjunctive equality over the property map +
   label membership (``databases.py:111-119``). Neo4j honors the label
   argument, ArangoDB/OrientDB ignore it on reads (``databases.py:208-212,
@@ -36,6 +42,7 @@ from graphdatabases_spark.graph.model import (
     EDGE_SCHEMA,
     VERTEX_SCHEMA,
     PropertyGraph,
+    local_frame,
 )
 from graphdatabases_spark.graph.traversal import khop, ssp
 
@@ -93,19 +100,24 @@ class GraphEngine:
     _CHECKPOINT_FLUSHES = 16
 
     def flush(self) -> None:
-        """Apply buffered mutations as one batch append per table."""
+        """Apply buffered mutations as one batch append per table.
+
+        With nothing buffered this is a no-op: reads flush first, and only
+        a flush that appends rows counts toward the checkpoint cadence."""
         if self._suppressed:
             self._pending_nodes.clear()
             self._pending_edges.clear()
             return
+        if not (self._pending_nodes or self._pending_edges):
+            return
         if self._pending_nodes:
-            new_v = self.spark.createDataFrame(self._pending_nodes, VERTEX_SCHEMA)
+            new_v = local_frame(self.spark, self._pending_nodes, VERTEX_SCHEMA)
             self.graph = PropertyGraph(
                 self.graph.vertices.union(new_v), self.graph.edges
             )
             self._pending_nodes = []
         if self._pending_edges:
-            new_e = self.spark.createDataFrame(self._pending_edges, EDGE_SCHEMA)
+            new_e = local_frame(self.spark, self._pending_edges, EDGE_SCHEMA)
             self.graph = PropertyGraph(
                 self.graph.vertices, self.graph.edges.union(self._validate_edges(new_e))
             )

@@ -53,6 +53,31 @@ EDGE_SCHEMA = StructType(
 )
 
 
+def local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` with exact Catalyst statistics.
+
+    The rows go to Spark as one ``pyarrow.Table``, which plans as a
+    ``LocalRelation`` whose ``sizeInBytes`` is its row count times the row
+    width. ``createDataFrame`` on a Python list plans as a ``LogicalRDD``
+    instead, which reports ``spark.sql.defaultSizeInBytes`` (Long.MaxValue)
+    and keeps reporting it through every union and left-semi join above it.
+    The ``auto`` traversal strategy decides from ``sizeInBytes``, so every
+    frame the driver builds for a graph must come from here. Unlike a pandas
+    frame, an Arrow table takes this path whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says.
+
+    Spark keeps the table as a ``LocalRelation`` only up to
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
+    default); a larger table becomes a scan of its Arrow batches.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = {f.name: [row[i] for row in rows] for i, f in enumerate(schema.fields)}
+    return spark.createDataFrame(pa.table(cols, schema=arrow_schema), schema)
+
+
 def prop(df_or_col, key: str) -> Column:
     """Typed promotion of a property-map entry to a column.
 
@@ -79,8 +104,8 @@ class PropertyGraph:
     @staticmethod
     def empty(spark: SparkSession) -> "PropertyGraph":
         return PropertyGraph(
-            vertices=spark.createDataFrame([], VERTEX_SCHEMA),
-            edges=spark.createDataFrame([], EDGE_SCHEMA),
+            vertices=local_frame(spark, [], VERTEX_SCHEMA),
+            edges=local_frame(spark, [], EDGE_SCHEMA),
         )
 
     def edge_pairs(self) -> DataFrame:

@@ -30,11 +30,16 @@ Execution strategy (the 100-TB design decision):
   benefit; the local path answers in milliseconds, matching the
   reference's server-side traversal times (BASELINE: 0.06-1.1 s for 300
   hops).
-- **auto** (default): local if ``edges.count() ≤ min(local_threshold,
-  hops·500k)`` (default cap 2M edges) — one O(E) Arrow collect beats
-  ~1-2 s of fixed job latency per round until E is large relative to the
-  round count. At 100 TB the threshold is never met and the distributed
-  path runs.
+- **auto** (default): decided first from the optimized plan's Catalyst
+  ``sizeInBytes`` (``_decide_strategy``): local at or under 64 MB,
+  distributed at or over 4 GB, and in between local if
+  ``edges.count() ≤ min(local_threshold, hops·500k)`` (default cap 2M
+  edges) — one O(E) Arrow collect beats ~1-2 s of fixed job latency per
+  round until E is large relative to the round count. At 100 TB
+  the distributed path runs without a probe. The policy is only as good
+  as the statistics: a driver-built frame must come from
+  ``model.local_frame`` (exact size), because a list-built
+  ``createDataFrame`` reports Long.MaxValue and forces distributed.
 """
 
 from __future__ import annotations
@@ -53,7 +58,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from graphdatabases_spark.graph.model import PropertyGraph
+from graphdatabases_spark.graph.model import PropertyGraph, local_frame
 
 DIST_SCHEMA = StructType(
     [
@@ -532,28 +537,12 @@ def _local_result_df(spark: SparkSession, rows: list, schema: StructType) -> Dat
                     )
             selects.append("SELECT " + ", ".join(cols))
         return spark.sql(" UNION ALL ".join(selects))
-    if rows:
-        # Array-typed results (SSP paths): hand Spark ONE Arrow batch.
-        # The row-list path re-verifies every element against the schema
-        # driver-side (~6 ms extra on a 1-row path result — measured
-        # round 5); Arrow skips that entirely.
-        try:
-            import pyarrow as pa
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            arrow_schema = to_arrow_schema(schema)
-            cols = {
-                f.name: [row[i] for row in rows]
-                for i, f in enumerate(schema.fields)
-            }
-            return spark.createDataFrame(
-                pa.table(cols, schema=arrow_schema), schema
-            )
-        except Exception:  # pragma: no cover - fallback for exotic types
-            pass
-    # Empty results: plain-list createDataFrame compiles to a
-    # LocalRelation in half the RPC roundtrips of parallelize().
-    return spark.createDataFrame(rows, schema)
+    # Array-typed and empty results: ONE Arrow batch, planned as a
+    # LocalRelation with exact statistics. The row-list path re-verifies
+    # every element against the schema driver-side (~6 ms extra on a
+    # 1-row path result — measured round 5) and plans as a LogicalRDD
+    # that reports Long.MaxValue to anything sized from its stats.
+    return local_frame(spark, rows, schema)
 
 
 def _numpy_result_df(

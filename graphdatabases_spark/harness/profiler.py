@@ -119,7 +119,12 @@ class Profiler:
     def _run(self) -> None:
         prev_ticks, _ = self._snapshot()
         prev_t = time.perf_counter()
-        while not self._stop.wait(self.interval):
+        stopped = False
+        while not stopped:
+            # The last sample covers the tail up to stop(): a busy caller
+            # holding the GIL can delay each wake-up well past the
+            # interval, and the tail would otherwise go unsampled.
+            stopped = self._stop.wait(self.interval)
             ticks, mem = self._snapshot()
             now = time.perf_counter()
             dt = max(now - prev_t, 1e-9)

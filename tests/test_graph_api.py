@@ -2,12 +2,24 @@
 
 from __future__ import annotations
 
+import ast
+import inspect
+
 import pytest
 from pyspark.sql import functions as F
 
+from graphdatabases_spark.graph import api as api_module
+from graphdatabases_spark.graph import model as model_module
 from graphdatabases_spark.graph.api import GraphEngine
 from graphdatabases_spark.graph import io as graph_io
-from graphdatabases_spark.graph.generators import chain_graph
+from graphdatabases_spark.graph.generators import chain_graph, grid_graph
+from graphdatabases_spark.graph.model import EDGE_SCHEMA, VERTEX_SCHEMA, local_frame
+from graphdatabases_spark.graph.traversal import (
+    _STATS_LOCAL_BYTES,
+    _decide_strategy,
+    _plan_size_bytes,
+)
+from graphdatabases_spark.harness.workloads import create_grid_graph
 
 
 @pytest.fixture()
@@ -100,6 +112,145 @@ class TestReads:
         assert engine.get_nodes_hops(1, 3, strategy="local").count() == 3
         rows = engine.ssp(0, 4, strategy="local").collect()
         assert rows[0]["dist"] == 4
+
+
+def _grid_engine(spark):
+    return GraphEngine(spark, grid_graph(spark, 20))
+
+
+def _fresh_engine(spark):
+    return GraphEngine(spark)
+
+
+def _cleared_engine(spark):
+    engine = GraphEngine(spark, grid_graph(spark, 20))
+    engine.clear()
+    return engine
+
+
+def _created_grid_engine(spark):
+    engine = GraphEngine(spark)
+    create_grid_graph(engine, 20)
+    return engine
+
+
+def _khop_ids(adj: dict, src: int, hops: int) -> set:
+    """Pure-Python k-hop: nodes at 1..hops; the root only via a cycle."""
+    reached, frontier = set(), {src}
+    for _ in range(hops):
+        frontier = {v for u in frontier for v in adj.get(u, ())} - reached
+        reached |= frontier
+    return reached
+
+
+def _bfs_dist(adj: dict, src: int) -> dict:
+    dist, frontier = {src: 0}, [src]
+    while frontier:
+        nxt = []
+        for u in frontier:
+            for v in adj.get(u, ()):
+                if v not in dist:
+                    dist[v] = dist[u] + 1
+                    nxt.append(v)
+        frontier = nxt
+    return dist
+
+
+class TestExactStats:
+    """``auto`` picks its traversal strategy from Catalyst ``sizeInBytes``,
+    so every engine state — before and after a write — must report the
+    true, small size and stay on the local path."""
+
+    @staticmethod
+    def _assert_local(engine):
+        pairs = engine.graph.edge_pairs()
+        size = _plan_size_bytes(pairs)
+        assert size is not None and size <= _STATS_LOCAL_BYTES, size
+        assert _decide_strategy(pairs, "auto") == "local"
+
+    @pytest.mark.parametrize(
+        "make", [_grid_engine, _fresh_engine, _cleared_engine, _created_grid_engine]
+    )
+    def test_write_keeps_auto_local_and_exact(self, spark, make):
+        engine = make(spark)
+        self._assert_local(engine)
+        base_ids = {r["id"] for r in engine.graph.vertices.select("id").collect()}
+        base_edges = [(r["src"], r["dst"]) for r in engine.graph.edge_pairs().collect()]
+        writes = [(399, 400), (400, 401), (401, 0), (402, 401), (401, 999), (998, 400)]
+        for nid in (400, 401, 402):
+            engine.add_node(nid, ["test"], {"name": f"test{nid}"})
+        for a, b in writes:
+            engine.add_edge(a, b)
+        engine.flush()
+        self._assert_local(engine)
+
+        known = base_ids | {400, 401, 402}
+        kept = [(a, b) for a, b in writes if a in known and b in known]
+        assert (401, 999) not in kept  # the dangling edge is dropped
+        assert engine.graph.num_edges() == len(base_edges) + len(kept)
+        adj = {}
+        for a, b in base_edges + kept:
+            adj.setdefault(a, []).append(b)
+
+        got = {r["id"] for r in engine.get_nodes_hops(402, 30).collect()}
+        assert got == _khop_ids(adj, 402, 30)
+        dist = _bfs_dist(adj, 402)
+        dst = max(dist, key=lambda v: (dist[v], -v))
+        rows = engine.ssp(402, dst).collect()
+        assert rows[0]["dist"] == dist[dst]
+        path = rows[0]["path"]
+        assert path[0] == 402 and path[-1] == dst and len(path) == dist[dst] + 1
+        assert all(b in adj.get(a, ()) for a, b in zip(path, path[1:]))
+
+    def test_reads_with_nothing_pending_do_not_flush(self, spark):
+        engine = GraphEngine(spark, chain_graph(spark, 6))
+        for _ in range(2 * engine._CHECKPOINT_FLUSHES):
+            engine.find_nodes(properties={"name": "test1"})
+            engine.get_nodes_hops(1, 2)
+            engine.ssp(0, 3)
+        assert engine._flush_count == 0
+        engine.add_node(6)
+        engine.flush()
+        engine.flush()
+        assert engine._flush_count == 1
+
+    @pytest.mark.parametrize("n", [0, 1, 50])
+    def test_local_frame_is_exact_local_relation(self, spark, n):
+        vrows = [(i, ["a", "b"][: i % 3], {"k": str(i), "j": "x"}) for i in range(n)]
+        if n:
+            vrows[0] = (0, None, None)
+        erows = [(i, i + 1, ["e"], {}) for i in range(n)]
+        for rows, schema in ((vrows, VERTEX_SCHEMA), (erows, EDGE_SCHEMA)):
+            df = local_frame(spark, rows, schema)
+            plan = df._jdf.queryExecution().optimizedPlan()
+            assert plan.getClass().getSimpleName() == "LocalRelation"
+            assert _plan_size_bytes(df) <= 1024 * max(n, 1)
+            assert df.schema == schema
+            assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_driver_frames_come_from_local_frame():
+    """api.py and model.py call ``createDataFrame`` only inside
+    ``local_frame``: a frame built from a Python list reports
+    Long.MaxValue and silently flips ``auto`` to distributed."""
+
+    def calls(node):
+        return [
+            c for c in ast.walk(node)
+            if isinstance(c, ast.Call)
+            and isinstance(c.func, ast.Attribute)
+            and c.func.attr == "createDataFrame"
+        ]
+
+    for mod in (api_module, model_module):
+        tree = ast.parse(inspect.getsource(mod))
+        helpers = [
+            f for f in ast.walk(tree)
+            if isinstance(f, ast.FunctionDef) and f.name == "local_frame"
+        ]
+        allowed = {id(c) for f in helpers for c in calls(f)}
+        stray = [c.lineno for c in calls(tree) if id(c) not in allowed]
+        assert not stray, f"{mod.__name__}: createDataFrame at lines {stray}"
 
 
 class TestIngest:
