@@ -13,6 +13,15 @@ Scale discipline shared by all loops:
 - ``localCheckpoint`` every few rounds to truncate lineage (iterative
   plan blowup is the classic failure mode)
 - early exit on convergence via a cheap aggregate
+
+Every whole-graph kernel (``pagerank``, ``pagerank_units``,
+``personalized_pagerank*``, ``connected_components``,
+``label_propagation``, ``kcore``, ``triangle_count``, ``weighted_sssp``)
+takes ``strategy="auto"``: below ``local_threshold`` edges
+(``traversal._pick_strategy``) it collects the edge set once and runs
+the identical recurrence on the driver, since a round of a distributed
+loop costs a few Spark jobs whatever the data size. Only the fixed-point
+``personalized_pagerank_batch_units`` has no local path.
 """
 
 from __future__ import annotations
@@ -29,7 +38,9 @@ from graphdatabases_spark.graph.model import PropertyGraph
 from graphdatabases_spark.graph.traversal import (
     LOCAL_EDGE_THRESHOLD,
     _collect_adjacency,
+    _collect_index,
     _local_result_df,
+    _numpy_result_df,
     _pick_strategy,
     hash_partitioned_on,
 )
@@ -44,6 +55,12 @@ COMP_SCHEMA = StructType(
 )
 LABEL_SCHEMA = StructType(
     [StructField("id", LongType(), False), StructField("label", LongType(), False)]
+)
+UNITS_SCHEMA = StructType(
+    [
+        StructField("id", LongType(), False),
+        StructField("rank_units", LongType(), False),
+    ]
 )
 CORE_SCHEMA = StructType(
     [
@@ -492,12 +509,110 @@ def personalized_pagerank_batch_units(
         links.unpersist()
 
 
+def _div_trunc(a, b):
+    """Spark's ``div`` on int64 arrays: truncates toward zero, where
+    numpy's ``//`` floors (they differ only for negative operands)."""
+    import numpy as np
+
+    return (a - np.fmod(a, b)) // b
+
+
+def _pagerank_units_local(
+    graph,
+    edges: DataFrame,
+    num_iters: int,
+    damping_pct: int,
+    unit_scale: int,
+    init_ranks: DataFrame | None,
+) -> DataFrame:
+    """Driver-side ``pagerank_units``: the same integer recurrence in
+    exact int64 numpy over the cached CSR edge index. Per round, contrib
+    = units div outdeg per edge, a dst-sorted ``np.add.reduceat`` for
+    the message sums, then base + damping_pct·msg div 100. No float ever
+    carries a rank (sums can pass 2^53); int64 overflow raises, as ANSI
+    Spark does, instead of wrapping."""
+    import numpy as np
+
+    spark = _spark_of(edges)
+    i64 = np.iinfo(np.int64)
+
+    def overflow(what: str):
+        raise OverflowError(f"pagerank_units: long overflow in {what}")
+
+    idx = _collect_index(edges)
+    if isinstance(graph, PropertyGraph):
+        tbl = graph.vertices.select(F.col("id").cast("long")).toArrow()
+        vids = np.unique(np.asarray(tbl.column("id").to_numpy(), dtype=np.int64))
+    else:
+        vids = idx.universe
+    nv = len(vids)
+    if nv == 0:
+        return _local_result_df(spark, [], UNITS_SCHEMA)
+
+    def vpos(ids):
+        # Position of each id in ``vids``, or -1 when it is no vertex.
+        p = np.minimum(np.searchsorted(vids, ids), nv - 1)
+        return np.where(vids[p] == ids, p, -1)
+
+    # Per-edge (src, dst) vertex positions and outdeg. outdeg counts
+    # every edge of src, also those to non-vertices, whose messages are
+    # dropped (the distributed left join from the vertex set).
+    deg_u = np.diff(idx.indptr)
+    src_u = np.repeat(np.arange(len(idx.universe)), deg_u)
+    upos = vpos(idx.universe)
+    e_src, e_dst = upos[src_u], upos[idx.nbr_idx]
+    keep = (e_src >= 0) & (e_dst >= 0)
+    order = np.argsort(e_dst[keep], kind="stable")
+    e_src, e_dst = e_src[keep][order], e_dst[keep][order]
+    e_deg = deg_u[src_u][keep][order]
+    seg = np.flatnonzero(np.r_[True, e_dst[1:] != e_dst[:-1]])
+    seg_end = np.r_[seg[1:], len(e_dst)]
+
+    units = np.full(nv, np.int64(unit_scale))
+    if init_ranks is not None:
+        prev = (
+            init_ranks.select(
+                F.col("id").cast("long").alias("id"),
+                F.col("rank_units").cast("long").alias("rank_units"),
+            )
+            .dropna()
+            .toArrow()
+        )
+        ids = np.asarray(prev.column("id").to_numpy(), dtype=np.int64)
+        vals = np.asarray(prev.column("rank_units").to_numpy(), dtype=np.int64)
+        p = vpos(ids)
+        units[p[p >= 0]] = vals[p >= 0]
+    base = np.int64(((100 - damping_pct) * unit_scale) // 100)
+    mul_lim = i64.max // abs(damping_pct) if damping_pct else i64.max
+    for _ in range(num_iters):
+        contrib = _div_trunc(units[e_src], e_deg)
+        msg = np.zeros(nv, dtype=np.int64)
+        if len(contrib):
+            # |float sum of |contrib|| < 2^62 proves the exact segment
+            # sum (and every partial sum) fits; recheck the rest exactly.
+            bound = np.add.reduceat(np.abs(contrib.astype(np.float64)), seg)
+            for k in np.flatnonzero(bound >= 2.0**62):
+                exact = sum(int(c) for c in contrib[seg[k] : seg_end[k]])
+                if not i64.min <= exact <= i64.max:
+                    overflow("the message sum")
+            msg[e_dst[seg]] = np.add.reduceat(contrib, seg)
+        if ((msg > mul_lim) | (msg < -mul_lim)).any():
+            overflow("damping_pct * msg")
+        step = _div_trunc(damping_pct * msg, 100)
+        if ((step > i64.max - base) if base >= 0 else (step < i64.min - base)).any():
+            overflow("base + damping")
+        units = base + step
+    return _numpy_result_df(spark, {"id": vids, "rank_units": units}, UNITS_SCHEMA)
+
+
 def pagerank_units(
     graph: PropertyGraph | DataFrame,
     num_iters: int = 10,
     damping_pct: int = 85,
     unit_scale: int = 10**12,
     init_ranks: DataFrame | None = None,
+    strategy: str = "auto",
+    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """GLOBAL fixed-point PageRank with an optional WARM START — the
     whole-graph sibling of ``personalized_pagerank_batch_units`` and
@@ -524,8 +639,11 @@ def pagerank_units(
     reused every round; each round is one join (reusing the edge
     partitioning) plus one dst-keyed aggregation; state is one BIGINT
     per vertex; lineage truncated every ``CHECKPOINT_EVERY`` rounds.
-    No local fast path is needed: integer ops remove the only
-    cross-strategy divergence (same policy as the per-seed kernel).
+    Small edge sets (``strategy``/``local_threshold``, the policy of
+    ``pagerank``) run the same recurrence driver-side in int64 numpy
+    (``_pagerank_units_local``): integer arithmetic makes the two
+    strategies bit-identical, and on a toy graph the distributed loop
+    pays a broadcast join and a checkpoint job per round for nothing.
 
     Returns DataFrame(id BIGINT, rank_units BIGINT) over the graph's
     full vertex set.
@@ -533,6 +651,10 @@ def pagerank_units(
     from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
 
     edges = _edges(graph)
+    if _pick_strategy(edges, strategy, local_threshold) == "local":
+        return _pagerank_units_local(
+            graph, edges, num_iters, damping_pct, unit_scale, init_ranks
+        )
     # The vertex frame re-enters the plan EVERY round (the left join
     # that hands each vertex its base units) — materialize it once;
     # without this each round re-runs the edge scan + explode-distinct

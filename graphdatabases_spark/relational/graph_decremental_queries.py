@@ -139,7 +139,9 @@ def _mde_mis_union(tag: str) -> str:
     "shape: base phase is the shared kernel; warm rounds scan the "
     "once-checkpointed pruned adjacency-with-status relation against "
     "a broadcast dirty set (the shared _mis_warm_repair), exchanged "
-    "work bounded by the cascade cone.",
+    "work bounded by the cascade cone; an adjacency of at most "
+    "_SYM_LOCAL_EDGE_MAX rows is collected once and the cascade runs "
+    "on the driver.",
 )
 def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
     from graphdatabases_spark.functions import text as T
@@ -248,7 +250,9 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
         _mis_side(dirty_ids, 2 * n_deleted_edges), "id", "left_semi"
     ).localCheckpoint(eager=True)
     n_dirty = dirty.count()
-    delta, n_delta = _mis_warm_repair(spark, adj, dirty, n_dirty)
+    delta, n_delta = _mis_warm_repair(
+        spark, adj, dirty, n_dirty, 2 * n_kept_edges
+    )
     adj.unpersist()
     final = (
         fstat.join(

@@ -5,15 +5,17 @@ Pure-move split out of graph_symmetry_queries.py (round 13 — that
 module was heading for the 2k bar with the b-matching addition): the
 priority-DAG cascade repairs for MIS and maximal matching after an
 edge-batch append, each with a sub-threshold driver-local cascade
-(lazy adjacency fetches) and the distributed relaxation as the
-above-threshold path.  Same entries, same oracles, registry unchanged.
+(MIS: one collect of the whole adjacency; matching: lazy adjacency
+fetches) and the distributed relaxation as the above-threshold path.  Same entries, same oracles, registry unchanged.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
+from graphdatabases_spark.graph.model import local_frame
 from graphdatabases_spark.relational.catalog import register
 from graphdatabases_spark.relational.graph_kernels import (
     _SYM_LOCAL_EDGE_MAX,
@@ -35,6 +37,10 @@ _MI_MOD = 20      # (src + dst) % 20 == 0 -> the ~5% "appended" batch
                   # (the graph_pagerank_incremental split, symmetric in
                   # src/dst so it filters the symmetrized relation too)
 _MI_ROUNDS = 8    # oracle unroll per phase (measured fixpoints below)
+
+_MIS_DELTA_SCHEMA = StructType(
+    [StructField("id", LongType()), StructField("s", BooleanType())]
+)
 
 
 def _mi_round_sql(tag: str, k: int) -> str:
@@ -86,26 +92,103 @@ def _cone_ids(dirty: DataFrame, n_dirty: int) -> "list[int] | None":
     return [int(v) for v in dirty.select("id").toPandas()["id"]]
 
 
-def _mis_warm_repair(spark, adj: DataFrame, dirty: DataFrame, n_dirty: int):
+def _segments(lo, hi):
+    """Concatenated row indices of the CSR segments ``[lo[i], hi[i])``
+    and, per row, the index ``i`` of the segment it came from."""
+    import numpy as np
+
+    counts = hi - lo
+    owner = np.repeat(np.arange(len(lo)), counts)
+    starts = np.repeat(lo - (np.cumsum(counts) - counts), counts)
+    return np.arange(int(counts.sum())) + starts, owner
+
+
+def _mis_cascade_local(spark, adj: DataFrame, dirty: DataFrame):
+    """Driver-side ``_mis_warm_repair``: one Arrow collect of ``adj`` and
+    ``dirty``, then the same Jacobi rounds in numpy. Each round judges
+    every dirty vertex against the PREVIOUS round's statuses (blocked =
+    some strictly-higher-priority neighbour is true), flips the changed
+    ones into the delta, and takes the strictly-lower-priority
+    neighbours of each flip as the next dirty set. The returned delta
+    holds every vertex that ever flipped, with its final status: the
+    relation the distributed loop builds."""
+    import numpy as np
+
+    a = adj.select("src", "nid", "nh", "ns").toArrow()
+    d = dirty.select("id", "h", "s").toArrow()
+    src, nid, nh = (
+        np.asarray(a.column(c).to_numpy(), dtype=np.int64)
+        for c in ("src", "nid", "nh")
+    )
+    ns = np.asarray(a.column("ns").to_numpy(), dtype=bool)
+    did, dh = (
+        np.asarray(d.column(c).to_numpy(), dtype=np.int64) for c in ("id", "h")
+    )
+    order = np.argsort(src, kind="stable")
+    src, nid, nh, ns = src[order], nid[order], nh[order], ns[order]
+    # Compact universe over every id the cascade can touch; per position
+    # its priority h and its effective status (base overlaid by delta).
+    uni = np.unique(np.concatenate([src, nid, did]))
+    lo = np.searchsorted(src, uni, side="left")
+    hi = np.searchsorted(src, uni, side="right")
+    npos = np.searchsorted(uni, nid)
+    h = np.zeros(len(uni), dtype=np.int64)
+    eff = np.zeros(len(uni), dtype=bool)
+    h[npos], eff[npos] = nh, ns
+    dpos = np.searchsorted(uni, did)
+    h[dpos] = dh
+    eff[dpos] = np.asarray(d.column("s").to_numpy(), dtype=bool)
+    flipped = np.zeros(len(uni), dtype=bool)
+    cur = np.unique(dpos)
+    while len(cur):
+        e, owner = _segments(lo[cur], hi[cur])
+        v = cur[owner]
+        higher = (nh[e] < h[v]) | ((nh[e] == h[v]) & (nid[e] < uni[v]))
+        blocked = np.zeros(len(cur), dtype=bool)
+        blocked[owner[eff[npos[e]] & higher]] = True
+        flip = cur[blocked == eff[cur]]  # new status (not blocked) differs
+        if not len(flip):
+            break
+        eff[flip] = ~eff[flip]
+        flipped[flip] = True
+        e, owner = _segments(lo[flip], hi[flip])
+        v = flip[owner]
+        lower = (nh[e] > h[v]) | ((nh[e] == h[v]) & (nid[e] > uni[v]))
+        cur = np.unique(npos[e[lower]])
+    rows = list(zip(uni[flipped].tolist(), eff[flipped].tolist()))
+    return local_frame(spark, rows, _MIS_DELTA_SCHEMA), len(rows)
+
+
+def _mis_warm_repair(
+    spark, adj: DataFrame, dirty: DataFrame, n_dirty: int, n_adj: int
+):
     """Shared warm-phase cascade for the vertex-side (MIS) repair
     entries: relax vertex statuses from the dirty seed until the
     unique priority-DAG fixpoint, returning the ``(delta, n_delta)``
     (id, s) status-override relation.  ``adj`` is the once-persisted
     (src-sorted-within-partitions) adjacency-with-neighbor-status
     relation (src, nid, nh, ns) over the POST-CHANGE graph (appended
-    for the incremental entry, pruned for the decremental one);
-    ``dirty`` carries (id, h, s) seed rows.  Extracted from
-    graph_mis_incremental (round 14) so the edge-DELETION repair
+    for the incremental entry, pruned for the decremental one), with
+    ``n_adj`` rows; ``dirty`` carries (id, h, s) seed rows.  Extracted
+    from graph_mis_incremental (round 14) so the edge-DELETION repair
     shares the loop.
     """
-    delta = spark.createDataFrame([], "id long, s boolean")
+    delta = local_frame(spark, [], _MIS_DELTA_SCHEMA)
     n_delta = 0
-    # NOTE (round 13, measured): a driver-local cascade with lazy
-    # adjacency fetches was tried here and REVERTED — MIS judging
-    # needs each dirty vertex's neighbor list, and collecting hub
-    # adjacency to the driver cost more than the distributed rounds
-    # it saved (sf1 wall 48.6 -> 74.6 s).  Matching keeps its local
-    # path because its judging reads only per-vertex matched-state.
+    if n_dirty == 0:
+        return delta, n_delta
+    # Whole-adjacency bound: when all of ``adj`` fits the Arrow-collect
+    # bound the MIS kernel's tail uses (_SYM_LOCAL_EDGE_MAX rows), the
+    # cascade runs on the driver after ONE collect instead of ~5 actions
+    # per round.  The round-13 driver-local cascade that was reverted
+    # fetched neighbour lists lazily per dirty vertex, so hub adjacency
+    # was pulled round after round (sf1 wall 48.6 -> 74.6 s); this gate
+    # is decided before the loop from the row count the caller already
+    # knows, so no vertex degree can push a collect past the bound.
+    # Above it (sf0.1's symmetric adjacency has 2.7M rows) the
+    # distributed loop below runs unchanged.
+    if n_adj <= _SYM_LOCAL_EDGE_MAX:
+        return _mis_cascade_local(spark, adj, dirty)
     cone = _cone_ids(dirty, n_dirty)
     while n_dirty > 0:
         # The cascade cone: both of this round's adjacency consumers
@@ -305,7 +388,9 @@ def _mis_warm_repair(spark, adj: DataFrame, dirty: DataFrame, n_dirty: int):
     "driver-local tail); warm rounds scan the once-checkpointed "
     "src-partitioned adjacency-with-status relation against a "
     "broadcast dirty set — zero exchange in the broadcast regime "
-    "beyond the cone-bounded distincts.",
+    "beyond the cone-bounded distincts; an adjacency of at most "
+    "_SYM_LOCAL_EDGE_MAX rows is collected once and the cascade runs "
+    "on the driver.",
 )
 def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     from graphdatabases_spark.functions import text as T
@@ -445,7 +530,9 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
         _mis_side(dirty_ids, 2 * n_batch_edges), "id", "left_semi"
     ).localCheckpoint(eager=True)
     n_dirty = dirty.count()
-    delta, n_delta = _mis_warm_repair(spark, adj, dirty, n_dirty)
+    delta, n_delta = _mis_warm_repair(
+        spark, adj, dirty, n_dirty, 2 * ecounts["n"]
+    )
     adj.unpersist()
     final = (
         fstat.join(
@@ -694,9 +781,11 @@ def _line_warm_repair(
     bounds (hub-degree-guarded — bails back here on breach), then the
     distributed relaxation whose per-round joins broadcast the
     cascade-cone-sized side only."""
-    delta = spark.createDataFrame([], "dsrc long, ddst long, dls boolean")
+    delta = local_frame(
+        spark, [], StructType.fromDDL("dsrc long, ddst long, dls boolean")
+    )
     n_delta = 0
-    vdelta = spark.createDataFrame([], "v long, hs array<bigint>")
+    vdelta = local_frame(spark, [], StructType.fromDDL("v long, hs array<bigint>"))
     n_vdelta = 0
     if (
         n_dirty > 0

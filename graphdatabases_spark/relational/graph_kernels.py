@@ -16,6 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from graphdatabases_spark.graph.model import local_frame
 
 # Sub-threshold driver-local tail for the symmetry-breaking kernels
 # (round 13 — the multilevel-Louvain / local-Dijkstra pattern applied
@@ -291,7 +294,7 @@ def _mis_kernel(
         )
         n_und = und.count()
     if mis is None:  # empty undecided set in — empty MIS out
-        return spark.createDataFrame([], "id long")
+        return local_frame(spark, [], StructType.fromDDL("id long"))
     return mis.localCheckpoint(eager=True)
 
 
@@ -377,7 +380,7 @@ def _matching_kernel(spark, g: DataFrame, n_g: int) -> DataFrame:
         )
         n_g = g.count()
     if mat is None:  # empty edge set in — empty matching out
-        return spark.createDataFrame([], "src long, dst long")
+        return local_frame(spark, [], StructType.fromDDL("src long, dst long"))
     return mat.localCheckpoint(eager=True)
 
 
@@ -493,5 +496,7 @@ def _bmatching_kernel(
         )
         n_g = g.count()
     if bmat is None:  # empty edge set in — empty b-matching out
-        return spark.createDataFrame([], "src long, dst long, w long")
+        return local_frame(
+            spark, [], StructType.fromDDL("src long, dst long, w long")
+        )
     return bmat.localCheckpoint(eager=True)

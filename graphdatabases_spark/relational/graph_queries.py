@@ -31,7 +31,13 @@ from graphdatabases_spark.graph.algorithms import (
     weighted_sssp,
 )
 from graphdatabases_spark.graph.generators import grid_graph, ring_graph
-from graphdatabases_spark.graph.traversal import bfs_distances, khop, ssp
+from graphdatabases_spark.graph.traversal import (
+    LOCAL_EDGE_THRESHOLD,
+    _pick_strategy,
+    bfs_distances,
+    khop,
+    ssp,
+)
 from graphdatabases_spark.relational.catalog import register, table
 
 ORDER_BASE = 1_000_000_000
@@ -1149,6 +1155,36 @@ def _cc_round_sql(tag: str, k: int, sym: str) -> str:
     )"""
 
 
+def _cc_inc_quotient(spark: SparkSession, sf: str):
+    """``(batch_e, base_lab, qe)`` of graph_cc_incremental: the appended
+    batch, the persisted base labels, and the quotient edge relation."""
+    edges = entity_edges(spark, sf, dedup=True).localCheckpoint(eager=True)
+    is_batch = (F.col("src") >= ORDER_BASE) & (F.col("src") < PART_BASE)
+    base_e = edges.filter(~is_batch)
+    batch_e = edges.filter(is_batch).localCheckpoint(eager=True)
+
+    base_lab = connected_components(base_e, strict=True).localCheckpoint(
+        eager=True
+    )
+
+    # Quotient contraction: batch edges through the persisted labels
+    # (coalesce = batch-new vertices cold-start at own id), dropping
+    # already-intra-component edges.
+    ls = base_lab.select(F.col("id").alias("src"), F.col("comp").alias("scomp"))
+    ld = base_lab.select(F.col("id").alias("dst"), F.col("comp").alias("dcomp"))
+    qe = (
+        batch_e.join(ls, "src", "left")
+        .join(ld, "dst", "left")
+        .select(
+            F.coalesce("scomp", F.col("src")).alias("src"),
+            F.coalesce("dcomp", F.col("dst")).alias("dst"),
+        )
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+    return batch_e, base_lab, qe
+
+
 @register(
     "graph_cc_incremental",
     oracle=f"""
@@ -1268,39 +1304,22 @@ def _cc_round_sql(tag: str, k: int, sym: str) -> str:
     "are honest). Scale shape: base labels are the persisted state "
     "(one BIGINT per vertex); per batch the work is two keyed joins "
     "against the batch, CC on the tiny quotient (driver union-find "
-    "below the adaptive threshold, distributed propagation above), "
-    "one relabel join, one bounded top-k.",
+    "while the BATCH is under the adaptive threshold — |quotient| <= "
+    "|batch| — distributed propagation above), one relabel join, one "
+    "bounded top-k.",
 )
 def graph_cc_incremental(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    from graphdatabases_spark.graph.algorithms import connected_components
-
-    edges = entity_edges(spark, sf, dedup=True).localCheckpoint(eager=True)
-    is_batch = (F.col("src") >= ORDER_BASE) & (F.col("src") < PART_BASE)
-    base_e = edges.filter(~is_batch)
-    batch_e = edges.filter(is_batch).localCheckpoint(eager=True)
-
-    base_lab = connected_components(base_e, strict=True).localCheckpoint(
-        eager=True
-    )
-
-    # Quotient contraction: batch edges through the persisted labels
-    # (coalesce = batch-new vertices cold-start at own id), dropping
-    # already-intra-component edges.
-    ls = base_lab.select(F.col("id").alias("src"), F.col("comp").alias("scomp"))
-    ld = base_lab.select(F.col("id").alias("dst"), F.col("comp").alias("dcomp"))
-    qe = (
-        batch_e.join(ls, "src", "left")
-        .join(ld, "dst", "left")
-        .select(
-            F.coalesce("scomp", F.col("src")).alias("src"),
-            F.coalesce("dcomp", F.col("dst")).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    qlab = connected_components(qe, strict=True)
+    batch_e, base_lab, qe = _cc_inc_quotient(spark, sf)
+    # The quotient's strategy comes from the batch's exact size, because
+    # contraction never adds edges: |qe| <= |batch_e|. Catalyst sizes
+    # qe's two left outer joins as the product of their children
+    # (3.3e13 B at sf0.001, 3.0e19 B at sf0.1, for a quotient of 150 and
+    # 14,999 edges), which is past _STATS_DIST_BYTES, so ``auto`` on qe
+    # itself would run the distributed loop on a few hundred edges.
+    q_strategy = _pick_strategy(batch_e, "auto", LOCAL_EDGE_THRESHOLD)
+    qlab = connected_components(qe, strict=True, strategy=q_strategy)
 
     # Batch-new vertices (none in this fixture — every order has its
     # customer edge and every part its supplier edge in base — but the

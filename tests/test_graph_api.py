@@ -229,10 +229,27 @@ class TestExactStats:
             assert [tuple(r) for r in df.collect()] == rows
 
 
+def _create_dataframe_calls(node):
+    return [
+        c for c in ast.walk(node)
+        if isinstance(c, ast.Call)
+        and isinstance(c.func, ast.Attribute)
+        and c.func.attr == "createDataFrame"
+    ]
+
+
 def test_driver_frames_come_from_local_frame():
     """api.py and model.py call ``createDataFrame`` only inside
     ``local_frame``: a frame built from a Python list reports
-    Long.MaxValue and silently flips ``auto`` to distributed."""
+    Long.MaxValue and silently flips ``auto`` to distributed. The
+    symmetry and incremental-repair kernels may also hand it a pandas or
+    Arrow frame (a ``pd.DataFrame(...)``/``pa.table(...)`` call, possibly
+    under a conditional expression), but never anything that may be a
+    list."""
+    from graphdatabases_spark.relational import (
+        graph_incremental_queries,
+        graph_kernels,
+    )
 
     def calls(node):
         return [
@@ -250,6 +267,22 @@ def test_driver_frames_come_from_local_frame():
         ]
         allowed = {id(c) for f in helpers for c in calls(f)}
         stray = [c.lineno for c in calls(tree) if id(c) not in allowed]
+        assert not stray, f"{mod.__name__}: createDataFrame at lines {stray}"
+
+    def frame_ctor(arg) -> bool:
+        if isinstance(arg, ast.IfExp):
+            return frame_ctor(arg.body) and frame_ctor(arg.orelse)
+        return (
+            isinstance(arg, ast.Call)
+            and isinstance(arg.func, ast.Attribute)
+            and arg.func.attr in ("DataFrame", "table")
+        )
+
+    for mod in (graph_kernels, graph_incremental_queries):
+        tree = ast.parse(inspect.getsource(mod))
+        stray = [
+            c.lineno for c in calls(tree) if not (c.args and frame_ctor(c.args[0]))
+        ]
         assert not stray, f"{mod.__name__}: createDataFrame at lines {stray}"
 
 

@@ -221,28 +221,33 @@ def _entity_edges_py(sf_dir: str) -> list[tuple[int, int]]:
     return [(int(s), int(d)) for s, d in rows]
 
 
-def _pr_units_py(edges, init=None, num_iters=None, tol=None, max_iters=400):
+def _pr_units_py(
+    edges, init=None, num_iters=None, tol=None, max_iters=400, verts=None
+):
     """Pure-Python replay of pagerank_units' integer recurrence.
 
     Fixed ``num_iters`` mode mirrors the kernel bit-for-bit; ``tol``
     mode iterates until max per-vertex |delta| <= tol and returns the
     round count — the convergence meter the distributed kernel
     deliberately does not pay for (an extra join+agg per round).
+    ``verts`` replays a PropertyGraph: the vertex set is given, outdeg
+    still counts every edge, and messages from or to non-vertices drop.
     """
-    verts = set()
     outdeg: dict[int, int] = {}
     adj: dict[int, list[int]] = {}
     for s, d in edges:
-        verts.add(s)
-        verts.add(d)
         outdeg[s] = outdeg.get(s, 0) + 1
         adj.setdefault(s, []).append(d)
+    if verts is None:
+        verts = {v for e in edges for v in e}
     rank = {v: (init.get(v, _PR_U) if init is not None else _PR_U) for v in verts}
     base = 15 * _PR_U // 100
     rounds = num_iters if num_iters is not None else max_iters
     for it in range(1, rounds + 1):
         msg: dict[int, int] = {}
         for s, ds in adj.items():
+            if s not in rank:
+                continue
             c = rank[s] // outdeg[s]
             for d in ds:
                 msg[d] = msg.get(d, 0) + c
@@ -255,11 +260,13 @@ def _pr_units_py(edges, init=None, num_iters=None, tol=None, max_iters=400):
 
 
 class TestPagerankIncremental:
-    def test_distributed_kernel_bit_equality(self, spark, sf_dir):
+    @pytest.mark.parametrize("strategy", ["local", "distributed"])
+    def test_distributed_kernel_bit_equality(self, spark, sf_dir, strategy):
         """pagerank_units == the Python integer replay EXACTLY, for both
-        the cold base phase and the warm-start phase — integer contribs
-        and sums are associative/commutative, so partitioning cannot
-        change a single bit."""
+        the cold base phase and the warm-start phase, on either strategy
+        — integer contribs and sums are associative/commutative, so
+        neither partitioning nor the driver-side path can change a
+        single bit."""
         from graphdatabases_spark.graph.algorithms import pagerank_units
 
         edges = _entity_edges_py(sf_dir)
@@ -272,18 +279,80 @@ class TestPagerankIncremental:
             edf.filter(((F.col("src") + F.col("dst")) % _PR_MOD) != 0),
             num_iters=6,
             unit_scale=_PR_U,
+            strategy=strategy,
         )
         got_base = {
             r["id"]: r["rank_units"] for r in got_base_df.collect()
         }
         assert got_base == exp_base
         got_warm_df = pagerank_units(
-            edf, num_iters=3, unit_scale=_PR_U, init_ranks=got_base_df
+            edf,
+            num_iters=3,
+            unit_scale=_PR_U,
+            init_ranks=got_base_df,
+            strategy=strategy,
         )
         got_warm = {
             r["id"]: r["rank_units"] for r in got_warm_df.collect()
         }
         assert got_warm == exp_warm
+
+    def test_property_graph_vertex_semantics(self, spark):
+        """Both strategies keep ``_vertices_from`` semantics on a
+        PropertyGraph: an isolated vertex gets the base units, an edge to
+        a non-vertex still counts in outdeg but its message drops, an
+        ``init_ranks`` id outside the vertex set is ignored, and a
+        vertex without a prior rank starts at ``unit_scale``."""
+        from graphdatabases_spark.graph.algorithms import pagerank_units
+        from graphdatabases_spark.graph.model import (
+            EDGE_SCHEMA,
+            VERTEX_SCHEMA,
+            PropertyGraph,
+            local_frame,
+        )
+
+        verts = [1, 2, 3, 4]  # 4 is isolated
+        edges = [(1, 2), (2, 3), (3, 1), (1, 99), (2, 1)]  # 99: no vertex
+        g = PropertyGraph(
+            vertices=local_frame(
+                spark, [(v, None, None) for v in verts], VERTEX_SCHEMA
+            ),
+            edges=local_frame(
+                spark, [(s, d, None, None) for s, d in edges], EDGE_SCHEMA
+            ),
+        )
+        init = {1: 3 * _PR_U, 2: _PR_U // 7, 42: 5 * _PR_U}  # 42: unknown
+        init_df = spark.createDataFrame(
+            list(init.items()), "id BIGINT, rank_units BIGINT"
+        )
+        exp, _ = _pr_units_py(edges, init=init, num_iters=4, verts=set(verts))
+        got = {}
+        for strategy in ("local", "distributed"):
+            df = pagerank_units(
+                g,
+                num_iters=4,
+                unit_scale=_PR_U,
+                init_ranks=init_df,
+                strategy=strategy,
+            )
+            got[strategy] = {r["id"]: r["rank_units"] for r in df.collect()}
+        assert got["local"] == got["distributed"] == exp
+        assert exp[4] == 15 * _PR_U // 100
+
+    def test_overflow_raises_on_both_strategies(self, spark):
+        """The local path raises on int64 overflow where ANSI Spark
+        does, instead of wrapping."""
+        from pyspark.errors import ArithmeticException
+
+        from graphdatabases_spark.graph.algorithms import pagerank_units
+
+        edf = spark.createDataFrame([(1, 2)], "src BIGINT, dst BIGINT")
+        init_df = spark.createDataFrame([(1, 2**62)], "id BIGINT, rank_units BIGINT")
+        for strategy in ("local", "distributed"):
+            with pytest.raises((ArithmeticError, ArithmeticException)):
+                pagerank_units(
+                    edf, num_iters=1, init_ranks=init_df, strategy=strategy
+                ).collect()
 
     def test_warm_start_fewer_rounds_identical_fixed_point(self, sf_dir):
         """THE incremental claim: on the symmetrized entity graph (cycles,

@@ -125,7 +125,9 @@ def main() -> None:
     from graphdatabases_spark.relational.graph_queries import entity_edges
     from graphdatabases_spark.graph.algorithms import pagerank_units
 
-    ranks = pagerank_units(entity_edges(spark, SF, dedup=True), num_iters=1)
+    ranks = pagerank_units(
+        entity_edges(spark, SF, dedup=True), num_iters=1, strategy="distributed"
+    )
     with open(f"{OUT}/kernel_pagerank_round_{TAG}.txt", "w") as fh:
         fh.write(explain_formatted(ranks))
 
