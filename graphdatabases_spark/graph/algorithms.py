@@ -17,9 +17,9 @@ Scale discipline shared by all loops:
 Every whole-graph kernel (``pagerank``, ``pagerank_units``,
 ``personalized_pagerank*``, ``connected_components``,
 ``label_propagation``, ``kcore``, ``triangle_count``, ``weighted_sssp``)
-takes ``strategy="auto"``: below ``local_threshold`` edges
-(``traversal._pick_strategy``) it collects the edge set once and runs
-the identical recurrence on the driver, since a round of a distributed
+takes ``strategy="auto"``: at most ``LOCAL_EDGE_THRESHOLD`` edges by
+default (``traversal._pick_strategy``) it collects the edge set once and
+runs the identical recurrence on the driver, since a round of a distributed
 loop costs a few Spark jobs whatever the data size. Only the fixed-point
 ``personalized_pagerank_batch_units`` has no local path.
 """
@@ -612,7 +612,6 @@ def pagerank_units(
     unit_scale: int = 10**12,
     init_ranks: DataFrame | None = None,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """GLOBAL fixed-point PageRank with an optional WARM START — the
     whole-graph sibling of ``personalized_pagerank_batch_units`` and
@@ -639,8 +638,9 @@ def pagerank_units(
     reused every round; each round is one join (reusing the edge
     partitioning) plus one dst-keyed aggregation; state is one BIGINT
     per vertex; lineage truncated every ``CHECKPOINT_EVERY`` rounds.
-    Small edge sets (``strategy``/``local_threshold``, the policy of
-    ``pagerank``) run the same recurrence driver-side in int64 numpy
+    Small edge sets (``strategy="auto"``: at most
+    ``LOCAL_EDGE_THRESHOLD`` edges, the policy of ``pagerank``) run the
+    same recurrence driver-side in int64 numpy
     (``_pagerank_units_local``): integer arithmetic makes the two
     strategies bit-identical, and on a toy graph the distributed loop
     pays a broadcast join and a checkpoint job per round for nothing.
@@ -651,7 +651,7 @@ def pagerank_units(
     from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
 
     edges = _edges(graph)
-    if _pick_strategy(edges, strategy, local_threshold) == "local":
+    if _pick_strategy(edges, strategy, LOCAL_EDGE_THRESHOLD) == "local":
         return _pagerank_units_local(
             graph, edges, num_iters, damping_pct, unit_scale, init_ranks
         )

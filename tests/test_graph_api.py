@@ -229,15 +229,6 @@ class TestExactStats:
             assert [tuple(r) for r in df.collect()] == rows
 
 
-def _create_dataframe_calls(node):
-    return [
-        c for c in ast.walk(node)
-        if isinstance(c, ast.Call)
-        and isinstance(c.func, ast.Attribute)
-        and c.func.attr == "createDataFrame"
-    ]
-
-
 def test_driver_frames_come_from_local_frame():
     """api.py and model.py call ``createDataFrame`` only inside
     ``local_frame``: a frame built from a Python list reports
