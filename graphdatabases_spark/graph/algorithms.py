@@ -7,20 +7,25 @@ the same message-passing dataflow — ``aggregateMessages`` ≡
 ``edges ⋈ ranks on src → groupBy(dst).agg(...)`` — and inherits AQE,
 broadcast selection, and whole-stage codegen.
 
-Scale discipline shared by all loops:
-- edge set repartitioned by the join key ONCE, persisted, reused every
-  round (one shuffle amortized over all iterations)
-- ``localCheckpoint`` every few rounds to truncate lineage (iterative
-  plan blowup is the classic failure mode)
-- early exit on convergence via a cheap aggregate
+Scale discipline shared by all loops: each kernel builds its static edge
+relation once (``links``, ``sym`` or ``wedges``), repartitioned by the
+join key unless it is already clustered or the state side broadcasts
+(``traversal.broadcast_side``), and supplies only its superstep. One
+driver, ``_supersteps``, owns the rest: the eager ``localCheckpoint``
+every ``CHECKPOINT_EVERY`` rounds and at the end (iterative plan blowup
+is the classic failure mode); for the fixpoint kernels, one job per round
+that both materialises the state and counts changed rows, the early exit
+on zero, and the ``max_iters`` warning (or raise under ``strict``); and
+the release of every cache in ``finally``, so a returned frame never
+reads a released cache.
 
 Every whole-graph kernel (``pagerank``, ``pagerank_units``,
 ``personalized_pagerank*``, ``connected_components``,
 ``label_propagation``, ``kcore``, ``triangle_count``, ``weighted_sssp``)
-takes ``strategy="auto"``: at most ``LOCAL_EDGE_THRESHOLD`` edges by
-default (``traversal._pick_strategy``) it collects the edge set once and
-runs the identical recurrence on the driver, since a round of a distributed
-loop costs a few Spark jobs whatever the data size. Only the fixed-point
+takes ``strategy="auto"``: at most ``LOCAL_EDGE_THRESHOLD`` edges
+(``traversal._pick_strategy``) it collects the edge set once and runs the
+identical recurrence on the driver, since a round of a distributed loop
+costs a few Spark jobs whatever the data size. Only the fixed-point
 ``personalized_pagerank_batch_units`` has no local path.
 """
 
@@ -28,24 +33,25 @@ from __future__ import annotations
 
 import warnings
 from collections import Counter
+from collections.abc import Callable
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from graphdatabases_spark.graph.model import PropertyGraph
 from graphdatabases_spark.graph.traversal import (
+    CHECKPOINT_EVERY,
     LOCAL_EDGE_THRESHOLD,
     _collect_adjacency,
     _collect_index,
     _local_result_df,
     _numpy_result_df,
     _pick_strategy,
+    broadcast_side,
     hash_partitioned_on,
 )
-
-CHECKPOINT_EVERY = 4
 
 RANK_SCHEMA = StructType(
     [StructField("id", LongType(), False), StructField("rank", DoubleType(), False)]
@@ -67,6 +73,9 @@ CORE_SCHEMA = StructType(
         StructField("id", LongType(), False),
         StructField("core_degree", LongType(), False),
     ]
+)
+SSSP_SCHEMA = StructType(
+    [StructField("id", LongType()), StructField("dist", LongType())]
 )
 
 
@@ -98,26 +107,133 @@ def _vertices_local(
     return sorted(ids)
 
 
-def _pagerank_local(
-    graph, edges: DataFrame, num_iters: int, damping: float
+def _supersteps(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    *,
+    changed: Callable[[DataFrame, DataFrame], DataFrame] | None = None,
+    strict: bool = False,
+    name: str = "",
+    stale: str = "",
+    release: tuple[DataFrame, ...] = (),
 ) -> DataFrame:
-    """Driver-side power iteration — identical recurrence to the
-    distributed loop (r0=1/N, dangling mass decays)."""
+    """Run ``state = step(state, i)`` for rounds ``i = 0 .. rounds-1``
+    and return the last state, detached from every cache released here.
+
+    Every ``CHECKPOINT_EVERY``-th round is an eager ``localCheckpoint``;
+    a fixed-round kernel (no ``changed``) leaves the other rounds lazy.
+    A fixpoint kernel passes ``changed(new, old)``, the rows of ``new``
+    that moved: each other round is persisted, ONE job counts
+    ``changed`` (materialising the round), the previous round's cache is
+    released, and a zero count ends the loop. Rows still moving after
+    ``rounds`` rounds warn with a RuntimeWarning, or raise RuntimeError
+    under ``strict``; the message names ``name`` and ``stale`` (a format
+    string given the count). A last round that is not a checkpoint is
+    checkpointed before return. ``release`` (the static edge relations)
+    and a persisted round are unpersisted in ``finally``, also when a
+    round or the ``strict`` check raises.
+    """
+    cached: DataFrame | None = None
+    detached = True
+    moved = 0
+    try:
+        for i in range(rounds):
+            new = step(state, i)
+            detached = (i + 1) % CHECKPOINT_EVERY == 0
+            if detached:
+                new = new.localCheckpoint(eager=True)
+            elif changed is not None:
+                new = new.persist(StorageLevel.MEMORY_AND_DISK)
+            old, state = state, new
+            if changed is None:
+                continue
+            moved = changed(new, old).count()
+            if cached is not None:
+                cached.unpersist()
+            cached = None if detached else new
+            if moved == 0:
+                break
+        if moved:
+            msg = (
+                f"{name}: max_iters={rounds} exhausted before the fixpoint, "
+                f"{stale.format(moved)} — raise max_iters"
+            )
+            if strict:
+                raise RuntimeError(msg)
+            warnings.warn(msg, RuntimeWarning, stacklevel=3)
+        if not detached:
+            state = state.localCheckpoint(eager=True)
+        return state
+    finally:
+        if cached is not None:
+            cached.unpersist()
+        for df in release:
+            df.unpersist()
+
+
+def _out_links(edges: DataFrame, by_src: bool = True) -> DataFrame:
+    """The static (src, dst, outdeg) relation of the PageRank-family
+    kernels, persisted. With ``by_src`` it is repartitioned by src unless
+    the plan already reports hashpartitioning(src) — a src-bucketed edge
+    table, or the SMJ path of the outdeg join having exchanged on src."""
+    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
+        F.count(F.lit(1)).alias("outdeg")
+    )
+    links = edges.join(out_deg, edges.src == out_deg.id).select(
+        "src", "dst", "outdeg"
+    )
+    if by_src and not hash_partitioned_on(links, "src"):
+        links = links.repartition("src")
+    return links.persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _sym_edges(edges: DataFrame, n_vertices: int) -> DataFrame:
+    """Both directions of every edge (duplicates kept), persisted. Above
+    the broadcast cap the state side shuffles each round, so the copy is
+    clustered by src once; below it the state broadcasts and the edges
+    stream as scanned."""
+    from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
+
+    sym = edges.union(
+        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    if n_vertices > FRONTIER_BROADCAST_MAX:
+        sym = sym.repartition("src")
+    return sym.persist(StorageLevel.MEMORY_AND_DISK)
+
+
+def _power_iteration_local(
+    graph,
+    edges: DataFrame,
+    num_iters: int,
+    damping: float,
+    sources: list[int] | None = None,
+) -> DataFrame:
+    """Driver-side ``_power_iteration``, the identical recurrence: the
+    restart mass is spread over ``sources``, or over every vertex (plain
+    PageRank, r0 = 1/N) when ``sources`` is None; dangling mass decays."""
     spark = _spark_of(edges)
     adj = _collect_adjacency(edges)
     vertices = _vertices_local(graph, adj)
-    n = len(vertices)
-    if n == 0:
+    if not vertices:
         return _local_result_df(spark, [], RANK_SCHEMA)
-    base = (1.0 - damping) / n
-    rank = {v: 1.0 / n for v in vertices}
+    if sources is None:
+        restart, k = set(vertices), len(vertices)
+    else:
+        restart, k = set(sources), len(sources)
+    base = (1.0 - damping) / k
+    rank = {v: (1.0 / k if v in restart else 0.0) for v in vertices}
     for _ in range(num_iters):
         msg: dict[int, float] = {}
         for u, vs in adj.items():
             share = rank[u] / len(vs)
             for v in vs:
                 msg[v] = msg.get(v, 0.0) + share
-        rank = {v: base + damping * msg.get(v, 0.0) for v in vertices}
+        rank = {
+            v: (base if v in restart else 0.0) + damping * msg.get(v, 0.0)
+            for v in vertices
+        }
     return _local_result_df(
         spark, [(v, rank[v]) for v in sorted(rank)], RANK_SCHEMA
     )
@@ -128,7 +244,6 @@ def pagerank(
     num_iters: int = 10,
     damping: float = 0.85,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """PageRank with fixed iteration count.
 
@@ -139,88 +254,56 @@ def pagerank(
 
     Returns DataFrame(id BIGINT, rank DOUBLE). One shuffle per iteration
     (the groupBy(dst)); the edges⋈ranks join reuses the edge partitioning.
-    Small edge sets (≤ ``local_threshold``) run the identical recurrence
-    driver-side — an N-round distributed loop on a toy graph pays N job
-    latencies for nothing (same adaptive policy as the traversal kernel).
+    Small edge sets (≤ ``LOCAL_EDGE_THRESHOLD``) run the identical
+    recurrence driver-side — an N-round distributed loop on a toy graph
+    pays N job latencies for nothing (same adaptive policy as the
+    traversal kernel).
     """
     edges = _edges(graph)
-    if _pick_strategy(edges, strategy, local_threshold) == "local":
-        return _pagerank_local(graph, edges, num_iters, damping)
+    if _pick_strategy(edges, strategy, LOCAL_EDGE_THRESHOLD) == "local":
+        return _power_iteration_local(graph, edges, num_iters, damping)
     vertices = _vertices_from(graph, edges)
     n = vertices.count()
     if n == 0:
         return vertices.withColumn("rank", F.lit(0.0))
-
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("outdeg")
+    return _power_iteration(
+        edges, vertices, F.lit(1.0 / n), F.lit((1.0 - damping) / n), num_iters, damping
     )
-    # (src, dst, outdeg) — static over iterations: partition by src,
-    # persist. The repartition is skipped when the plan already reports
-    # hashpartitioning(src) — a src-bucketed edge table, or the SMJ
-    # path of the outdeg join having exchanged on src already.
-    links = edges.join(out_deg, edges.src == out_deg.id).select(
-        "src", "dst", "outdeg"
-    )
-    if not hash_partitioned_on(links, "src"):
-        links = links.repartition("src")
-    links = links.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        ranks = vertices.withColumn("rank", F.lit(1.0 / n))
-        base = (1.0 - damping) / n
-        for i in range(num_iters):
-            contribs = (
-                links.join(ranks, links.src == ranks.id)
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("rank") / F.col("outdeg")).alias("contrib"),
-                )
-                .groupBy("id")
-                .agg(F.sum("contrib").alias("msg"))
-            )
-            ranks = (
-                vertices.join(contribs, "id", "left")
-                .select(
-                    "id",
-                    (F.lit(base) + F.lit(damping) * F.coalesce("msg", F.lit(0.0))).alias(
-                        "rank"
-                    ),
-                )
-            )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
-                ranks = ranks.localCheckpoint(eager=True)
-        if num_iters % CHECKPOINT_EVERY != 0:
-            # Truncate the tail lineage: the caller's first action would
-            # otherwise recompute the last rounds from `links` AFTER the
-            # finally below unpersists it.
-            ranks = ranks.localCheckpoint(eager=True)
-        return ranks
-    finally:
-        links.unpersist()
 
 
-def _ppr_local(
-    graph, edges: DataFrame, sources: list[int], num_iters: int, damping: float
+def _power_iteration(
+    edges: DataFrame,
+    vertices: DataFrame,
+    r0: Column,
+    base: Column,
+    num_iters: int,
+    damping: float,
 ) -> DataFrame:
-    """Driver-side PPR power iteration — identical recurrence to the
-    distributed loop."""
-    spark = _spark_of(edges)
-    adj = _collect_adjacency(edges)
-    vertices = _vertices_local(graph, adj)
-    src_set = set(sources)
-    base_w = (1.0 - damping) / len(src_set)
-    rank = {v: (1.0 / len(src_set) if v in src_set else 0.0) for v in vertices}
-    for _ in range(num_iters):
-        msg: dict[int, float] = {}
-        for u, vs in adj.items():
-            share = rank[u] / len(vs)
-            for v in vs:
-                msg[v] = msg.get(v, 0.0) + share
-        rank = {
-            v: (base_w if v in src_set else 0.0) + damping * msg.get(v, 0.0)
-            for v in vertices
-        }
-    return _local_result_df(
-        spark, [(v, rank[v]) for v in sorted(rank)], RANK_SCHEMA
+    """The dense round shared by ``pagerank`` and
+    ``personalized_pagerank``, which differ only in their restart
+    weights: rank starts at ``r0`` and each round rebuilds the FULL
+    vertex set as ``base + d·Σ_{u→v} rank(u)/outdeg(u)``. Neither join
+    carries a broadcast hint: the double message sums keep the
+    accumulation order, and so the bits, of the shuffle plan."""
+    links = _out_links(edges)
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
+        contribs = (
+            links.join(ranks, links.src == ranks.id)
+            .select(
+                F.col("dst").alias("id"),
+                (F.col("rank") / F.col("outdeg")).alias("contrib"),
+            )
+            .groupBy("id")
+            .agg(F.sum("contrib").alias("msg"))
+        )
+        return vertices.join(contribs, "id", "left").select(
+            "id",
+            (base + F.lit(damping) * F.coalesce("msg", F.lit(0.0))).alias("rank"),
+        )
+
+    return _supersteps(
+        vertices.withColumn("rank", r0), step, num_iters, release=(links,)
     )
 
 
@@ -230,7 +313,6 @@ def personalized_pagerank(
     num_iters: int = 10,
     damping: float = 0.85,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Personalized PageRank: random walk with restart into ``sources``
     — the "related entities" operator (recommendations, seed-set
@@ -243,10 +325,10 @@ def personalized_pagerank(
     in-edges — the loop rebuilds each round from the FULL vertex set,
     not just message receivers.
 
-    Same scale shape as ``pagerank``: the (src, dst, outdeg) relation
-    shuffles once (skipped when the edge scan is already
-    hash-partitioned on src — the bucketed 100-TB layout) and each
-    round is one join + one keyed aggregation.
+    Same rounds as ``pagerank`` (``_power_iteration``): the (src, dst,
+    outdeg) relation shuffles once (skipped when the edge scan is already
+    hash-partitioned on src — the bucketed 100-TB layout) and each round
+    is one join + one keyed aggregation.
 
     Returns DataFrame(id BIGINT, rank DOUBLE).
     """
@@ -254,51 +336,17 @@ def personalized_pagerank(
         raise ValueError("personalized_pagerank needs at least one source")
     src_set = sorted(set(int(s) for s in sources))
     edges = _edges(graph)
-    if _pick_strategy(edges, strategy, local_threshold) == "local":
-        return _ppr_local(graph, edges, src_set, num_iters, damping)
-    spark = _spark_of(edges)
-    vertices = _vertices_from(graph, edges)
-
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("outdeg")
+    if _pick_strategy(edges, strategy, LOCAL_EDGE_THRESHOLD) == "local":
+        return _power_iteration_local(graph, edges, num_iters, damping, src_set)
+    is_src = F.col("id").isin(src_set)
+    return _power_iteration(
+        edges,
+        _vertices_from(graph, edges),
+        F.when(is_src, F.lit(1.0 / len(src_set))).otherwise(0.0),
+        F.when(is_src, F.lit((1.0 - damping) / len(src_set))).otherwise(0.0),
+        num_iters,
+        damping,
     )
-    links = edges.join(out_deg, edges.src == out_deg.id).select(
-        "src", "dst", "outdeg"
-    )
-    if not hash_partitioned_on(links, "src"):
-        links = links.repartition("src")
-    links = links.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        is_src = F.col("id").isin(src_set)
-        r0 = F.when(is_src, F.lit(1.0 / len(src_set))).otherwise(0.0)
-        base = F.when(
-            is_src, F.lit((1.0 - damping) / len(src_set))
-        ).otherwise(0.0)
-        ranks = vertices.withColumn("rank", r0)
-        for i in range(num_iters):
-            contribs = (
-                links.join(ranks, links.src == ranks.id)
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("rank") / F.col("outdeg")).alias("contrib"),
-                )
-                .groupBy("id")
-                .agg(F.sum("contrib").alias("msg"))
-            )
-            ranks = vertices.join(contribs, "id", "left").select(
-                "id",
-                (
-                    base
-                    + F.lit(damping) * F.coalesce("msg", F.lit(0.0))
-                ).alias("rank"),
-            )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
-                ranks = ranks.localCheckpoint(eager=True)
-        if num_iters % CHECKPOINT_EVERY != 0:
-            ranks = ranks.localCheckpoint(eager=True)
-        return ranks
-    finally:
-        links.unpersist()
 
 
 SEED_RANK_SCHEMA = StructType(
@@ -341,7 +389,6 @@ def personalized_pagerank_batch(
     num_iters: int = 10,
     damping: float = 0.85,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Per-seed personalized PageRank for a seed BATCH — the "related
     items for every seed in one pass" shape (batch recommendations,
@@ -367,60 +414,56 @@ def personalized_pagerank_batch(
         raise ValueError("personalized_pagerank_batch needs at least one seed")
     seed_list = sorted(set(int(s) for s in seeds))
     edges = _edges(graph)
-    if _pick_strategy(edges, strategy, local_threshold) == "local":
+    if _pick_strategy(edges, strategy, LOCAL_EDGE_THRESHOLD) == "local":
         return _ppr_batch_local(graph, edges, seed_list, num_iters, damping)
-    spark = _spark_of(edges)
-
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    )
-    links = edges.join(out_deg, edges.src == out_deg.id).select(
-        "src", "dst", "outdeg"
-    )
-    if not hash_partitioned_on(links, "src"):
-        links = links.repartition("src")
-    links = links.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        seed_keys = spark.createDataFrame(
-            [(s, s) for s in seed_list], "seed BIGINT, id BIGINT"
-        )
-        ranks = spark.createDataFrame(
+    base = F.when(
+        F.col("id") == F.col("seed"), F.lit(1.0 - damping)
+    ).otherwise(F.lit(0.0))
+    return _seed_walks(
+        edges,
+        seed_list,
+        _spark_of(edges).createDataFrame(
             [(s, s, 1.0) for s in seed_list], SEED_RANK_SCHEMA
+        ),
+        F.col("rank") / F.col("outdeg"),
+        (base + F.lit(damping) * F.coalesce("msg", F.lit(0.0))).alias("rank"),
+        num_iters,
+    )
+
+
+def _seed_walks(
+    edges: DataFrame,
+    seed_list: list[int],
+    ranks: DataFrame,
+    contrib: Column,
+    value: Column,
+    num_iters: int,
+) -> DataFrame:
+    """The sparse per-seed round shared by ``personalized_pagerank_batch``
+    and its fixed-point twin: ``contrib`` per (seed, edge) is summed per
+    (seed, dst) into ``msg``, and the next state is ``value`` over the
+    message receivers ∪ the |S| teleport keys (full outer join with the
+    tiny key frame) — vertices with neither stay implicit zeros instead
+    of materializing |V|×|S| state. ``value`` mirrors the dense
+    recurrence term for term (base + d·Σ, the Σ aggregated FIRST), so
+    the unrolled-CTE oracles replay it bit for bit."""
+    seed_keys = _spark_of(edges).createDataFrame(
+        [(s, s) for s in seed_list], "seed BIGINT, id BIGINT"
+    )
+    links = _out_links(edges)
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
+        msgs = (
+            links.join(ranks, links.src == ranks.id)
+            .select("seed", F.col("dst").alias("id"), contrib.alias("contrib"))
+            .groupBy("seed", "id")
+            .agg(F.sum("contrib").alias("msg"))
         )
-        base = F.when(
-            F.col("id") == F.col("seed"), F.lit(1.0 - damping)
-        ).otherwise(F.lit(0.0))
-        for i in range(num_iters):
-            msgs = (
-                links.join(ranks, links.src == ranks.id)
-                .select(
-                    "seed",
-                    F.col("dst").alias("id"),
-                    (F.col("rank") / F.col("outdeg")).alias("contrib"),
-                )
-                .groupBy("seed", "id")
-                .agg(F.sum("contrib").alias("msg"))
-            )
-            # Sparse rebuild: message receivers ∪ the |S| teleport keys
-            # (full outer on the tiny key frame) — vertices with
-            # neither stay implicit zeros instead of materializing
-            # |V|×|S| state. The value expression mirrors the dense
-            # recurrence term-for-term (base + d·Σ, the Σ aggregated
-            # FIRST) so the unrolled-CTE oracle is bit-identical.
-            ranks = msgs.join(seed_keys, ["seed", "id"], "full_outer").select(
-                "seed",
-                "id",
-                (
-                    base + F.lit(damping) * F.coalesce("msg", F.lit(0.0))
-                ).alias("rank"),
-            )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
-                ranks = ranks.localCheckpoint(eager=True)
-        if num_iters % CHECKPOINT_EVERY != 0:
-            ranks = ranks.localCheckpoint(eager=True)
-        return ranks
-    finally:
-        links.unpersist()
+        return msgs.join(seed_keys, ["seed", "id"], "full_outer").select(
+            "seed", "id", value
+        )
+
+    return _supersteps(ranks, step, num_iters, release=(links,))
 
 
 def personalized_pagerank_batch_units(
@@ -445,8 +488,9 @@ def personalized_pagerank_batch_units(
     per division, i.e. < 1e-12 of the walk) buys ENGINE-EXACT
     reproducibility — the same discipline as the catalog's DECIMAL
     money sums and integer log2 surprise scores. Same sparse state and
-    scale shape as the double kernel; no local fast path is needed
-    because integer ops remove the only cross-strategy divergence.
+    scale shape as the double kernel (``_seed_walks``); no local fast
+    path is needed because integer ops remove the only cross-strategy
+    divergence.
 
     Returns DataFrame(seed BIGINT, id BIGINT, rank_units BIGINT) with
     the walk's touched vertices (rank_units may be 0 where truncation
@@ -456,57 +500,22 @@ def personalized_pagerank_batch_units(
         raise ValueError("personalized_pagerank_batch_units needs at least one seed")
     seed_list = sorted(set(int(s) for s in seeds))
     edges = _edges(graph)
-    spark = _spark_of(edges)
-
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    )
-    links = edges.join(out_deg, edges.src == out_deg.id).select(
-        "src", "dst", "outdeg"
-    )
-    if not hash_partitioned_on(links, "src"):
-        links = links.repartition("src")
-    links = links.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        base_units = ((100 - damping_pct) * unit_scale) // 100
-        seed_keys = spark.createDataFrame(
-            [(s, s) for s in seed_list], "seed BIGINT, id BIGINT"
-        )
-        ranks = spark.createDataFrame(
+    base = F.when(
+        F.col("id") == F.col("seed"), F.lit(((100 - damping_pct) * unit_scale) // 100)
+    ).otherwise(F.lit(0))
+    return _seed_walks(
+        edges,
+        seed_list,
+        _spark_of(edges).createDataFrame(
             [(s, s, unit_scale) for s in seed_list],
             "seed BIGINT, id BIGINT, rank_units BIGINT",
-        )
-        base = F.when(
-            F.col("id") == F.col("seed"), F.lit(base_units)
-        ).otherwise(F.lit(0))
-        for i in range(num_iters):
-            msgs = (
-                links.join(ranks, links.src == ranks.id)
-                .select(
-                    "seed",
-                    F.col("dst").alias("id"),
-                    F.expr("rank_units div outdeg").alias("contrib"),
-                )
-                .groupBy("seed", "id")
-                .agg(F.sum("contrib").alias("msg"))
-            )
-            ranks = msgs.join(seed_keys, ["seed", "id"], "full_outer").select(
-                "seed",
-                "id",
-                (
-                    base
-                    + F.expr(
-                        f"({damping_pct} * coalesce(msg, 0)) div 100"
-                    )
-                ).cast("long").alias("rank_units"),
-            )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
-                ranks = ranks.localCheckpoint(eager=True)
-        if num_iters % CHECKPOINT_EVERY != 0:
-            ranks = ranks.localCheckpoint(eager=True)
-        return ranks
-    finally:
-        links.unpersist()
+        ),
+        F.expr("rank_units div outdeg"),
+        (base + F.expr(f"({damping_pct} * coalesce(msg, 0)) div 100"))
+        .cast("long")
+        .alias("rank_units"),
+        num_iters,
+    )
 
 
 def _div_trunc(a, b):
@@ -637,7 +646,7 @@ def pagerank_units(
     Scale shape: the (src, dst, outdeg) relation shuffles once and is
     reused every round; each round is one join (reusing the edge
     partitioning) plus one dst-keyed aggregation; state is one BIGINT
-    per vertex; lineage truncated every ``CHECKPOINT_EVERY`` rounds.
+    per vertex.
     Small edge sets (``strategy="auto"``: at most
     ``LOCAL_EDGE_THRESHOLD`` edges, the policy of ``pagerank``) run the
     same recurrence driver-side in int64 numpy
@@ -671,64 +680,46 @@ def pagerank_units(
     # exchange, and only the dst-keyed partial-agg output shuffles.
     # Above the cap the pre-r14 shuffle-join shape is unchanged.
     n_vertices = vertices.count()
-    small = n_vertices <= FRONTIER_BROADCAST_MAX
+    if init_ranks is None:
+        ranks = vertices.select(
+            "id", F.lit(unit_scale).cast("long").alias("rank_units")
+        )
+    else:
+        prev = init_ranks.select(
+            F.col("id").cast("long").alias("id"),
+            F.col("rank_units").cast("long").alias("prev_units"),
+        )
+        ranks = vertices.join(prev, "id", "left").select(
+            "id",
+            F.coalesce("prev_units", F.lit(unit_scale))
+            .cast("long")
+            .alias("rank_units"),
+        )
+    ranks = ranks.localCheckpoint(eager=True)
+    links = _out_links(edges, by_src=n_vertices > FRONTIER_BROADCAST_MAX)
+    base_units = ((100 - damping_pct) * unit_scale) // 100
 
-    def _side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
+    def step(ranks: DataFrame, _: int) -> DataFrame:
+        msgs = (
+            links.join(broadcast_side(ranks, n_vertices), links.src == ranks.id)
+            .select(
+                F.col("dst").alias("id"),
+                F.expr("rank_units div outdeg").alias("contrib"),
+            )
+            .groupBy("id")
+            .agg(F.sum("contrib").alias("msg"))
+        )
+        return vertices.join(broadcast_side(msgs, n_vertices), "id", "left").select(
+            "id",
+            (
+                F.lit(base_units)
+                + F.expr(f"({damping_pct} * coalesce(msg, 0)) div 100")
+            )
+            .cast("long")
+            .alias("rank_units"),
+        )
 
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("outdeg")
-    )
-    links = edges.join(out_deg, edges.src == out_deg.id).select(
-        "src", "dst", "outdeg"
-    )
-    if not small and not hash_partitioned_on(links, "src"):
-        links = links.repartition("src")
-    links = links.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        base_units = ((100 - damping_pct) * unit_scale) // 100
-        if init_ranks is None:
-            ranks = vertices.select(
-                "id", F.lit(unit_scale).cast("long").alias("rank_units")
-            )
-        else:
-            prev = init_ranks.select(
-                F.col("id").cast("long").alias("id"),
-                F.col("rank_units").cast("long").alias("prev_units"),
-            )
-            ranks = vertices.join(prev, "id", "left").select(
-                "id",
-                F.coalesce("prev_units", F.lit(unit_scale))
-                .cast("long")
-                .alias("rank_units"),
-            )
-        ranks = ranks.localCheckpoint(eager=True)
-        for i in range(num_iters):
-            msgs = (
-                links.join(_side(ranks), links.src == ranks.id)
-                .select(
-                    F.col("dst").alias("id"),
-                    F.expr("rank_units div outdeg").alias("contrib"),
-                )
-                .groupBy("id")
-                .agg(F.sum("contrib").alias("msg"))
-            )
-            ranks = vertices.join(_side(msgs), "id", "left").select(
-                "id",
-                (
-                    F.lit(base_units)
-                    + F.expr(f"({damping_pct} * coalesce(msg, 0)) div 100")
-                )
-                .cast("long")
-                .alias("rank_units"),
-            )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
-                ranks = ranks.localCheckpoint(eager=True)
-        if num_iters % CHECKPOINT_EVERY != 0:
-            ranks = ranks.localCheckpoint(eager=True)
-        return ranks
-    finally:
-        links.unpersist()
+    return _supersteps(ranks, step, num_iters, release=(links,))
 
 
 def _connected_components_local(graph, edges: DataFrame) -> DataFrame:
@@ -760,7 +751,6 @@ def connected_components(
     graph: PropertyGraph | DataFrame,
     max_iters: int = 50,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
     strict: bool = False,
 ) -> DataFrame:
     """Undirected connected components by iterative min-id propagation.
@@ -768,6 +758,8 @@ def connected_components(
     comp(v) starts at v; each round takes the min of comp over v and its
     neighbors; converges in O(component diameter) rounds (the large-star/
     small-star optimization halves that but needs the same kernel).
+    A caller-supplied ``max_iters`` can cut a long-path component short,
+    leaving split component ids: that warns, or raises under ``strict``.
     Small edge sets run union-find on the driver — the same converged
     answer without O(diameter) job rounds.
     Returns DataFrame(id BIGINT, comp BIGINT).
@@ -776,89 +768,47 @@ def connected_components(
         # Zero propagation rounds would silently return every vertex as
         # its own component (same hazard class as the kcore guard).
         raise ValueError(f"connected_components needs max_iters >= 1, got {max_iters}")
-    from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
-
     e = _edges(graph)
-    if _pick_strategy(e, strategy, local_threshold) == "local":
+    if _pick_strategy(e, strategy, LOCAL_EDGE_THRESHOLD) == "local":
         return _connected_components_local(graph, e)
-    sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     vertices = _vertices_from(graph, e)
-    # Size-switched per-round broadcasts (round 14, the pagerank_units
-    # pattern): below the frontier cap the per-vertex label state
-    # broadcasts and the cached sym streams with no setup repartition
-    # and no per-round exchange of the label side; only the keyed min
-    # aggregate shuffles.  Above the cap the shuffle shape is unchanged.
+    # Below the frontier cap the per-vertex label state broadcasts and
+    # the cached sym streams with no setup repartition and no per-round
+    # exchange of the label side; only the keyed min aggregate shuffles.
     n_vertices = vertices.count()
-    small = n_vertices <= FRONTIER_BROADCAST_MAX
+    sym = _sym_edges(e, n_vertices)
 
-    def _side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
+    def step(comp: DataFrame, _: int) -> DataFrame:
+        nbr_min = (
+            sym.join(broadcast_side(comp, n_vertices), sym.src == comp.id)
+            .select(F.col("dst").alias("id"), F.col("comp"))
+            .groupBy("id")
+            .agg(F.min("comp").alias("nbr_comp"))
+        )
+        return comp.join(broadcast_side(nbr_min, n_vertices), "id", "left").select(
+            "id",
+            F.least(F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))).alias(
+                "comp"
+            ),
+        )
 
-    if not small:
-        sym = sym.repartition("src")
-    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
-    prev_cached: DataFrame | None = None
-    try:
-        comp = vertices.select("id", F.col("id").alias("comp"))
-        for i in range(max_iters):
-            nbr_min = (
-                sym.join(_side(comp), sym.src == comp.id)
-                .select(F.col("dst").alias("id"), F.col("comp"))
-                .groupBy("id")
-                .agg(F.min("comp").alias("nbr_comp"))
-            )
-            new_comp = (
-                comp.join(_side(nbr_min), "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("comp"), F.coalesce("nbr_comp", F.col("comp"))
-                    ).alias("comp"),
-                )
-            )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
-                new_comp = new_comp.localCheckpoint(eager=True)
-            else:
-                new_comp = new_comp.persist(StorageLevel.MEMORY_AND_DISK)
-            # Full-pass convergence check (no limit): one job that both
-            # materializes new_comp's cache and counts changed labels, so
-            # the previous round's cache can be released immediately —
-            # cached blocks no longer accumulate across rounds.
-            changed = (
-                new_comp.alias("n")
-                .join(_side(comp.alias("o")), "id")
-                .filter(F.col("n.comp") != F.col("o.comp"))
-                .count()
-            )
-            if prev_cached is not None:
-                prev_cached.unpersist()
-            prev_cached = new_comp if (i + 1) % CHECKPOINT_EVERY != 0 else None
-            comp = new_comp
-            if changed == 0:
-                break
-        else:
-            # Min-id propagation converges in O(component diameter)
-            # rounds; a caller-supplied max_iters can cut a long-path
-            # component short, leaving split component ids. Same
-            # surfacing contract as kcore: warn, or raise under strict.
-            if changed > 0:
-                msg = (
-                    f"connected_components: max_iters={max_iters} "
-                    f"exhausted before the fixpoint ({changed} labels "
-                    "still changing); components may be split — raise "
-                    "max_iters"
-                )
-                if strict:
-                    raise RuntimeError(msg)
-                warnings.warn(msg, RuntimeWarning, stacklevel=2)
-        if prev_cached is not None:
-            # Detach the result from the cache we are about to release.
-            comp = comp.localCheckpoint(eager=True)
-        return comp
-    finally:
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        sym.unpersist()
+    def changed(new: DataFrame, old: DataFrame) -> DataFrame:
+        return (
+            new.alias("n")
+            .join(broadcast_side(old.alias("o"), n_vertices), "id")
+            .filter(F.col("n.comp") != F.col("o.comp"))
+        )
+
+    return _supersteps(
+        vertices.select("id", F.col("id").alias("comp")),
+        step,
+        max_iters,
+        changed=changed,
+        strict=strict,
+        name="connected_components",
+        stale="{} labels still changing, so components may be split",
+        release=(sym,),
+    )
 
 
 def _triangle_count_local(edges: DataFrame) -> int:
@@ -880,7 +830,6 @@ def _triangle_count_local(edges: DataFrame) -> int:
 def triangle_count(
     graph: PropertyGraph | DataFrame,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> int:
     """Global triangle count on the undirected simple graph.
 
@@ -890,7 +839,7 @@ def triangle_count(
     splitting (and classically by degree-ordering, which a<b<c gives).
     """
     e = _edges(graph)
-    if _pick_strategy(e, strategy, local_threshold) == "local":
+    if _pick_strategy(e, strategy, LOCAL_EDGE_THRESHOLD) == "local":
         return _triangle_count_local(e)
     canon = (
         e.select(
@@ -947,7 +896,6 @@ def label_propagation(
     graph: PropertyGraph | DataFrame,
     num_iters: int = 5,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Synchronous label propagation for community detection.
 
@@ -955,73 +903,53 @@ def label_propagation(
     among in+out neighbors (ties → smallest label — deterministic).
     Returns DataFrame(id BIGINT, label BIGINT).
     """
-    from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
-
     e = _edges(graph)
-    if _pick_strategy(e, strategy, local_threshold) == "local":
+    if _pick_strategy(e, strategy, LOCAL_EDGE_THRESHOLD) == "local":
         return _label_propagation_local(graph, e, num_iters)
-    sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     # Materialize the vertex set once: the per-round label rebuild
     # left-joins `vertices`, and without this the endpoint-distinct
     # (an O(edges) shuffle) re-executes every round.
     vertices = _vertices_from(graph, e).localCheckpoint(eager=True)
-    # Size-switched per-round broadcasts (round 14, the pagerank_units
-    # pattern): below the frontier cap the per-vertex label state
-    # broadcasts and both per-round joins are broadcast-hash — sym
-    # streams with no setup repartition and no per-round exchange of
-    # the label side; only the keyed count aggregate shuffles.  Above
-    # the cap the pre-r14 shuffle-join shape (src-clustered sym copy)
-    # is unchanged.
+    # Below the frontier cap the per-vertex label state broadcasts and
+    # both per-round joins are broadcast-hash — sym streams with no
+    # setup repartition and no per-round exchange of the label side;
+    # only the keyed count aggregate shuffles.
     n_vertices = vertices.count()
-    small = n_vertices <= FRONTIER_BROADCAST_MAX
+    sym = _sym_edges(e, n_vertices)
 
-    def _side(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small else df
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        counts = (
+            sym.join(broadcast_side(labels, n_vertices), sym.src == labels.id)
+            .select(F.col("dst").alias("id"), "label")
+            .groupBy("id", "label")
+            .agg(F.count(F.lit(1)).alias("cnt"))
+        )
+        # Deterministic mode: max count, then min label.
+        best = counts.groupBy("id").agg(
+            F.min(
+                F.struct((-F.col("cnt")).alias("neg"), F.col("label").alias("label"))
+            ).alias("top")
+        ).select("id", F.col("top.label").alias("new_label"))
+        # Rebuild WITHOUT re-joining the previous labels: a vertex
+        # missing from `best` has no neighbor (isolated), and an
+        # isolated vertex's label never moves off its initial id —
+        # so coalesce(new_label, id) is exact. This keeps each
+        # round's lineage a SINGLE-reference chain; the old
+        # two-reference rebuild (best ⋈ labels_old both derived
+        # from labels_prev) doubled the un-checkpointed plan per
+        # round — measured 131→272→551 MB shuffle for 1→2→3
+        # rounds on the 3M-edge sf1 co-purchase graph before the
+        # round-9 fix, ~linear after.
+        return vertices.join(broadcast_side(best, n_vertices), "id", "left").select(
+            "id", F.coalesce("new_label", F.col("id")).alias("label")
+        )
 
-    if not small:
-        sym = sym.repartition("src")
-    sym = sym.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        labels = vertices.select("id", F.col("id").alias("label"))
-        for i in range(num_iters):
-            counts = (
-                sym.join(_side(labels), sym.src == labels.id)
-                .select(F.col("dst").alias("id"), "label")
-                .groupBy("id", "label")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-            )
-            # Deterministic mode: max count, then min label.
-            best = counts.groupBy("id").agg(
-                F.min(
-                    F.struct(
-                        (-F.col("cnt")).alias("neg"), F.col("label").alias("label")
-                    )
-                ).alias("top")
-            ).select("id", F.col("top.label").alias("new_label"))
-            # Rebuild WITHOUT re-joining the previous labels: a vertex
-            # missing from `best` has no neighbor (isolated), and an
-            # isolated vertex's label never moves off its initial id —
-            # so coalesce(new_label, id) is exact. This keeps each
-            # round's lineage a SINGLE-reference chain; the old
-            # two-reference rebuild (best ⋈ labels_old both derived
-            # from labels_prev) doubled the un-checkpointed plan per
-            # round — measured 131→272→551 MB shuffle for 1→2→3
-            # rounds on the 3M-edge sf1 co-purchase graph before the
-            # round-9 fix, ~linear after.
-            labels = vertices.join(_side(best), "id", "left").select(
-                "id",
-                F.coalesce("new_label", F.col("id")).alias("label"),
-            )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
-                labels = labels.localCheckpoint(eager=True)
-        if num_iters % CHECKPOINT_EVERY != 0:
-            # Truncate tail lineage: the caller's first action would
-            # otherwise recompute every round from `sym` AFTER the
-            # finally below unpersists it (same fix as pagerank).
-            labels = labels.localCheckpoint(eager=True)
-        return labels
-    finally:
-        sym.unpersist()
+    return _supersteps(
+        vertices.select("id", F.col("id").alias("label")),
+        step,
+        num_iters,
+        release=(sym,),
+    )
 
 
 def _kcore_local(graph, edges: DataFrame, k: int) -> DataFrame:
@@ -1060,7 +988,6 @@ def kcore(
     k: int = 2,
     max_iters: int = 50,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
     strict: bool = False,
 ) -> DataFrame:
     """Nodes of the k-core (maximal subgraph with min degree ≥ k) and
@@ -1071,15 +998,16 @@ def kcore(
     O(peel depth) rounds (typically ≪ |V|). Each round is one shuffle
     keyed on node id; the edge set is filtered by two semi-joins against
     the shrinking survivor set, so work decreases monotonically — the
-    100-TB shape. Small graphs peel on the driver (same fixpoint,
-    no per-round job overhead).
+    100-TB shape. Peel depth is bounded by |V|, but a caller-supplied
+    ``max_iters`` can cut a deep peel (long path appendages) short: that
+    warns, or raises under ``strict``. Small graphs peel on the driver
+    (same fixpoint, no per-round job overhead).
     """
     if max_iters < 1:
-        # The for/else warning below reads the loop's `dropped`; a
-        # zero-round "peel" would also silently return unpeeled degrees.
+        # A zero-round "peel" would silently return unpeeled degrees.
         raise ValueError(f"kcore needs max_iters >= 1, got {max_iters}")
     e = _edges(graph)
-    if _pick_strategy(e, strategy, local_threshold) == "local":
+    if _pick_strategy(e, strategy, LOCAL_EDGE_THRESHOLD) == "local":
         return _kcore_local(graph, e, k)
     und = (
         e.filter(F.col("src") != F.col("dst"))
@@ -1092,58 +1020,32 @@ def kcore(
         und.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     sym = sym.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-    prev_cached: DataFrame | None = None
-    try:
-        cur = sym
-        deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-        for i in range(max_iters):
-            survivors = deg.filter(F.col("deg") >= k).select("src")
-            cur = cur.join(survivors, "src", "semi").join(
-                survivors.select(F.col("src").alias("dst")), "dst", "semi"
-            )
-            new_deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-            if (i + 1) % CHECKPOINT_EVERY == 0:
-                new_deg = new_deg.localCheckpoint(eager=True)
-            else:
-                new_deg = new_deg.persist(StorageLevel.MEMORY_AND_DISK)
-            # One job materializes new_deg and checks the fixpoint (any
-            # surviving node still under k?), then the previous round's
-            # cache is released — same cache discipline as
-            # connected_components above.
-            dropped = new_deg.filter(F.col("deg") < k).count()
-            if prev_cached is not None:
-                prev_cached.unpersist()
-            prev_cached = new_deg if (i + 1) % CHECKPOINT_EVERY != 0 else None
-            deg = new_deg
-            # Re-anchor the edge filter on the materialized degree frame
-            # rather than the growing semi-join lineage.
-            cur = sym.join(deg.select("src"), "src", "semi").join(
-                deg.select(F.col("src").alias("dst")), "dst", "semi"
-            )
-            if dropped == 0:
-                break
-        else:
-            # Each round strictly shrinks the survivor set, so peel depth
-            # is bounded by |V| — but a caller-supplied max_iters can
-            # still cut a deep peel (long path appendages) short.  A
-            # silent return would contain nodes below k; surface it.
-            if dropped > 0:
-                msg = (
-                    f"kcore: max_iters={max_iters} exhausted before the "
-                    f"peel fixpoint ({dropped} nodes still under k={k}); "
-                    "result is the partially-peeled subgraph — raise "
-                    "max_iters"
-                )
-                if strict:
-                    raise RuntimeError(msg)
-                warnings.warn(msg, RuntimeWarning, stacklevel=2)
-        out = deg.select(F.col("src").alias("id"), F.col("deg").alias("core_degree"))
-        out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        sym.unpersist()
+
+    def semi(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+        return edges.join(nodes, "src", "semi").join(
+            nodes.select(F.col("src").alias("dst")), "dst", "semi"
+        )
+
+    def step(deg: DataFrame, i: int) -> DataFrame:
+        # After round 1 the edge filter is re-anchored on the
+        # materialized degree frame rather than the growing semi-join
+        # lineage.
+        cur = sym if i == 0 else semi(sym, deg.select("src"))
+        cur = semi(cur, deg.filter(F.col("deg") >= k).select("src"))
+        return cur.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+
+    deg = _supersteps(
+        sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg")),
+        step,
+        max_iters,
+        changed=lambda new, _: new.filter(F.col("deg") < k),
+        strict=strict,
+        name="kcore",
+        stale=f"{{}} nodes still under k={k}, so the result is the "
+        "partially-peeled subgraph",
+        release=(sym,),
+    )
+    return deg.select(F.col("src").alias("id"), F.col("deg").alias("core_degree"))
 
 
 def _weighted_sssp_local(
@@ -1172,7 +1074,7 @@ def _weighted_sssp_local(
                 dist[v] = nd
                 heapq.heappush(heap, (nd, v))
     rows = [(int(i), int(d)) for i, d in sorted(dist.items())]
-    return spark.createDataFrame(rows, "id bigint, dist bigint")
+    return _local_result_df(spark, rows, SSSP_SCHEMA)
 
 
 def weighted_sssp(
@@ -1181,7 +1083,6 @@ def weighted_sssp(
     weight_col: str = "w",
     max_iters: int = 30,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
     strict: bool = False,
 ) -> DataFrame:
     """Weighted single-source shortest paths (Bellman-Ford / min-plus
@@ -1198,10 +1099,9 @@ def weighted_sssp(
 
     Scale shape: dist is hash-partitioned by id; each round is one
     equi-join dist⋈edges on the edge source + one min-aggregation on
-    the destination — the same two-exchange round as PageRank/CC, with
-    ``localCheckpoint`` every ``CHECKPOINT_EVERY`` rounds to truncate
-    lineage. Small edge sets run driver-side Dijkstra instead (same
-    converged answer, no per-round job overhead).
+    the destination — the same two-exchange round as PageRank/CC.
+    Small edge sets run driver-side Dijkstra instead (same converged
+    answer, no per-round job overhead).
 
     Returns DataFrame(id BIGINT, dist BIGINT) over reachable nodes,
     including the source at distance 0.
@@ -1218,78 +1118,49 @@ def weighted_sssp(
     # repartitioned copy) — a separate up-front action would re-execute
     # the caller's whole edge-derivation plan one extra time (measured:
     # the entity-graph distinct exchange ran twice at sf1).
-    if _pick_strategy(edges, strategy, local_threshold) == "local":
+    if _pick_strategy(edges, strategy, LOCAL_EDGE_THRESHOLD) == "local":
         return _weighted_sssp_local(wedges, src)
-    spark = _spark_of(edges)
     if not hash_partitioned_on(wedges, "src"):
         wedges = wedges.repartition("src")
     # else: src-bucketed edge table (SURVEY §1.2) — already clustered
     # on the relaxation join key, the one-time shuffle is free.
     wedges = wedges.persist(StorageLevel.MEMORY_AND_DISK)
-    if wedges.filter(F.col("w") < 0).limit(1).count():
-        wedges.unpersist()
-        raise ValueError("weighted_sssp requires non-negative weights")
-    prev_cached: DataFrame | None = None
-    try:
-        dist = spark.createDataFrame(
-            [(int(src), 0)], "id bigint, dist bigint"
+
+    def step(dist: DataFrame, i: int) -> DataFrame:
+        # Raised from inside the driver so its finally releases wedges.
+        if i == 0 and wedges.filter(F.col("w") < 0).limit(1).count():
+            raise ValueError("weighted_sssp requires non-negative weights")
+        relaxed = (
+            wedges.join(dist, wedges.src == dist.id)
+            .select(
+                F.col("dst").alias("id"),
+                (F.col("dist") + F.col("w")).alias("cand"),
+            )
+            .groupBy("id")
+            .agg(F.min("cand").alias("cand"))
         )
-        for i in range(max_iters):
-            relaxed = (
-                wedges.join(dist, wedges.src == dist.id)
-                .select(
-                    F.col("dst").alias("id"),
-                    (F.col("dist") + F.col("w")).alias("cand"),
-                )
-                .groupBy("id")
-                .agg(F.min("cand").alias("cand"))
-            )
-            new_dist = (
-                dist.join(relaxed, "id", "full")
-                .select(
-                    "id",
-                    F.least(
-                        F.coalesce("dist", F.lit(1 << 62)),
-                        F.coalesce("cand", F.lit(1 << 62)),
-                    ).alias("dist"),
-                )
-            )
-            if (i + 1) % CHECKPOINT_EVERY == 0:
-                new_dist = new_dist.localCheckpoint(eager=True)
-            else:
-                new_dist = new_dist.persist(StorageLevel.MEMORY_AND_DISK)
-            changed = (
-                new_dist.alias("n")
-                .join(dist.alias("o"), "id", "left")
-                .filter(
-                    F.col("o.dist").isNull()
-                    | (F.col("n.dist") != F.col("o.dist"))
-                )
-                .count()
-            )
-            if prev_cached is not None:
-                prev_cached.unpersist()
-            prev_cached = (
-                new_dist if (i + 1) % CHECKPOINT_EVERY != 0 else None
-            )
-            dist = new_dist
-            if changed == 0:
-                break
-        else:
-            if changed > 0:
-                msg = (
-                    f"weighted_sssp: max_iters={max_iters} exhausted "
-                    f"before the fixpoint ({changed} distances still "
-                    "improving); results may be over-estimates — raise "
-                    "max_iters"
-                )
-                if strict:
-                    raise RuntimeError(msg)
-                warnings.warn(msg, RuntimeWarning, stacklevel=2)
-        if prev_cached is not None:
-            dist = dist.localCheckpoint(eager=True)
-        return dist
-    finally:
-        if prev_cached is not None:
-            prev_cached.unpersist()
-        wedges.unpersist()
+        return dist.join(relaxed, "id", "full").select(
+            "id",
+            F.least(
+                F.coalesce("dist", F.lit(1 << 62)),
+                F.coalesce("cand", F.lit(1 << 62)),
+            ).alias("dist"),
+        )
+
+    def changed(new: DataFrame, old: DataFrame) -> DataFrame:
+        return (
+            new.alias("n")
+            .join(old.alias("o"), "id", "left")
+            .filter(F.col("o.dist").isNull() | (F.col("n.dist") != F.col("o.dist")))
+        )
+
+    return _supersteps(
+        _spark_of(edges).createDataFrame([(int(src), 0)], "id bigint, dist bigint"),
+        step,
+        max_iters,
+        changed=changed,
+        strict=strict,
+        name="weighted_sssp",
+        stale="{} distances still improving, so results may be over-estimates",
+        release=(wedges,),
+    )

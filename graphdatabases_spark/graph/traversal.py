@@ -33,8 +33,8 @@ Execution strategy (the 100-TB design decision):
 - **auto** (default): decided first from the optimized plan's Catalyst
   ``sizeInBytes`` (``_decide_strategy``): local at or under 64 MB,
   distributed at or over 4 GB, and in between local if
-  ``edges.count() ≤ min(local_threshold, hops·500k)`` (default cap 2M
-  edges) — one O(E) Arrow collect beats ~1-2 s of fixed job latency per
+  ``edges.count() ≤ min(LOCAL_EDGE_THRESHOLD, hops·500k)`` (a 2M-edge
+  cap) — one O(E) Arrow collect beats ~1-2 s of fixed job latency per
   round until E is large relative to the round count. At 100 TB
   the distributed path runs without a probe. The policy is only as good
   as the statistics: a driver-built frame must come from
@@ -75,6 +75,8 @@ PATH_SCHEMA = StructType(
 )
 
 LOCAL_EDGE_THRESHOLD = 2_000_000
+# Rounds between eager lineage-truncating checkpoints, shared by the
+# BFS kernels here and the superstep driver in ``algorithms``.
 CHECKPOINT_EVERY = 4
 
 # --- multi-hop blocking for the distributed BFS kernels (round 14) --------
@@ -183,6 +185,14 @@ def _next_growth(ratio_k: float, k: int) -> float:
 FRONTIER_BROADCAST_MAX = 4_000_000
 
 
+def broadcast_side(df: DataFrame, rows: int) -> DataFrame:
+    """``df`` as a join side, broadcast while ``rows`` (its exact row
+    count or a proven bound on it) is at most ``FRONTIER_BROADCAST_MAX``
+    and left to a keyed shuffle join above it. The one size switch of
+    every iterative kernel's frontier, label or per-vertex state side."""
+    return F.broadcast(df) if rows <= FRONTIER_BROADCAST_MAX else df
+
+
 def _edges_df(graph: PropertyGraph | DataFrame) -> DataFrame:
     if isinstance(graph, PropertyGraph):
         return graph.edge_pairs()  # memoized projection, no repeat RPC
@@ -274,11 +284,11 @@ def hash_partitioned_on(df: DataFrame, col: str) -> bool:
     return out
 
 
-def _pick_strategy(edges: DataFrame, strategy: str, local_threshold: int) -> str:
+def _pick_strategy(edges: DataFrame, strategy: str, threshold: int) -> str:
     decision = _decide_strategy(edges, strategy)
     if decision != "probe":
         return decision
-    return "local" if edges.count() <= local_threshold else "distributed"
+    return "local" if edges.count() <= threshold else "distributed"
 
 
 def _decide_strategy(edges: DataFrame, strategy: str) -> str:
@@ -443,24 +453,26 @@ from contextlib import contextmanager
 
 
 @contextmanager
-def _materialized(edges: DataFrame, decision: str):
-    """Cache the (possibly join-derived) edge plan for the duration of a
-    traversal call when the strategy probe needs a count pass: the probe,
-    the adjacency collect, and every BFS round then read the cache
-    instead of re-running the plan. When Catalyst statistics already
-    decided ('local'/'distributed'), the plan is consumed exactly once
-    (one Arrow collect, or persisted inside the BFS kernel itself), so
-    persisting here would only add a redundant materialization pass.
+def _materialized(edges: DataFrame, strategy: str, threshold: int):
+    """Yield ``(edges, chosen)``: a traversal's edge plan and its
+    strategy, 'local' or 'distributed'. When Catalyst statistics decide
+    (``_decide_strategy``), the plan is consumed exactly once (one Arrow
+    collect, or persisted inside the BFS kernel itself) and is yielded
+    as is. When they are inconclusive, the (possibly join-derived) plan
+    is cached for the duration of the call and a count against
+    ``threshold`` decides: the probe, the adjacency collect, and every
+    BFS round then read the cache instead of re-running the plan.
     Results escape the block only in materialized form (driver lists or
     eager checkpoints), so the unpersist is safe."""
-    if decision == "probe":
-        edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            yield edges
-        finally:
-            edges.unpersist()
-    else:
-        yield edges
+    decision = _decide_strategy(edges, strategy)
+    if decision != "probe":
+        yield edges, decision
+        return
+    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield edges, ("local" if edges.count() <= threshold else "distributed")
+    finally:
+        edges.unpersist()
 
 
 def _all_integral(rows: list, schema: StructType) -> bool:
@@ -728,9 +740,11 @@ class _EdgeSides:
 
     def join_frontier(self, frontier: DataFrame, frontier_rows: int) -> DataFrame:
         """frontier ⋈ edges on id=src, picking the join side by size."""
-        if frontier_rows <= FRONTIER_BROADCAST_MAX:
-            return self.plain.join(F.broadcast(frontier), F.col("src") == F.col("id"))
-        return self.by_src().join(frontier, F.col("src") == F.col("id"))
+        small = frontier_rows <= FRONTIER_BROADCAST_MAX
+        edges = self.plain if small else self.by_src()
+        return edges.join(
+            broadcast_side(frontier, frontier_rows), F.col("src") == F.col("id")
+        )
 
     def release(self) -> None:
         self.plain.unpersist()
@@ -742,7 +756,6 @@ def _bfs_distributed(
     edges: DataFrame,
     src: int,
     max_hops: int | None,
-    checkpoint_every: int = CHECKPOINT_EVERY,
 ) -> DataFrame:
     """Frontier BFS as an iterative join loop; returns DataFrame(id, dist).
 
@@ -798,11 +811,7 @@ def _bfs_distributed(
             # level); in-block level i's frontier side broadcasts only
             # when the PROVABLE bound frontier_rows·max_deg^(i-1)
             # clears the cap (advice r14 — never an estimate).
-            vis = (
-                F.broadcast(visited)
-                if visited_rows <= FRONTIER_BROADCAST_MAX
-                else visited
-            )
+            vis = broadcast_side(visited, visited_rows)
             f = frontier.select("id")
             block = None
             for i in range(1, k + 1):
@@ -842,7 +851,7 @@ def _bfs_distributed(
             visited_rows += stats["n"]
             d += k
             since_ckpt += k
-            if since_ckpt >= checkpoint_every:
+            if since_ckpt >= CHECKPOINT_EVERY:
                 # Collapse the growing union tree so plan size stays
                 # O(1) — AND coalesce first: each union appends the
                 # block's partitions, so without the coalesce the
@@ -882,7 +891,6 @@ def bfs_distances(
     src: int,
     max_hops: int | None = None,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Shortest hop-count distance from ``src`` to every reachable node.
 
@@ -891,18 +899,12 @@ def bfs_distances(
     plan = _edges_df(graph)  # already src/dst-projected; no re-select RPC
     spark = _spark_of(plan)
     eff_threshold = (
-        min(local_threshold, max_hops * 500_000) if max_hops else local_threshold
+        min(LOCAL_EDGE_THRESHOLD, max_hops * 500_000)
+        if max_hops
+        else LOCAL_EDGE_THRESHOLD
     )
-    decision = _decide_strategy(plan, strategy)
-    with _materialized(plan, decision) as edges:
-        chosen = (
-            decision
-            if decision != "probe"
-            else ("local" if edges.count() <= eff_threshold else "distributed")
-        )
+    with _materialized(plan, strategy, eff_threshold) as (edges, chosen):
         if chosen == "local":
-            import numpy as np
-
             idx = _collect_index(edges)
             dist = _bfs_numpy(idx, src, max_hops)
             if dist is None:  # src absent from the edge universe
@@ -922,7 +924,6 @@ def khop(
     hops: int,
     include_root: bool = False,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """All distinct nodes reachable from ``src`` in 1..hops directed hops.
 
@@ -939,15 +940,8 @@ def khop(
     # million edges), distributed pays ~1-2 s of fixed job latency PER
     # ROUND regardless of size. Local therefore wins unless the edge set
     # is large relative to the round count.
-    eff_threshold = min(local_threshold, hops * 500_000)
-    decision = _decide_strategy(plan, strategy)
-    with _materialized(plan, decision) as edges:
-        chosen = (
-            decision
-            if decision != "probe"
-            else ("local" if edges.count() <= eff_threshold else "distributed")
-        )
-
+    eff_threshold = min(LOCAL_EDGE_THRESHOLD, hops * 500_000)
+    with _materialized(plan, strategy, eff_threshold) as (edges, chosen):
         if chosen == "local":
             import numpy as np
 
@@ -1000,7 +994,6 @@ def ssp(
     dst: int,
     max_hops: int | None = None,
     strategy: str = "auto",
-    local_threshold: int = LOCAL_EDGE_THRESHOLD,
 ) -> DataFrame:
     """Unweighted shortest path ``src → dst``; path returned.
 
@@ -1016,14 +1009,7 @@ def ssp(
     """
     plan = _edges_df(graph)  # already src/dst-projected; no re-select RPC
     spark = _spark_of(plan)
-    decision = _decide_strategy(plan, strategy)
-    with _materialized(plan, decision) as edges:
-        chosen = (
-            decision
-            if decision != "probe"
-            else ("local" if edges.count() <= local_threshold else "distributed")
-        )
-
+    with _materialized(plan, strategy, LOCAL_EDGE_THRESHOLD) as (edges, chosen):
         if chosen == "local":
             hit = _ssp_numpy(_collect_index(edges), src, dst, max_hops)
             rows = [] if hit is None else [hit]
@@ -1037,7 +1023,6 @@ def _ssp_distributed(
     src: int,
     dst: int,
     max_hops: int | None,
-    checkpoint_every: int = CHECKPOINT_EVERY,
 ) -> DataFrame:
     """BFS carrying one lexicographically-smallest path per frontier node.
 
@@ -1087,11 +1072,7 @@ def _ssp_distributed(
             # reduction below: dist leads the struct, so the true first
             # discovery always wins, and echo-generated candidates land
             # strictly above their child's true level.
-            vis = (
-                F.broadcast(visited)
-                if visited_rows <= FRONTIER_BROADCAST_MAX
-                else visited
-            )
+            vis = broadcast_side(visited, visited_rows)
             f = frontier
             block = None
             for i in range(1, k + 1):
@@ -1150,7 +1131,7 @@ def _ssp_distributed(
             visited_rows += probe["n"]
             d += k
             since_ckpt += k
-            if since_ckpt >= checkpoint_every:
+            if since_ckpt >= CHECKPOINT_EVERY:
                 # coalesce caps the checkpointed partition count (see
                 # _bfs_distributed — unbounded growth with depth; one
                 # partition in the broadcast regime so each per-block

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdatabases_spark.graph.traversal import broadcast_side
 from graphdatabases_spark.relational.catalog import register, table
 from graphdatabases_spark.relational.graph_queries import (
     ENTITY_EDGES_SQL,
@@ -1061,10 +1062,7 @@ def graph_modularity(spark: SparkSession, sf: str) -> DataFrame:
     # Size-switched broadcasts of the per-vertex sides (round 14; the
     # checkpointed labels carry no stats, so the intra-edge proof
     # otherwise sort-merge-exchanges e0 twice).
-    from graphdatabases_spark.relational.graph_kernels import _mis_side
-
     n_v = labels.count()
-    _side = lambda df: _mis_side(df, n_v)  # noqa: E731
     sym = e0.select("src").unionAll(
         e0.select(F.col("dst").alias("src"))
     )
@@ -1072,7 +1070,7 @@ def graph_modularity(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("deg")
     )
     comm = (
-        labels.join(_side(deg), "id")
+        labels.join(broadcast_side(deg, n_v), "id")
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_nodes"),
@@ -1086,8 +1084,8 @@ def graph_modularity(spark: SparkSession, sf: str) -> DataFrame:
         F.col("id").alias("dst"), F.col("label").alias("label_b")
     )
     intra = (
-        e0.join(_side(la), "src")
-        .join(_side(lb), "dst")
+        e0.join(broadcast_side(la, n_v), "src")
+        .join(broadcast_side(lb, n_v), "dst")
         .filter(F.col("label_a") == F.col("label_b"))
         .agg(F.count(F.lit(1)).cast("long").alias("intra_edges"))
     )
@@ -1286,10 +1284,7 @@ def graph_louvain_onepass(spark: SparkSession, sf: str) -> DataFrame:
     # labels/deg/comm/kvs are <= |V| rows, so below the frontier cap the
     # joins against the edge-sized streams are broadcast-hash and only
     # the keyed aggregates shuffle.
-    from graphdatabases_spark.relational.graph_kernels import _mis_side
-
     n_v = labels.count()
-    _side = lambda df: _mis_side(df, n_v)  # noqa: E731
     sym = e0.select("src", "dst").unionAll(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -1303,17 +1298,18 @@ def graph_louvain_onepass(spark: SparkSession, sf: str) -> DataFrame:
     )
     mm = e0.agg(F.count(F.lit(1)).cast("long").alias("m"))
     comm = (
-        labels.join(_side(deg), "id")
+        labels.join(broadcast_side(deg, n_v), "id")
         .groupBy("label")
         .agg(F.sum("deg").cast("long").alias("sig"))
         .localCheckpoint(eager=True)
     )
     kvc = (
         sym.join(
-            _side(
+            broadcast_side(
                 labels.select(
                     F.col("id").alias("dst"), F.col("label").alias("c")
-                )
+                ),
+                n_v,
             ),
             "dst",
         )
@@ -1327,22 +1323,24 @@ def graph_louvain_onepass(spark: SparkSession, sf: str) -> DataFrame:
         "left",
     ).select("id", "s", F.coalesce("k_own", F.lit(0)).alias("k_own"))
     cand0 = (
-        kvc.join(_side(kvs), "id")
+        kvc.join(broadcast_side(kvs, n_v), "id")
         .filter(F.col("c") != F.col("s"))
-        .join(_side(deg), "id")
+        .join(broadcast_side(deg, n_v), "id")
         .join(
-            _side(
+            broadcast_side(
                 comm.select(
                     F.col("label").alias("c"), F.col("sig").alias("sig_c")
-                )
+                ),
+                n_v,
             ),
             "c",
         )
         .join(
-            _side(
+            broadcast_side(
                 comm.select(
                     F.col("label").alias("s"), F.col("sig").alias("sig_s")
-                )
+                ),
+                n_v,
             ),
             "s",
         )
@@ -1388,12 +1386,14 @@ def graph_louvain_onepass(spark: SparkSession, sf: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     l4 = labels.join(
-        _side(movers.select("id", F.col("c").alias("new_label"))), "id", "left"
+        broadcast_side(movers.select("id", F.col("c").alias("new_label")), n_v),
+        "id",
+        "left",
     ).select("id", F.coalesce("new_label", "label").alias("label"))
 
     def _q_parts(lbl, alias):
         sig = (
-            lbl.join(_side(deg), "id")
+            lbl.join(broadcast_side(deg, n_v), "id")
             .groupBy("label")
             .agg(F.sum("deg").cast("long").alias("sig"))
             .agg(F.sum(F.col("sig") * F.col("sig")).cast("long").alias(f"sum_d2_{alias}"))
@@ -1401,8 +1401,8 @@ def graph_louvain_onepass(spark: SparkSession, sf: str) -> DataFrame:
         la = lbl.select(F.col("id").alias("src"), F.col("label").alias("la"))
         lb = lbl.select(F.col("id").alias("dst"), F.col("label").alias("lb"))
         intra = (
-            e0.join(_side(la), "src")
-            .join(_side(lb), "dst")
+            e0.join(broadcast_side(la, n_v), "src")
+            .join(broadcast_side(lb, n_v), "dst")
             .filter(F.col("la") == F.col("lb"))
             .agg(F.count(F.lit(1)).cast("long").alias(f"intra_{alias}"))
         )

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from graphdatabases_spark.graph.traversal import broadcast_side
 from graphdatabases_spark.relational.catalog import register, table
 from graphdatabases_spark.relational.graph_centrality_queries import (
     _MOD_EDGES_SQL,
@@ -226,8 +227,6 @@ def _weighted_local_move(
     dropped), so the surviving moves touch pairwise-disjoint
     communities and apply simultaneously with exactly-additive gains.
     """
-    from graphdatabases_spark.relational.graph_kernels import _mis_side
-
     _ckpt = lambda df: df.localCheckpoint(eager=True)  # noqa: E731
     # Size-switched broadcasts of every per-vertex / per-community side
     # (round 14, the pagerank_units pattern): labels, strength, sig,
@@ -236,7 +235,6 @@ def _weighted_local_move(
     # hash and only the keyed aggregates shuffle; above the cap the
     # shuffle-join shape is unchanged.
     n_v = labels.count()
-    _side = lambda df: _mis_side(df, n_v)  # noqa: E731
     inter = wg.filter(F.col("u") != F.col("v"))
     sadj = inter.select(
         F.col("u").alias("a"), F.col("v").alias("b"), "w"
@@ -253,16 +251,17 @@ def _weighted_local_move(
     )
     strength = _ckpt(strength)
     sig = _ckpt(
-        labels.join(_side(strength), "id")
+        labels.join(broadcast_side(strength, n_v), "id")
         .groupBy("label")
         .agg(F.sum("k").cast("long").alias("sig"))
     )
     kvc = (
         sadj.join(
-            _side(
+            broadcast_side(
                 labels.select(
                     F.col("id").alias("b"), F.col("label").alias("c")
-                )
+                ),
+                n_v,
             ),
             "b",
         )
@@ -279,22 +278,24 @@ def _weighted_local_move(
         .select("id", "s", F.coalesce("k_own", F.lit(0)).alias("k_own"))
     )
     gains = (
-        kvc.join(_side(kvs), "id")
+        kvc.join(broadcast_side(kvs, n_v), "id")
         .filter(F.col("c") != F.col("s"))
-        .join(_side(strength), "id")
+        .join(broadcast_side(strength, n_v), "id")
         .join(
-            _side(
+            broadcast_side(
                 sig.select(
                     F.col("label").alias("c"), F.col("sig").alias("sig_c")
-                )
+                ),
+                n_v,
             ),
             "c",
         )
         .join(
-            _side(
+            broadcast_side(
                 sig.select(
                     F.col("label").alias("s"), F.col("sig").alias("sig_s")
-                )
+                ),
+                n_v,
             ),
             "s",
         )
@@ -338,7 +339,7 @@ def _weighted_local_move(
     )
     post = (
         labels.join(
-            _side(movers.select("id", F.col("c").alias("new_label"))),
+            broadcast_side(movers.select("id", F.col("c").alias("new_label")), n_v),
             "id",
             "left",
         )
@@ -350,8 +351,8 @@ def _weighted_local_move(
         la = lbl.select(F.col("id").alias("u"), F.col("label").alias("la"))
         lb = lbl.select(F.col("id").alias("v"), F.col("label").alias("lb"))
         return (
-            wg.join(_side(la), "u")
-            .join(_side(lb), "v")
+            wg.join(broadcast_side(la, n_v), "u")
+            .join(broadcast_side(lb, n_v), "v")
             .filter(F.col("la") == F.col("lb"))
             .agg(
                 F.coalesce(F.sum("w"), F.lit(0))
@@ -367,7 +368,7 @@ def _weighted_local_move(
             .alias(f"sum_d2_{alias}")
         )
 
-    sig_after = post.join(_side(strength), "id").groupBy("label").agg(
+    sig_after = post.join(broadcast_side(strength, n_v), "id").groupBy("label").agg(
         F.sum("k").cast("long").alias("sig")
     )
     stats = (

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdatabases_spark.graph.traversal import broadcast_side
 from graphdatabases_spark.relational.catalog import register
 from graphdatabases_spark.relational.graph_incremental_queries import (
     _MI_MOD,
@@ -38,7 +39,6 @@ from graphdatabases_spark.relational.graph_incremental_queries import (
 from graphdatabases_spark.relational.graph_kernels import (
     _matching_kernel,
     _mis_kernel,
-    _mis_side,
     _sym_partition_key,
 )
 from graphdatabases_spark.relational.graph_queries import (
@@ -189,7 +189,7 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
     # graph MIS; adjacency-with-neighbor-status over kept edges only.
     fstat = (
         fverts.join(
-            _mis_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
+            broadcast_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
             "id",
             "left",
         )
@@ -201,7 +201,7 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
     # cascade's cone-filtered rounds — see graph_mis_incremental.
     adj = (
         symq.join(
-            _mis_side(
+            broadcast_side(
                 fstat.select(
                     F.col("id").alias("dst"),
                     F.col("h").alias("nh"),
@@ -218,7 +218,7 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
     # Dirty seed: for each deleted symmetric edge, the LOWER-priority
     # endpoint when the higher-priority endpoint was base-TRUE — only
     # then did the dependent's blocked() lose a contributing term.
-    st = _mis_side(fstat, n_vertices)
+    st = broadcast_side(fstat, n_vertices)
     dele = symf.filter(is_del)
     dirty_ids = (
         dele.join(
@@ -247,7 +247,7 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
         .distinct()
     )
     dirty = fstat.join(
-        _mis_side(dirty_ids, 2 * n_deleted_edges), "id", "left_semi"
+        broadcast_side(dirty_ids, 2 * n_deleted_edges), "id", "left_semi"
     ).localCheckpoint(eager=True)
     n_dirty = dirty.count()
     delta, n_delta = _mis_warm_repair(
@@ -256,7 +256,7 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
     adj.unpersist()
     final = (
         fstat.join(
-            _mis_side(
+            broadcast_side(
                 delta.select(F.col("id").alias("id"), F.col("s").alias("dls")),
                 n_delta,
             ),
@@ -274,19 +274,19 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
     # Proof joins size-switch-broadcast the (known-count) MIS sides so
     # the persisted symf streams without a sort-merge exchange (r14).
     n_flipped = final.join(
-        _mis_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
+        broadcast_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
         "id",
         "left",
     ).filter(F.col("s") != F.coalesce(F.col("s0"), F.lit(False))).count()
     m_a = warm_mis.select(F.col("id").alias("aid"))
     m_b = warm_mis.select(F.col("id").alias("bid"))
     indep_viol = (
-        symq.join(_mis_side(m_a, warm_row["sz"]), symq.src == F.col("aid"))
-        .join(_mis_side(m_b, warm_row["sz"]), symq.dst == F.col("bid"))
+        symq.join(broadcast_side(m_a, warm_row["sz"]), symq.src == F.col("aid"))
+        .join(broadcast_side(m_b, warm_row["sz"]), symq.dst == F.col("bid"))
         .count()
     )
     covered = (
-        symq.join(_mis_side(m_b, warm_row["sz"]), symq.dst == F.col("bid"))
+        symq.join(broadcast_side(m_b, warm_row["sz"]), symq.dst == F.col("bid"))
         .select(F.col("src").alias("id"))
         .distinct()
     )
@@ -443,7 +443,7 @@ def graph_matching_decremental(spark: SparkSession, sf: str) -> DataFrame:
     g_keep = g.filter(~is_del).localCheckpoint(eager=True)
     estat = (
         g_keep.join(
-            _mis_side(mat_base.withColumn("s0", F.lit(True)), base_row["sz"]),
+            broadcast_side(mat_base.withColumn("s0", F.lit(True)), base_row["sz"]),
             ["src", "dst"],
             "left",
         )
@@ -491,7 +491,7 @@ def graph_matching_decremental(spark: SparkSession, sf: str) -> DataFrame:
     del_true = (
         g.filter(is_del)
         .join(
-            _mis_side(mat_base.select("src", "dst"), base_row["sz"]),
+            broadcast_side(mat_base.select("src", "dst"), base_row["sz"]),
             ["src", "dst"],
             "left_semi",
         )
@@ -512,11 +512,11 @@ def graph_matching_decremental(spark: SparkSession, sf: str) -> DataFrame:
     # round 14); this is the same value-can't-change rule the shared
     # propagation applies, fuzz-pinned in both directions.
     dirty = (
-        x.join(_mis_side(del_ends, 2 * n_del_true), "v")
+        x.join(broadcast_side(del_ends, 2 * n_del_true), "v")
         .filter(F.col("fh") > F.col("hdel"))
         .withColumn("ov", F.col("fsrc") + F.col("fdst") - F.col("v"))
         .join(
-            _mis_side(
+            broadcast_side(
                 vstat0.select(
                     F.col("v").alias("ov"), F.col("m1").alias("om1")
                 ),
@@ -541,7 +541,7 @@ def graph_matching_decremental(spark: SparkSession, sf: str) -> DataFrame:
     )
     final = (
         estat.join(
-            _mis_side(delta, n_delta),
+            broadcast_side(delta, n_delta),
             (estat.src == F.col("dsrc")) & (estat.dst == F.col("ddst")),
             "left",
         )
@@ -575,12 +575,12 @@ def graph_matching_decremental(spark: SparkSession, sf: str) -> DataFrame:
     n_mv = 2 * warm_row["sz"]
     free_viol = (
         g_keep.join(
-            _mis_side(mv, n_mv).withColumnRenamed("v", "xsrc"),
+            broadcast_side(mv, n_mv).withColumnRenamed("v", "xsrc"),
             g_keep.src == F.col("xsrc"),
             "left_anti",
         )
         .join(
-            _mis_side(mv, n_mv).withColumnRenamed("v", "xdst"),
+            broadcast_side(mv, n_mv).withColumnRenamed("v", "xdst"),
             F.col("dst") == F.col("xdst"),
             "left_anti",
         )

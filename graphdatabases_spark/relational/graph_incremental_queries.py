@@ -16,12 +16,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
 from graphdatabases_spark.graph.model import local_frame
+from graphdatabases_spark.graph.traversal import broadcast_side
 from graphdatabases_spark.relational.catalog import register
 from graphdatabases_spark.relational.graph_kernels import (
     _SYM_LOCAL_EDGE_MAX,
     _SYM_LOCAL_V_MAX,
     _mis_kernel,
-    _mis_side,
     _sym_partition_key,
 )
 from graphdatabases_spark.relational.graph_queries import (
@@ -204,7 +204,7 @@ def _mis_warm_repair(
         # Recompute each dirty vertex from its strictly-higher-priority
         # neighbors' effective statuses (base overlaid with delta).
         nb = adjr.join(
-            _mis_side(
+            broadcast_side(
                 dirty.select(
                     F.col("id").alias("d"),
                     F.col("h").alias("dh"),
@@ -214,7 +214,7 @@ def _mis_warm_repair(
             ),
             adj.src == F.col("d"),
         ).join(
-            _mis_side(
+            broadcast_side(
                 delta.select(
                     F.col("id").alias("nid"), F.col("s").alias("dls")
                 ),
@@ -236,7 +236,7 @@ def _mis_warm_repair(
         )
         changed = (
             dirty.join(
-                _mis_side(blocked, n_dirty), dirty.id == blocked.d, "left"
+                broadcast_side(blocked, n_dirty), dirty.id == blocked.d, "left"
             )
             .withColumn("s_new", F.col("d").isNull())
             .filter(F.col("s_new") != F.col("s"))
@@ -264,7 +264,7 @@ def _mis_warm_repair(
         # become the next dirty set (their dependency just changed).
         cand = (
             adjr.join(
-                _mis_side(
+                broadcast_side(
                     changed.select(
                         F.col("id").alias("c"), F.col("h").alias("ch")
                     ),
@@ -285,7 +285,7 @@ def _mis_warm_repair(
         )
         dirty = (
             cand.join(
-                _mis_side(
+                broadcast_side(
                     delta.select(F.col("id").alias("id"), F.col("s").alias("dls")),
                     n_delta,
                 ),
@@ -397,7 +397,6 @@ def _mis_warm_repair(
 )
 def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     from graphdatabases_spark.functions import text as T
-    from graphdatabases_spark.relational.graph_kernels import _mis_side
 
     edges = entity_edges(spark, sf, dedup=True).localCheckpoint(eager=True)
     is_batch = ((F.col("src") + F.col("dst")) % _MI_MOD) == 0
@@ -452,7 +451,7 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # start false), adjacency-with-neighbor-status checkpointed ONCE.
     fstat = (
         fverts.join(
-            _mis_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
+            broadcast_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
             "id",
             "left",
         )
@@ -465,7 +464,7 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # localCheckpoint would have no batch stats to prune with.
     adj = (
         symf.join(
-            _mis_side(
+            broadcast_side(
                 fstat.select(
                     F.col("id").alias("dst"),
                     F.col("h").alias("nh"),
@@ -485,7 +484,7 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # higher priority (only true higher-priority neighbors feed
     # blocked()) — seeding every batch endpoint re-judged ~all of the
     # hub neighborhoods for nothing.
-    st = _mis_side(fstat, n_vertices)
+    st = broadcast_side(fstat, n_vertices)
     cand = (
         edges.filter(is_batch)
         .join(
@@ -506,7 +505,7 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
         )
     )
     newv = fverts.select("id").join(
-        _mis_side(bverts.select("id"), n_bverts), "id", "left_anti"
+        broadcast_side(bverts.select("id"), n_bverts), "id", "left_anti"
     )
     dirty_ids = (
         cand.filter(
@@ -530,7 +529,7 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
         .distinct()
     )
     dirty = fstat.join(
-        _mis_side(dirty_ids, 2 * n_batch_edges), "id", "left_semi"
+        broadcast_side(dirty_ids, 2 * n_batch_edges), "id", "left_semi"
     ).localCheckpoint(eager=True)
     n_dirty = dirty.count()
     delta, n_delta = _mis_warm_repair(
@@ -539,7 +538,7 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     adj.unpersist()
     final = (
         fstat.join(
-            _mis_side(
+            broadcast_side(
                 delta.select(F.col("id").alias("id"), F.col("s").alias("dls")),
                 n_delta,
             ),
@@ -557,19 +556,19 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # Proof joins size-switch-broadcast the (known-count) MIS sides so
     # the persisted symf streams without a sort-merge exchange (r14).
     n_flipped = final.join(
-        _mis_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
+        broadcast_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
         "id",
         "left",
     ).filter(F.col("s") != F.coalesce(F.col("s0"), F.lit(False))).count()
     m_a = warm_mis.select(F.col("id").alias("aid"))
     m_b = warm_mis.select(F.col("id").alias("bid"))
     indep_viol = (
-        symf.join(_mis_side(m_a, warm_row["sz"]), symf.src == F.col("aid"))
-        .join(_mis_side(m_b, warm_row["sz"]), symf.dst == F.col("bid"))
+        symf.join(broadcast_side(m_a, warm_row["sz"]), symf.src == F.col("aid"))
+        .join(broadcast_side(m_b, warm_row["sz"]), symf.dst == F.col("bid"))
         .count()
     )
     covered = (
-        symf.join(_mis_side(m_b, warm_row["sz"]), symf.dst == F.col("bid"))
+        symf.join(broadcast_side(m_b, warm_row["sz"]), symf.dst == F.col("bid"))
         .select(F.col("src").alias("id"))
         .distinct()
     )
@@ -814,11 +813,11 @@ def _line_warm_repair(
     def _blocked_at(side: str):
         # blocked at an endpoint: at least b true edges there with
         # h < ours — strict <, so the edge itself never blocks.
-        vd = _mis_side(
+        vd = broadcast_side(
             vdelta.select(F.col("v").alias(f"{side}v"), F.col("hs").alias(f"{side}hs")),
             n_vdelta,
         )
-        v0 = _mis_side(
+        v0 = broadcast_side(
             vstat0a.select(
                 F.col("v").alias(f"{side}v0"), F.col("hs0").alias(f"{side}hs0")
             ),
@@ -882,9 +881,9 @@ def _line_warm_repair(
         )
         n_av = av.count()
         trues = (
-            x.join(_mis_side(av, n_av), "v")
+            x.join(broadcast_side(av, n_av), "v")
             .join(
-                _mis_side(delta, n_delta),
+                broadcast_side(delta, n_delta),
                 (F.col("fsrc") == F.col("dsrc"))
                 & (F.col("fdst") == F.col("ddst")),
                 "left",
@@ -895,9 +894,13 @@ def _line_warm_repair(
         )
         av_states = (
             av.join(trues, "v", "left")
-            .join(_mis_side(vdelta.withColumnRenamed("hs", "ohs"), n_vdelta), "v", "left")
             .join(
-                _mis_side(
+                broadcast_side(vdelta.withColumnRenamed("hs", "ohs"), n_vdelta),
+                "v",
+                "left",
+            )
+            .join(
+                broadcast_side(
                     vstat0a.select(F.col("v").alias("v"), F.col("hs0").alias("ohs0")),
                     n_vstat0,
                 ),
@@ -932,7 +935,7 @@ def _line_warm_repair(
         # Cut measured recompute from ~30% to ~4% of |E| on the
         # hub-heavy deletion cascade (SCALE.md round 14).
         dirty = (
-            x.join(_mis_side(av_states, n_av), "v")
+            x.join(broadcast_side(av_states, n_av), "v")
             .withColumn(
                 "po",
                 F.size(F.filter(F.col("ohs"), lambda hh: hh < F.col("fh"))) >= b,
@@ -943,7 +946,7 @@ def _line_warm_repair(
             )
             .filter(F.col("po") != F.col("pn"))
             .join(
-                _mis_side(delta, n_delta),
+                broadcast_side(delta, n_delta),
                 (F.col("fsrc") == F.col("dsrc"))
                 & (F.col("fdst") == F.col("ddst")),
                 "left",
@@ -951,7 +954,7 @@ def _line_warm_repair(
             .withColumn("scur", F.coalesce(F.col("dls"), F.col("fs")))
             .withColumn("ov", F.col("fsrc") + F.col("fdst") - F.col("v"))
             .join(
-                _mis_side(
+                broadcast_side(
                     vdelta.select(
                         F.col("v").alias("ov"), F.col("hs").alias("uhs")
                     ),
@@ -961,7 +964,7 @@ def _line_warm_repair(
                 "left",
             )
             .join(
-                _mis_side(
+                broadcast_side(
                     vstat0a.select(
                         F.col("v").alias("ov"), F.col("hs0").alias("uhs0")
                     ),
@@ -1109,10 +1112,7 @@ def _mmi_mat_union(tag: str) -> str:
 )
 def graph_matching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     from graphdatabases_spark.functions import text as T
-    from graphdatabases_spark.relational.graph_kernels import (
-        _matching_kernel,
-        _mis_side,
-    )
+    from graphdatabases_spark.relational.graph_kernels import _matching_kernel
 
     g = (
         entity_edges(spark, sf, dedup=True)
@@ -1153,7 +1153,7 @@ def graph_matching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # it was 850 MB of the entry's sf1 shuffle).
     estat = (
         g.join(
-            _mis_side(mat_base.withColumn("s0", F.lit(True)), base_row["sz"]),
+            broadcast_side(mat_base.withColumn("s0", F.lit(True)), base_row["sz"]),
             ["src", "dst"],
             "left",
         )
@@ -1217,7 +1217,7 @@ def graph_matching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     )
     final = (
         estat.join(
-            _mis_side(delta, n_delta),
+            broadcast_side(delta, n_delta),
             (estat.src == F.col("dsrc")) & (estat.dst == F.col("ddst")),
             "left",
         )
@@ -1247,12 +1247,12 @@ def graph_matching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     n_mv = 2 * warm_row["sz"]
     free_viol = (
         g.join(
-            _mis_side(mv, n_mv).withColumnRenamed("v", "xsrc"),
+            broadcast_side(mv, n_mv).withColumnRenamed("v", "xsrc"),
             g.src == F.col("xsrc"),
             "left_anti",
         )
         .join(
-            _mis_side(mv, n_mv).withColumnRenamed("v", "xdst"),
+            broadcast_side(mv, n_mv).withColumnRenamed("v", "xdst"),
             F.col("dst") == F.col("xdst"),
             "left_anti",
         )
@@ -1438,9 +1438,7 @@ def _bmi_oracle() -> str:
 )
 def graph_bmatching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     from graphdatabases_spark.functions import text as T
-    from graphdatabases_spark.relational.graph_kernels import (
-        _bmatching_kernel,
-    )
+    from graphdatabases_spark.relational.graph_kernels import _bmatching_kernel
     from graphdatabases_spark.relational.graph_symmetry_queries import (
         _BM_B,
         _BM_P48,
@@ -1497,7 +1495,7 @@ def graph_bmatching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     # repair's shapes with the weight column along for the ride.
     estat = (
         g.join(
-            _mis_side(
+            broadcast_side(
                 bmat_base.select("src", "dst").withColumn("s0", F.lit(True)),
                 base_row["sz"],
             ),
@@ -1557,7 +1555,7 @@ def graph_bmatching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     )
     final = (
         estat.join(
-            _mis_side(delta, n_delta),
+            broadcast_side(delta, n_delta),
             (estat.src == F.col("dsrc")) & (estat.dst == F.col("ddst")),
             "left",
         )
@@ -1591,8 +1589,8 @@ def graph_bmatching_incremental(spark: SparkSession, sf: str) -> DataFrame:
     deg_d = wdeg.select(F.col("v").alias("dst"), F.col("n").alias("nd"))
     maxviol = (
         final.filter(~F.col("sf"))
-        .join(_mis_side(deg_s, n_wdeg), "src", "left")
-        .join(_mis_side(deg_d, n_wdeg), "dst", "left")
+        .join(broadcast_side(deg_s, n_wdeg), "src", "left")
+        .join(broadcast_side(deg_d, n_wdeg), "dst", "left")
         .filter(
             (F.coalesce(F.col("ns"), F.lit(0)) < _BM_B)
             & (F.coalesce(F.col("nd"), F.lit(0)) < _BM_B)

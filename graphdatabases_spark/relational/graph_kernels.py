@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from graphdatabases_spark.graph.model import local_frame
+from graphdatabases_spark.graph.traversal import broadcast_side
 
 # Sub-threshold driver-local tail for the symmetry-breaking kernels
 # (round 13 — the multilevel-Louvain / local-Dijkstra pattern applied
@@ -39,12 +40,6 @@ _SYM_LOCAL_V_MAX = 4_000_000     # probe induced edges only when the
                                  # (FRONTIER_BROADCAST_MAX — an id+h
                                  # row is 16 B, so 4M rows ~ 64 MB)
 _SYM_LOCAL_EDGE_MAX = 1_000_000  # Arrow-collect bound on induced edges
-
-
-def _mis_side(frame: DataFrame, n_rows: int) -> DataFrame:
-    from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
-
-    return F.broadcast(frame) if n_rows <= FRONTIER_BROADCAST_MAX else frame
 
 
 def _induced_local(
@@ -160,7 +155,7 @@ def _sym_und_build(spark, edges: DataFrame):
     repartition; approx_count_distinct is one scan with a 1-row
     aggregate (no meaningful exchange).  Its ~2% error could make the
     regime key disagree with the EXACT per-round broadcast decisions
-    (_mis_side) near the FRONTIER_BROADCAST_MAX boundary — sym
+    (broadcast_side) near the FRONTIER_BROADCAST_MAX boundary — sym
     partitioned by dst while every per-round groupBy(src) assumes src,
     each round then paying an unplanned exchange (advice r13).  So
     inside a 5% ambiguity band around the boundary the count is
@@ -247,7 +242,7 @@ def _mis_kernel(
             break
         nbr_min = (
             sym.join(
-                _mis_side(
+                broadcast_side(
                     und.select(F.col("id").alias("nid"), F.col("h").alias("nh")),
                     n_und,
                 ),
@@ -258,7 +253,7 @@ def _mis_kernel(
         )
         win = (
             und.join(
-                _mis_side(nbr_min, n_und), und.id == nbr_min.src, "left"
+                broadcast_side(nbr_min, n_und), und.id == nbr_min.src, "left"
             )
             .filter(
                 F.col("mn").isNull()
@@ -275,7 +270,7 @@ def _mis_kernel(
         # size-switched broadcast anti-join against und.  The previous
         # shape exchanged the raw |edges incident to winners| multiset.
         knocked = (
-            sym.join(_mis_side(win, win.count()), sym.dst == win.id)
+            sym.join(broadcast_side(win, win.count()), sym.dst == win.id)
             .select("src")
             .distinct()
             .unionByName(win.select(F.col("id").alias("src")))
@@ -287,11 +282,11 @@ def _mis_kernel(
             # a broadcast semi so the anti-join's broadcast side is
             # provably <= n_und rows.
             knocked = knocked.join(
-                F.broadcast(und.select("id")), "id", "left_semi"
+                broadcast_side(und.select("id"), n_und), "id", "left_semi"
             )
-        und = und.join(_mis_side(knocked, n_und), "id", "left_anti").localCheckpoint(
-            eager=True
-        )
+        und = und.join(
+            broadcast_side(knocked, n_und), "id", "left_anti"
+        ).localCheckpoint(eager=True)
         n_und = und.count()
     if mis is None:  # empty undecided set in — empty MIS out
         return local_frame(spark, [], StructType.fromDDL("id long"))
@@ -367,12 +362,12 @@ def _matching_kernel(spark, g: DataFrame, n_g: int) -> DataFrame:
         # re-exchanges.
         g = (
             g.join(
-                _mis_side(mv, n_mv).withColumnRenamed("v", "xsrc"),
+                broadcast_side(mv, n_mv).withColumnRenamed("v", "xsrc"),
                 g.src == F.col("xsrc"),
                 "left_anti",
             )
             .join(
-                _mis_side(mv, n_mv).withColumnRenamed("v", "xdst"),
+                broadcast_side(mv, n_mv).withColumnRenamed("v", "xdst"),
                 F.col("dst") == F.col("xdst"),
                 "left_anti",
             )
@@ -451,7 +446,7 @@ def _bmatching_kernel(
         )
         exc = (
             ex.withColumn("rk", rk)
-            .join(_mis_side(caps, n_vertices), "v")
+            .join(broadcast_side(caps, n_vertices), "v")
             .withColumn("ok", (F.col("rk") <= F.col("c")).cast("int"))
         )
         win = (
@@ -473,7 +468,7 @@ def _bmatching_kernel(
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
         caps = (
-            caps.join(_mis_side(wv, 2 * win.count()), "v", "left")
+            caps.join(broadcast_side(wv, 2 * win.count()), "v", "left")
             .select(
                 "v", (F.col("c") - F.coalesce(F.col("n"), F.lit(0))).alias("c")
             )
@@ -483,12 +478,12 @@ def _bmatching_kernel(
         g = (
             g.join(win.select("src", "dst"), ["src", "dst"], "left_anti")
             .join(
-                _mis_side(full, n_vertices).withColumnRenamed("v", "xsrc"),
+                broadcast_side(full, n_vertices).withColumnRenamed("v", "xsrc"),
                 g.src == F.col("xsrc"),
                 "left_anti",
             )
             .join(
-                _mis_side(full, n_vertices).withColumnRenamed("v", "xdst"),
+                broadcast_side(full, n_vertices).withColumnRenamed("v", "xdst"),
                 F.col("dst") == F.col("xdst"),
                 "left_anti",
             )

@@ -35,6 +35,7 @@ from graphdatabases_spark.graph.traversal import (
     LOCAL_EDGE_THRESHOLD,
     _pick_strategy,
     bfs_distances,
+    broadcast_side,
     khop,
     ssp,
 )
@@ -1392,7 +1393,6 @@ from graphdatabases_spark.relational.graph_kernels import (
     _matching_kernel,
     _mis_greedy_py,
     _mis_kernel,
-    _mis_side,
     _sym_partition_key,
     _sym_und_build,
 )
@@ -1500,12 +1500,12 @@ def graph_mis_luby(spark: SparkSession, sf: str) -> DataFrame:
     # broadcast side — the checkpointed mis carries no stats and the
     # planner otherwise sort-merge-exchanges sym per proof (round 14).
     indep_viol = (
-        sym.join(_mis_side(m_a, n_vertices), sym.src == F.col("aid"))
-        .join(_mis_side(m_b, n_vertices), sym.dst == F.col("bid"))
+        sym.join(broadcast_side(m_a, n_vertices), sym.src == F.col("aid"))
+        .join(broadcast_side(m_b, n_vertices), sym.dst == F.col("bid"))
         .count()
     )
     covered = (
-        sym.join(_mis_side(m_b, n_vertices), sym.dst == F.col("bid"))
+        sym.join(broadcast_side(m_b, n_vertices), sym.dst == F.col("bid"))
         .select(F.col("src").alias("id"))
         .distinct()
     )

@@ -14,11 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdatabases_spark.graph.traversal import broadcast_side
 from graphdatabases_spark.relational.catalog import register
 from graphdatabases_spark.relational.graph_kernels import (
     _induced_local,
     _mis_kernel,
-    _mis_side,
     _sym_partition_key,
     _sym_und_build,
 )
@@ -222,7 +222,7 @@ def graph_coloring_mis(spark: SparkSession, sf: str) -> DataFrame:
         # mis ⊆ rem, so n_rem bounds the anti-join's broadcast side —
         # the checkpointed mis otherwise carries no stats and the
         # planner sort-merge-exchanged rem every color (round 14).
-        rem = rem.join(_mis_side(mis, n_rem), "id", "left_anti").localCheckpoint(
+        rem = rem.join(broadcast_side(mis, n_rem), "id", "left_anti").localCheckpoint(
             eager=True
         )
         n_rem = rem.count()
@@ -234,9 +234,9 @@ def graph_coloring_mis(spark: SparkSession, sf: str) -> DataFrame:
     # the persisted sym (measured ~2-3 s of sort-merge exchange at
     # sf0.1 without the hints, round 14).
     improper = (
-        sym.join(_mis_side(ca, n_vertices), sym.src == F.col("aid"))
+        sym.join(broadcast_side(ca, n_vertices), sym.src == F.col("aid"))
         .join(
-            _mis_side(cb, n_vertices),
+            broadcast_side(cb, n_vertices),
             (sym.dst == F.col("bid")) & (F.col("acol") == F.col("bcol")),
         )
         .count()
@@ -388,10 +388,7 @@ def graph_bmatching_greedy(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from graphdatabases_spark.functions import text as T
-    from graphdatabases_spark.relational.graph_kernels import (
-        _bmatching_kernel,
-        _mis_side,
-    )
+    from graphdatabases_spark.relational.graph_kernels import _bmatching_kernel
 
     w_expr = (F.col("src") * 7 + F.col("dst") * 13) % 100 + 1
     g = (
@@ -444,15 +441,15 @@ def graph_bmatching_greedy(spark: SparkSession, sf: str) -> DataFrame:
     # entity_edges paid the 3-way-union + distinct scan a second time)
     # and size-switch the anti-join side (result size is in hand).
     g0 = g.select("src", "dst").join(
-        _mis_side(bmat.select("src", "dst"), res["sz"]),
+        broadcast_side(bmat.select("src", "dst"), res["sz"]),
         ["src", "dst"],
         "left_anti",
     )
     deg_s = bdeg.select(F.col("v").alias("src"), F.col("n").alias("ns"))
     deg_d = bdeg.select(F.col("v").alias("dst"), F.col("n").alias("nd"))
     maxviol = (
-        g0.join(_mis_side(deg_s, n_vertices), "src", "left")
-        .join(_mis_side(deg_d, n_vertices), "dst", "left")
+        g0.join(broadcast_side(deg_s, n_vertices), "src", "left")
+        .join(broadcast_side(deg_d, n_vertices), "dst", "left")
         .filter(
             (F.coalesce(F.col("ns"), F.lit(0)) < _BM_B)
             & (F.coalesce(F.col("nd"), F.lit(0)) < _BM_B)

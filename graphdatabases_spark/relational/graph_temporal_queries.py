@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdatabases_spark.graph.traversal import broadcast_side
 from graphdatabases_spark.relational.catalog import register, table
 from graphdatabases_spark.relational.graph_queries import (
     ENTITY_EDGES_SQL,
@@ -48,18 +49,6 @@ def _dated_entity_edges(spark: SparkSession, sf: str) -> DataFrame:
         ship.alias("t"),
     )
     return o.union(op).union(ps).distinct().localCheckpoint(eager=True)
-
-
-def _labels_side(labels: DataFrame, n_labels: int) -> DataFrame:
-    """Size-switched join side for a per-round label/frontier relation:
-    broadcast while it fits (the common case — seed cones at test sfs),
-    keyed shuffle join once it outgrows ``FRONTIER_BROADCAST_MAX`` (the
-    label relation grows to the seeds' reachable cone, ~|touched V|, so
-    an unconditional broadcast risks the 8 GB limit / driver memory at
-    scale — the traversal._EdgeSides discipline)."""
-    from graphdatabases_spark.graph.traversal import FRONTIER_BROADCAST_MAX
-
-    return F.broadcast(labels) if n_labels <= FRONTIER_BROADCAST_MAX else labels
 
 
 # ---------------------------------------------------------------------------
@@ -283,10 +272,10 @@ def graph_temporal_reach(spark: SparkSession, sf: str) -> DataFrame:
     n_arr = len(_TR_SEEDS)
     for _ in range(_TR_ROUNDS):
         # The label relation grows to the seeds' reachable cone, so the
-        # broadcast is size-switched (_labels_side); the count is free —
+        # broadcast is size-switched (broadcast_side); the count is free —
         # arr is an eagerly-checkpointed frame each round.
         cand = (
-            tedges.join(_labels_side(arr, n_arr), tedges.src == arr.id)
+            tedges.join(broadcast_side(arr, n_arr), tedges.src == arr.id)
             .filter(F.col("t") >= F.col("d"))
             .select("seed", F.col("dst").alias("id"), F.col("t").alias("d"))
         )
@@ -477,7 +466,7 @@ def graph_temporal_latest_dep(spark: SparkSession, sf: str) -> DataFrame:
     # relation — is broadcast against the dst-keyed edges (without it
     # the planner sort-merged the FULL 13.4M-row edge list per round:
     # measured 37x shuffle at the 10x step, restored to linear). The
-    # broadcast is size-switched via _labels_side (FRONTIER_BROADCAST_MAX)
+    # broadcast is size-switched via broadcast_side (FRONTIER_BROADCAST_MAX)
     # for when a cone outgrows the broadcast limit. MAX-merge is
     # confluent, so the delta schedule reaches the identical fixpoint
     # the oracle's full unrolled relaxation does.
@@ -486,7 +475,7 @@ def graph_temporal_latest_dep(spark: SparkSession, sf: str) -> DataFrame:
     for _ in range(_TR_ROUNDS):
         cand = (
             tedges.join(
-                _labels_side(frontier, n_frontier),
+                broadcast_side(frontier, n_frontier),
                 tedges.dst == frontier.id,
             )
             .filter(F.col("t") <= F.col("d"))
@@ -598,7 +587,7 @@ def graph_temporal_reach_delta(spark: SparkSession, sf: str) -> DataFrame:
         n_arr = len(_TR_SEEDS)
         for _ in range(_TR_ROUNDS):
             cand = (
-                edges.join(_labels_side(arr, n_arr), edges.src == arr.id)
+                edges.join(broadcast_side(arr, n_arr), edges.src == arr.id)
                 .filter(F.col("t") >= F.col("d"))
                 .select(
                     "seed", F.col("dst").alias("id"), F.col("t").alias("d")

@@ -12,7 +12,12 @@ from graphdatabases_spark.graph.algorithms import (
     connected_components,
     label_propagation,
     pagerank,
+    pagerank_units,
+    personalized_pagerank,
+    personalized_pagerank_batch,
+    personalized_pagerank_batch_units,
     triangle_count,
+    weighted_sssp,
 )
 from graphdatabases_spark.graph.generators import chain_graph, grid_graph, ring_graph
 
@@ -305,6 +310,123 @@ class TestStrictMaxIters:
             )
         assert {r["comp"] for r in comp.collect()} == {0}
 
+    @pytest.mark.parametrize(
+        "kernel", ["kcore", "connected_components", "weighted_sssp"]
+    )
+    def test_exhaustion_warns_and_strict_raises(self, spark, kernel):
+        """Every fixpoint kernel reports an exhausted ``max_iters`` the
+        same way, through the one superstep driver: a RuntimeWarning
+        naming the cap and the fixpoint (the partial result is still
+        returned), or a RuntimeError under ``strict`` that releases every
+        cache of the call."""
+        import warnings as _w
+
+        chain = self._long_chain(spark)
+        # 5-node weighted chain: 4 relaxation rounds needed; cap at 2.
+        wchain = spark.createDataFrame(
+            [(i, i + 1, 1) for i in range(4)], "src long, dst long, w long"
+        )
+        run, cap, fragment = {
+            "kcore": (
+                lambda **kw: kcore(chain, k=2, max_iters=1, **kw),
+                1,
+                "partially-peeled",
+            ),
+            "connected_components": (
+                lambda **kw: connected_components(chain, max_iters=2, **kw),
+                2,
+                "components may be split",
+            ),
+            "weighted_sssp": (
+                lambda **kw: weighted_sssp(wchain, src=0, max_iters=2, **kw),
+                2,
+                "over-estimates",
+            ),
+        }[kernel]
+        # Strict first: the edge frames are fresh, so none of the caches
+        # the call persists can be an earlier call's.
+        before = _cached_rdd_ids(spark)
+        with pytest.raises(RuntimeError, match=f"max_iters={cap} exhausted") as err:
+            run(strategy="distributed", strict=True)
+        assert "fixpoint" in str(err.value) and fragment in str(err.value)
+        assert _cached_rdd_ids(spark) - before == set()
+        with _w.catch_warnings(record=True) as caught:
+            _w.simplefilter("always")
+            rows = run(strategy="distributed").collect()
+        assert rows  # the partial result is still returned
+        msgs = [str(c.message) for c in caught if c.category is RuntimeWarning]
+        assert len(msgs) == 1, msgs
+        assert f"max_iters={cap} exhausted" in msgs[0]
+        assert "fixpoint" in msgs[0] and fragment in msgs[0]
+
+
+def _cached_rdd_ids(spark) -> set[int]:
+    """Ids of the persisted RDDs that are not local checkpoints. A
+    ``localCheckpoint``'s blocks are registered as persisted too, but
+    they are the detached result itself and live until the frame is
+    garbage-collected; a cache a kernel forgot to release is the rest."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {
+        int(k)
+        for k in rdds.keySet().toArray()
+        if not rdds.get(k).rdd().isLocallyCheckpointed()
+    }
+
+
+class TestLineageIndependence:
+    """The superstep driver's release contract, on each of the nine
+    distributed kernels: a returned frame never reads a cache the kernel
+    released (it collects the same rows after ``clearCache``), and no
+    cache the kernel persisted outlives the call (after a ``strict``
+    raise too: ``TestStrictMaxIters``)."""
+
+    @pytest.fixture()
+    def edges(self, spark):
+        # A triangle with a tail and a separate pair: two components
+        # and a two-round peel. A fresh frame per case, so no case can
+        # reuse a cache that an earlier case left behind.
+        rows = [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (5, 6)]
+        return spark.createDataFrame(
+            [(s, d, (3 * s + d) % 4) for s, d in rows],
+            "src long, dst long, w long",
+        )
+
+    _KERNELS = {
+        "pagerank": lambda e: pagerank(e, num_iters=3, strategy="distributed"),
+        "personalized_pagerank": lambda e: personalized_pagerank(
+            e, [0, 5], num_iters=3, strategy="distributed"
+        ),
+        "personalized_pagerank_batch": lambda e: personalized_pagerank_batch(
+            e, [0, 5], num_iters=3, strategy="distributed"
+        ),
+        "personalized_pagerank_batch_units": (
+            lambda e: personalized_pagerank_batch_units(e, [0, 5], num_iters=3)
+        ),
+        "pagerank_units": lambda e: pagerank_units(
+            e, num_iters=3, strategy="distributed"
+        ),
+        "connected_components": lambda e: connected_components(
+            e, strategy="distributed"
+        ),
+        "label_propagation": lambda e: label_propagation(
+            e, num_iters=3, strategy="distributed"
+        ),
+        "kcore": lambda e: kcore(e, k=2, strategy="distributed"),
+        "weighted_sssp": lambda e: weighted_sssp(e, 0, strategy="distributed"),
+    }
+
+    @pytest.mark.parametrize("kernel", sorted(_KERNELS))
+    def test_result_survives_clear_cache_and_nothing_leaks(
+        self, spark, edges, kernel
+    ):
+        before = _cached_rdd_ids(spark)
+        out = self._KERNELS[kernel](edges)
+        assert _cached_rdd_ids(spark) - before == set()
+        first = sorted(tuple(r) for r in out.collect())
+        assert first
+        spark.catalog.clearCache()
+        assert sorted(tuple(r) for r in out.collect()) == first
+
 
 class TestWeightedSssp:
     """weighted_sssp: min-plus relaxation vs driver Dijkstra, plus the
@@ -357,26 +479,6 @@ class TestWeightedSssp:
         )
         with pytest.raises(ValueError, match="non-negative"):
             weighted_sssp(e, src=0)
-
-    def test_max_iters_exhaustion_warns_and_strict_raises(self, spark):
-        import warnings as _w
-
-        import pytest
-
-        from graphdatabases_spark.graph.algorithms import weighted_sssp
-
-        # 5-node chain needs 4 relaxation rounds; cap at 2.
-        e = spark.createDataFrame(
-            [(i, i + 1, 1) for i in range(4)], "src long, dst long, w long"
-        )
-        with _w.catch_warnings(record=True) as caught:
-            _w.simplefilter("always")
-            weighted_sssp(e, src=0, max_iters=2, strategy="distributed").collect()
-        assert any("fixpoint" in str(c.message) for c in caught)
-        with pytest.raises(RuntimeError, match="fixpoint"):
-            weighted_sssp(
-                e, src=0, max_iters=2, strategy="distributed", strict=True
-            )
 
 
 class TestPersonalizedPagerank:

@@ -7,7 +7,9 @@ import inspect
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from graphdatabases_spark.graph import algorithms as algorithms_module
 from graphdatabases_spark.graph import api as api_module
 from graphdatabases_spark.graph import model as model_module
 from graphdatabases_spark.graph.api import GraphEngine
@@ -229,14 +231,15 @@ class TestExactStats:
             assert [tuple(r) for r in df.collect()] == rows
 
 
-def test_driver_frames_come_from_local_frame():
+def test_driver_frames_come_from_local_frame(spark):
     """api.py and model.py call ``createDataFrame`` only inside
     ``local_frame``: a frame built from a Python list reports
     Long.MaxValue and silently flips ``auto`` to distributed. The
     symmetry and incremental-repair kernels may also hand it a pandas or
     Arrow frame (a ``pd.DataFrame(...)``/``pa.table(...)`` call, possibly
     under a conditional expression), but never anything that may be a
-    list."""
+    list. The ``_*_local`` paths of ``algorithms.py`` call it not at all,
+    and the local ``weighted_sssp`` result reports its exact size."""
     from graphdatabases_spark.relational import (
         graph_incremental_queries,
         graph_kernels,
@@ -275,6 +278,29 @@ def test_driver_frames_come_from_local_frame():
             c.lineno for c in calls(tree) if not (c.args and frame_ctor(c.args[0]))
         ]
         assert not stray, f"{mod.__name__}: createDataFrame at lines {stray}"
+
+    # The whole-graph kernels' driver-side paths return through the
+    # exact-size result helpers, never a createDataFrame of their own.
+    tree = ast.parse(inspect.getsource(algorithms_module))
+    local_paths = [
+        f for f in tree.body
+        if isinstance(f, ast.FunctionDef)
+        and f.name.startswith("_")
+        and f.name.endswith("_local")
+    ]
+    assert len(local_paths) >= 9, [f.name for f in local_paths]
+    stray = [f"{f.name}:{c.lineno}" for f in local_paths for c in calls(f)]
+    assert not stray, f"algorithms: createDataFrame in {stray}"
+    # A finite size lets an ``auto`` kernel that consumes the result
+    # still choose its local path.
+    edges = local_frame(
+        spark,
+        [(0, 1, 2), (1, 2, 2), (0, 2, 5)],
+        StructType.fromDDL("src BIGINT, dst BIGINT, w BIGINT"),
+    )
+    out = algorithms_module.weighted_sssp(edges, 0, strategy="local")
+    assert sorted(tuple(r) for r in out.collect()) == [(0, 0), (1, 2), (2, 4)]
+    assert 0 < _plan_size_bytes(out) <= _STATS_LOCAL_BYTES
 
 
 class TestIngest:

@@ -3,7 +3,7 @@
 For each requested entry: warm the plan shape at sf0.001, then time
 min-of-N at the target sf through the noop sink (computes every column,
 no sink cost, full plan visible in the SQL tab), and optionally dump
-``.explain('formatted')`` to ``plans/r14/<name>_<tag>.txt``.
+``.explain('formatted')`` to ``plans/<round>/<name>_<tag>.txt``.
 
 The bench's own timing methodology (count-of-3) is untouched — this
 tool exists so optimization work is guided by isolated computation
@@ -11,7 +11,7 @@ timings and plan shapes rather than the mixed bench run.
 
 Usage:
     python tools/profile_queries.py [--sf DIR] [--repeats N]
-        [--plans TAG] [--no-noop] name1 name2 ...
+        [--plans TAG] [--round RNN] [--no-noop] name1 name2 ...
 """
 
 from __future__ import annotations
@@ -41,6 +41,8 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--plans", default=None, help="dump plans with this tag")
+    ap.add_argument("--round", default="r14",
+                    help="plan dumps go to plans/<round>/ (default r14)")
     ap.add_argument("--no-noop", action="store_true",
                     help="time df.count() instead (bench methodology)")
     args = ap.parse_args()
@@ -53,8 +55,9 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     qs = queries()
-    plans_dir = Path(__file__).resolve().parents[1] / "plans" / "r14"
-    plans_dir.mkdir(parents=True, exist_ok=True)
+    plans_dir = Path(__file__).resolve().parents[1] / "plans" / args.round
+    if args.plans:
+        plans_dir.mkdir(parents=True, exist_ok=True)
 
     out: dict[str, float] = {}
     for name in args.names:
