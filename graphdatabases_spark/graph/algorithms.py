@@ -40,7 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from graphdatabases_spark.graph.model import PropertyGraph
+from graphdatabases_spark.graph.model import PropertyGraph, local_frame
 from graphdatabases_spark.graph.traversal import (
     CHECKPOINT_EVERY,
     LOCAL_EDGE_THRESHOLD,
@@ -422,8 +422,8 @@ def personalized_pagerank_batch(
     return _seed_walks(
         edges,
         seed_list,
-        _spark_of(edges).createDataFrame(
-            [(s, s, 1.0) for s in seed_list], SEED_RANK_SCHEMA
+        local_frame(
+            _spark_of(edges), [(s, s, 1.0) for s in seed_list], SEED_RANK_SCHEMA
         ),
         F.col("rank") / F.col("outdeg"),
         (base + F.lit(damping) * F.coalesce("msg", F.lit(0.0))).alias("rank"),
@@ -447,8 +447,10 @@ def _seed_walks(
     of materializing |V|×|S| state. ``value`` mirrors the dense
     recurrence term for term (base + d·Σ, the Σ aggregated FIRST), so
     the unrolled-CTE oracles replay it bit for bit."""
-    seed_keys = _spark_of(edges).createDataFrame(
-        [(s, s) for s in seed_list], "seed BIGINT, id BIGINT"
+    seed_keys = local_frame(
+        _spark_of(edges),
+        [(s, s) for s in seed_list],
+        StructType.fromDDL("seed BIGINT, id BIGINT"),
     )
     links = _out_links(edges)
 
@@ -506,9 +508,10 @@ def personalized_pagerank_batch_units(
     return _seed_walks(
         edges,
         seed_list,
-        _spark_of(edges).createDataFrame(
+        local_frame(
+            _spark_of(edges),
             [(s, s, unit_scale) for s in seed_list],
-            "seed BIGINT, id BIGINT, rank_units BIGINT",
+            StructType.fromDDL("seed BIGINT, id BIGINT, rank_units BIGINT"),
         ),
         F.expr("rank_units div outdeg"),
         (base + F.expr(f"({damping_pct} * coalesce(msg, 0)) div 100"))
@@ -1155,7 +1158,7 @@ def weighted_sssp(
         )
 
     return _supersteps(
-        _spark_of(edges).createDataFrame([(int(src), 0)], "id bigint, dist bigint"),
+        local_frame(_spark_of(edges), [(int(src), 0)], SSSP_SCHEMA),
         step,
         max_iters,
         changed=changed,

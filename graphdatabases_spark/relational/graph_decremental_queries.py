@@ -7,7 +7,7 @@ DELETE — deleting a true/matched element frees its neighbors, and the
 same priority-DAG predicate-flip cascade applies with the seed being
 the freed dependents (lower-priority neighbors of deleted-TRUE
 elements).  Both entries share the warm-phase machinery with their
-append siblings (`_mis_warm_repair`, `_line_warm_repair` in
+append siblings (`_mis_repair`, `_line_warm_repair` in
 graph_incremental_queries) — one cascade, both directions — and both
 oracles value-check warm == cold by unrolling the cold fixpoint of the
 PRUNED graph next to the cold fixpoint of the full graph (the same two
@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from graphdatabases_spark.graph.model import local_frame
 from graphdatabases_spark.graph.traversal import broadcast_side
 from graphdatabases_spark.relational.catalog import register
 from graphdatabases_spark.relational.graph_incremental_queries import (
@@ -33,14 +34,11 @@ from graphdatabases_spark.relational.graph_incremental_queries import (
     _MMI_ROUNDS,
     _line_warm_repair,
     _mi_round_sql,
-    _mis_warm_repair,
+    _mis_repair,
+    _mis_row_schema,
     _mmi_round_sql,
 )
-from graphdatabases_spark.relational.graph_kernels import (
-    _matching_kernel,
-    _mis_kernel,
-    _sym_partition_key,
-)
+from graphdatabases_spark.relational.graph_kernels import _matching_kernel
 from graphdatabases_spark.relational.graph_queries import (
     ENTITY_EDGES_SQL,
     entity_edges,
@@ -49,6 +47,9 @@ from graphdatabases_spark.relational.graph_queries import (
 # ---------------------------------------------------------------------------
 # MIS repair after an edge-batch DELETE
 # ---------------------------------------------------------------------------
+
+
+_MIS_DEC_SCHEMA = _mis_row_schema("n_kept_edges", "n_deleted_edges")
 
 
 def _mde_mis_union(tag: str) -> str:
@@ -136,180 +137,17 @@ def _mde_mis_union(tag: str) -> str:
     "membership checksums, the flip count, and independence/"
     "maximality proofs on the pruned graph, computed on both engines; "
     "pure-Python replay pin in tests/test_round14_graph.py. Scale "
-    "shape: base phase is the shared kernel; warm rounds scan the "
-    "once-checkpointed pruned adjacency-with-status relation against "
-    "a broadcast dirty set (the shared _mis_warm_repair), exchanged "
-    "work bounded by the cascade cone; an adjacency of at most "
-    "_SYM_LOCAL_EDGE_MAX rows is collected once and the cascade runs "
-    "on the driver.",
+    "shape: the append entry's (one _mis_repair, two edge masks): a "
+    "graph whose symmetric relation fits _SYM_LOCAL_EDGE_MAX rows is "
+    "collected once as Arrow and the whole entry runs in numpy on the "
+    "driver, about 5 Spark jobs; above the bound the base phase is "
+    "the shared kernel and warm rounds scan the once-checkpointed "
+    "pruned adjacency-with-status relation against a broadcast dirty "
+    "set (the shared _mis_warm_repair), exchanged work bounded by the "
+    "cascade cone.",
 )
 def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
-    from graphdatabases_spark.functions import text as T
-
-    edges = entity_edges(spark, sf, dedup=True).localCheckpoint(eager=True)
-    is_del = ((F.col("src") + F.col("dst")) % _MI_MOD) == 0
-    # One pass for both edge counts (round 14; was two full scans).
-    ecounts = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(is_del, 1)).alias("nd"),
-    ).collect()[0]
-    n_deleted_edges = ecounts["nd"]
-    n_kept_edges = ecounts["n"] - n_deleted_edges
-    mis_h = lambda c: T.portable_hash64(  # noqa: E731
-        F.concat(F.lit("mis"), c.cast("string"))
-    )
-    fverts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .withColumn("h", mis_h(F.col("id")))
-        .localCheckpoint(eager=True)
-    )
-    n_vertices = fverts.count()
-    # persist, NOT localCheckpoint (round 14 — the _sym_und_build
-    # finding): checkpointing after the repartition reports
-    # UnknownPartitioning and every kernel round's groupBy(src) would
-    # re-exchange the full symmetric relation.  Unpersisted after the
-    # maximality proof (the last consumer).
-    symf = (
-        edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(_sym_partition_key(n_vertices))
-        .persist()
-    )
-    # Base phase: cold kernel on the FULL pre-delete graph (the
-    # persisted prior result a dynamic pipeline would read back).
-    base_mis = _mis_kernel(spark, symf, fverts, n_vertices, None)
-    base_row = base_mis.agg(
-        F.count(F.lit(1)).cast("long").alias("sz"),
-        F.sum("id").cast("long").alias("cks"),
-    ).collect()[0]
-    # Warm phase over the PRUNED graph: statuses start at the full-
-    # graph MIS; adjacency-with-neighbor-status over kept edges only.
-    fstat = (
-        fverts.join(
-            broadcast_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
-            "id",
-            "left",
-        )
-        .select("id", "h", F.coalesce(F.col("s0"), F.lit(False)).alias("s"))
-        .localCheckpoint(eager=True)
-    )
-    symq = symf.filter(~is_del)
-    # persist + src-sorted (round 15): batch-stat pruning for the warm
-    # cascade's cone-filtered rounds — see graph_mis_incremental.
-    adj = (
-        symq.join(
-            broadcast_side(
-                fstat.select(
-                    F.col("id").alias("dst"),
-                    F.col("h").alias("nh"),
-                    F.col("s").alias("ns"),
-                ),
-                n_vertices,
-            ),
-            "dst",
-        )
-        .select("src", F.col("dst").alias("nid"), "nh", "ns")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    # Dirty seed: for each deleted symmetric edge, the LOWER-priority
-    # endpoint when the higher-priority endpoint was base-TRUE — only
-    # then did the dependent's blocked() lose a contributing term.
-    st = broadcast_side(fstat, n_vertices)
-    dele = symf.filter(is_del)
-    dirty_ids = (
-        dele.join(
-            st.select(
-                F.col("id").alias("src"),
-                F.col("h").alias("sh"),
-                F.col("s").alias("ssb"),
-            ),
-            "src",
-        )
-        .join(
-            st.select(
-                F.col("id").alias("dst"),
-                F.col("h").alias("dh"),
-            ),
-            "dst",
-        )
-        .filter(
-            F.col("ssb")
-            & (
-                F.struct(F.col("sh"), F.col("src"))
-                < F.struct(F.col("dh"), F.col("dst"))
-            )
-        )
-        .select(F.col("dst").alias("id"))
-        .distinct()
-    )
-    dirty = fstat.join(
-        broadcast_side(dirty_ids, 2 * n_deleted_edges), "id", "left_semi"
-    ).localCheckpoint(eager=True)
-    n_dirty = dirty.count()
-    delta, n_delta = _mis_warm_repair(
-        spark, adj, dirty, n_dirty, 2 * n_kept_edges
-    )
-    adj.unpersist()
-    final = (
-        fstat.join(
-            broadcast_side(
-                delta.select(F.col("id").alias("id"), F.col("s").alias("dls")),
-                n_delta,
-            ),
-            "id",
-            "left",
-        )
-        .select("id", F.coalesce(F.col("dls"), F.col("s")).alias("s"))
-        .localCheckpoint(eager=True)
-    )
-    warm_mis = final.filter(F.col("s")).select("id").localCheckpoint(eager=True)
-    warm_row = warm_mis.agg(
-        F.count(F.lit(1)).cast("long").alias("sz"),
-        F.sum("id").cast("long").alias("cks"),
-    ).collect()[0]
-    # Proof joins size-switch-broadcast the (known-count) MIS sides so
-    # the persisted symf streams without a sort-merge exchange (r14).
-    n_flipped = final.join(
-        broadcast_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
-        "id",
-        "left",
-    ).filter(F.col("s") != F.coalesce(F.col("s0"), F.lit(False))).count()
-    m_a = warm_mis.select(F.col("id").alias("aid"))
-    m_b = warm_mis.select(F.col("id").alias("bid"))
-    indep_viol = (
-        symq.join(broadcast_side(m_a, warm_row["sz"]), symq.src == F.col("aid"))
-        .join(broadcast_side(m_b, warm_row["sz"]), symq.dst == F.col("bid"))
-        .count()
-    )
-    covered = (
-        symq.join(broadcast_side(m_b, warm_row["sz"]), symq.dst == F.col("bid"))
-        .select(F.col("src").alias("id"))
-        .distinct()
-    )
-    uncov_viol = (
-        fverts.select("id")
-        .join(warm_mis, "id", "left_anti")
-        .join(covered, "id", "left_anti")
-        .count()
-    )
-    symf.unpersist()
-    return spark.range(1).select(
-        F.lit(n_vertices).cast("long").alias("n_vertices"),
-        F.lit(n_kept_edges).cast("long").alias("n_kept_edges"),
-        F.lit(n_deleted_edges).cast("long").alias("n_deleted_edges"),
-        F.lit(base_row["sz"]).cast("long").alias("base_mis_size"),
-        F.lit(base_row["cks"]).cast("long").alias("base_sum_ids"),
-        F.lit(warm_row["sz"]).cast("long").alias("warm_mis_size"),
-        F.lit(warm_row["cks"]).cast("long").alias("warm_sum_ids"),
-        F.lit(n_flipped).cast("long").alias("n_flipped"),
-        F.lit(indep_viol == 0).alias("independent"),
-        F.lit(uncov_viol == 0).alias("maximal"),
-        F.lit(True).alias("converged"),
-    )
+    return local_frame(spark, [_mis_repair(spark, sf, delete=True)], _MIS_DEC_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -4,14 +4,19 @@ graph analytics, the incremental family).
 Pure-move split out of graph_symmetry_queries.py (round 13 — that
 module was heading for the 2k bar with the b-matching addition): the
 priority-DAG cascade repairs for MIS and maximal matching after an
-edge-batch append, each with a sub-threshold driver-local cascade
-(MIS: one collect of the whole adjacency; matching: lazy adjacency
-fetches) and the distributed relaxation as the above-threshold path.  Same entries, same oracles, registry unchanged.
+edge-batch append.  The MIS repair (``_mis_repair``, shared with the
+deletion entry in graph_decremental_queries) gates at its start: when
+the symmetric relation fits ``_SYM_LOCAL_EDGE_MAX`` rows the edges come
+to the driver as one Arrow table and the whole entry — base MIS,
+cascade, proofs — runs in numpy; above the bound the base kernel, the
+distributed relaxation and the proof joins run as Spark jobs.  The
+matching repair keeps its sub-threshold driver-local cascade with lazy
+adjacency fetches.  Same entries, same oracles, registry unchanged.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
@@ -21,6 +26,7 @@ from graphdatabases_spark.relational.catalog import register
 from graphdatabases_spark.relational.graph_kernels import (
     _SYM_LOCAL_EDGE_MAX,
     _SYM_LOCAL_V_MAX,
+    _mis_greedy,
     _mis_kernel,
     _sym_partition_key,
 )
@@ -72,8 +78,6 @@ def _mi_mis_union(tag: str) -> str:
     )
 
 
-
-
 # Dirty-cone adjacency pruning (round 15, verdict item 3): once the
 # cascade's dirty set is this small, its ids are collected (a ~ms Arrow
 # pull of a checkpointed relation) and the round's two adjacency scans
@@ -103,95 +107,125 @@ def _segments(lo, hi):
     return np.arange(int(counts.sum())) + starts, owner
 
 
-def _mis_cascade_local(spark, adj: DataFrame, dirty: DataFrame):
-    """Driver-side ``_mis_warm_repair``: one Arrow collect of ``adj`` and
-    ``dirty``, then the same Jacobi rounds in numpy. Each round judges
-    every dirty vertex against the PREVIOUS round's statuses (blocked =
-    some strictly-higher-priority neighbour is true), flips the changed
-    ones into the delta, and takes the strictly-lower-priority
-    neighbours of each flip as the next dirty set. The returned delta
-    holds every vertex that ever flipped, with its final status: the
-    relation the distributed loop builds."""
+def _mis_row_schema(kept: str, changed: str) -> StructType:
+    """The one-row result of a MIS repair entry; ``kept``/``changed``
+    name its two edge-count columns."""
+    counts = ["n_vertices", kept, changed, "base_mis_size", "base_sum_ids",
+              "warm_mis_size", "warm_sum_ids", "n_flipped"]
+    return StructType(
+        [StructField(c, LongType()) for c in counts]
+        + [
+            StructField(c, BooleanType())
+            for c in ("independent", "maximal", "converged")
+        ]
+    )
+
+
+_MIS_INC_SCHEMA = _mis_row_schema("n_base_edges", "n_batch_edges")
+
+
+def _mis_repair_local(edges, delete: bool) -> tuple:
+    """A whole MIS repair entry on the driver, in numpy, over the Arrow
+    table of the deduplicated entity ``edges``: returns the entry's
+    result row.  Both entries are one computation with two edge masks
+    over the batch ``(src + dst) % _MI_MOD == 0``: the append entry's
+    base graph drops the batch and its warm graph has every edge; the
+    delete entry's base graph has every edge and its warm graph drops
+    the batch.  The steps are the distributed body's: the ``(h, id)``
+    priorities (md5-48 of ``'mis' || id``, as ``portable_hash64``); the
+    cold greedy MIS of the base graph over the vertices it touches; the
+    dirty seed (the lower-priority endpoint of every batch edge whose
+    higher-priority endpoint is base-true, plus every vertex without a
+    base edge); the priority-DAG cascade in Jacobi rounds — each round
+    judges every dirty vertex against the previous round's statuses
+    (blocked = some higher-priority neighbour is true), flips the
+    changed ones and takes the lower-priority neighbours of each flip
+    as the next dirty set; and the flip count and the independence and
+    maximality proofs on the warm graph."""
+    import hashlib
+
     import numpy as np
 
-    a = adj.select("src", "nid", "nh", "ns").toArrow()
-    d = dirty.select("id", "h", "s").toArrow()
-    src, nid, nh = (
-        np.asarray(a.column(c).to_numpy(), dtype=np.int64)
-        for c in ("src", "nid", "nh")
+    src, dst = (
+        np.asarray(edges.column(c).to_numpy(), dtype=np.int64)
+        for c in ("src", "dst")
     )
-    ns = np.asarray(a.column("ns").to_numpy(), dtype=bool)
-    did, dh = (
-        np.asarray(d.column(c).to_numpy(), dtype=np.int64) for c in ("id", "h")
+    batch = (src + dst) % _MI_MOD == 0
+    ids = np.unique(np.concatenate([src, dst]))
+    n = len(ids)
+    h = np.fromiter(
+        (int(hashlib.md5(b"mis%d" % v).hexdigest()[:12], 16) for v in ids.tolist()),
+        dtype=np.int64,
+        count=n,
     )
-    order = np.argsort(src, kind="stable")
-    src, nid, nh, ns = src[order], nid[order], nh[order], ns[order]
-    # Compact universe over every id the cascade can touch; per position
-    # its priority h and its effective status (base overlaid by delta).
-    uni = np.unique(np.concatenate([src, nid, did]))
-    lo = np.searchsorted(src, uni, side="left")
-    hi = np.searchsorted(src, uni, side="right")
-    npos = np.searchsorted(uni, nid)
-    h = np.zeros(len(uni), dtype=np.int64)
-    eff = np.zeros(len(uni), dtype=bool)
-    h[npos], eff[npos] = nh, ns
-    dpos = np.searchsorted(uni, did)
-    h[dpos] = dh
-    eff[dpos] = np.asarray(d.column("s").to_numpy(), dtype=bool)
-    flipped = np.zeros(len(uni), dtype=bool)
-    cur = np.unique(dpos)
+    rank = np.lexsort((ids, h)).argsort()
+    # The symmetric edge set as vertex positions, each row flagged when
+    # its edge is in the batch.
+    s = np.searchsorted(ids, np.concatenate([src, dst]))
+    d = np.searchsorted(ids, np.concatenate([dst, src]))
+    changed = np.concatenate([batch, batch])
+    every = np.ones_like(changed)
+    base_e, warm_e = (every, ~changed) if delete else (~changed, every)
+    touched = np.zeros(n, dtype=bool)
+    touched[s[base_e]] = True
+    base = _mis_greedy(rank, s[base_e], d[base_e]) & touched
+    dirty = ~touched
+    dirty[d[changed & base[s] & (rank[s] < rank[d])]] = True
+    # Warm graph as CSR: the neighbours of position v are
+    # nb[lo[v]:hi[v]].
+    order = np.argsort(s[warm_e], kind="stable")
+    ws, nb = s[warm_e][order], d[warm_e][order]
+    lo = np.searchsorted(ws, np.arange(n), side="left")
+    hi = np.searchsorted(ws, np.arange(n), side="right")
+    warm = base.copy()
+    cur = np.flatnonzero(dirty)
     while len(cur):
         e, owner = _segments(lo[cur], hi[cur])
-        v = cur[owner]
-        higher = (nh[e] < h[v]) | ((nh[e] == h[v]) & (nid[e] < uni[v]))
         blocked = np.zeros(len(cur), dtype=bool)
-        blocked[owner[eff[npos[e]] & higher]] = True
-        flip = cur[blocked == eff[cur]]  # new status (not blocked) differs
+        blocked[owner[warm[nb[e]] & (rank[nb[e]] < rank[cur[owner]])]] = True
+        flip = cur[blocked == warm[cur]]  # new status (not blocked) differs
         if not len(flip):
             break
-        eff[flip] = ~eff[flip]
-        flipped[flip] = True
+        warm[flip] = ~warm[flip]
         e, owner = _segments(lo[flip], hi[flip])
-        v = flip[owner]
-        lower = (nh[e] > h[v]) | ((nh[e] == h[v]) & (nid[e] > uni[v]))
-        cur = np.unique(npos[e[lower]])
-    rows = list(zip(uni[flipped].tolist(), eff[flipped].tolist()))
-    return local_frame(spark, rows, _MIS_DELTA_SCHEMA), len(rows)
+        cur = np.unique(nb[e[rank[nb[e]] > rank[flip[owner]]]])
+    covered = np.zeros(n, dtype=bool)
+    covered[ws[warm[nb]]] = True
+
+    def checksum(mask):  # Spark's sum over no rows is null
+        return int(ids[mask].sum()) if mask.any() else None
+
+    return (
+        n,
+        int((~batch).sum()),
+        int(batch.sum()),
+        int(base.sum()),
+        checksum(base),
+        int(warm.sum()),
+        checksum(warm),
+        int((base != warm).sum()),
+        not (warm[ws] & warm[nb]).any(),
+        bool((warm | covered).all()),
+        True,
+    )
 
 
-def _mis_warm_repair(
-    spark, adj: DataFrame, dirty: DataFrame, n_dirty: int, n_adj: int
-):
-    """Shared warm-phase cascade for the vertex-side (MIS) repair
-    entries: relax vertex statuses from the dirty seed until the
-    unique priority-DAG fixpoint, returning the ``(delta, n_delta)``
-    (id, s) status-override relation.  ``adj`` is the once-persisted
-    (src-sorted-within-partitions) adjacency-with-neighbor-status
-    relation (src, nid, nh, ns) over the POST-CHANGE graph (appended
-    for the incremental entry, pruned for the decremental one), with
-    ``n_adj`` rows; ``dirty`` carries (id, h, s) seed rows.  Extracted
-    from graph_mis_incremental (round 14) so the edge-DELETION repair
-    shares the loop.
+def _mis_warm_repair(spark, adj: DataFrame, dirty: DataFrame, n_dirty: int):
+    """Shared distributed warm-phase cascade for the vertex-side (MIS)
+    repair entries above the driver bound (graphs whose symmetric
+    relation exceeds _SYM_LOCAL_EDGE_MAX rows; smaller ones never get
+    here, see _mis_repair_local): relax vertex statuses from the dirty
+    seed until the unique priority-DAG fixpoint, returning the
+    ``(delta, n_delta)`` (id, s) status-override relation.  ``adj`` is
+    the once-persisted (src-sorted-within-partitions) adjacency-with-
+    neighbor-status relation (src, nid, nh, ns) over the POST-CHANGE
+    graph (appended for the incremental entry, pruned for the
+    decremental one); ``dirty`` carries (id, h, s) seed rows.
     """
     delta = local_frame(spark, [], _MIS_DELTA_SCHEMA)
     n_delta = 0
     if n_dirty == 0:
         return delta, n_delta
-    # Whole-adjacency bound: when all of ``adj`` fits the Arrow-collect
-    # bound the MIS kernel's tail uses (_SYM_LOCAL_EDGE_MAX rows), the
-    # cascade runs on the driver after ONE collect instead of ~5 actions
-    # per round.  The round-13 driver-local cascade that was reverted
-    # fetched neighbour lists lazily per dirty vertex, so hub adjacency
-    # was pulled round after round (sf1 wall 48.6 -> 74.6 s); this gate
-    # is decided before the loop from the row count the caller already
-    # knows, so no vertex degree can push a collect past the bound.
-    # Above it (sf0.1's symmetric adjacency has 2.7M rows) the
-    # distributed loop below runs unchanged.  The bound caps the driver
-    # collect; it is not the speed crossover: on 4 cores the local
-    # cascade took 0.7-2.0 s against 5.6-8.2 s distributed at 0.25M
-    # rows (sf0.01), and 3.5-4.4 s against 10-12 s at 2.7M rows.
-    if n_adj <= _SYM_LOCAL_EDGE_MAX:
-        return _mis_cascade_local(spark, adj, dirty)
     cone = _cone_ids(dirty, n_dirty)
     while n_dirty > 0:
         # The cascade cone: both of this round's adjacency consumers
@@ -302,6 +336,223 @@ def _mis_warm_repair(
     return delta, n_delta
 
 
+def _mis_repair(spark: SparkSession, sf: str, delete: bool) -> tuple:
+    """The result row of a MIS repair entry (``delete``: the deletion
+    one).  The gate sits at the start: the edge count and batch-edge
+    count are observed on the eager edge checkpoint itself, and when the
+    symmetric relation's ``2 * n`` rows fit ``_SYM_LOCAL_EDGE_MAX`` the
+    edges come to the driver as ONE Arrow table and the whole entry runs
+    in numpy (_mis_repair_local); above the bound the distributed body
+    runs.  The gate reads the exact row count before anything is
+    collected, so no hub degree can push the collect past the bound
+    (the reverted round-13 cascade pulled hub adjacency lazily, round
+    after round).  The bound caps driver memory; it is not the speed
+    crossover: on 4 cores the numpy cascade beat the distributed one
+    at both 0.25M (sf0.01) and 2.7M (sf0.1) symmetric rows."""
+    is_batch = ((F.col("src") + F.col("dst")) % _MI_MOD) == 0
+    obs = Observation()
+    edges = (
+        entity_edges(spark, sf, dedup=True)
+        .observe(
+            obs,
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(is_batch, 1)).alias("nb"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    n_edges, n_batch = obs.get["n"], obs.get["nb"]
+    if 2 * n_edges <= _SYM_LOCAL_EDGE_MAX:
+        return _mis_repair_local(edges.toArrow(), delete)
+    return _mis_repair_distributed(
+        spark, edges, n_edges, n_batch, is_batch, delete
+    )
+
+
+def _mis_repair_distributed(
+    spark,
+    edges: DataFrame,
+    n_edges: int,
+    n_batch: int,
+    is_batch: Column,
+    delete: bool,
+) -> tuple:
+    """_mis_repair above the driver bound: the base MIS by the shared
+    kernel, then the warm cascade (_mis_warm_repair) and the proofs as
+    Spark jobs.  ``edges`` is the checkpointed edge relation with
+    ``n_edges`` rows, ``n_batch`` of them ``is_batch``."""
+    from graphdatabases_spark.functions import text as T
+
+    mis_h = lambda c: T.portable_hash64(  # noqa: E731
+        F.concat(F.lit("mis"), c.cast("string"))
+    )
+    fverts = (
+        edges.select(F.col("src").alias("id"))
+        .unionByName(edges.select(F.col("dst").alias("id")))
+        .distinct()
+        .withColumn("h", mis_h(F.col("id")))
+        .localCheckpoint(eager=True)
+    )
+    n_vertices = fverts.count()
+    # persist, NOT localCheckpoint (round 14 — the _sym_und_build
+    # finding applied here too): a checkpointed frame reports
+    # UnknownPartitioning, so every kernel round's groupBy(src) would
+    # plan a fresh full exchange of the symmetric relation; the cached
+    # InMemoryRelation keeps hashpartitioning visible and those
+    # exchanges vanish.  Unpersisted after the maximality proof (the
+    # last consumer).
+    symf = (
+        edges.union(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        )
+        .repartition(_sym_partition_key(n_vertices))
+        .persist()
+    )
+    # The two edge masks: the base graph is the pre-change one (the
+    # persisted prior result a dynamic pipeline would read back) — all
+    # edges before a deletion, the non-batch ones before an append —
+    # and the warm graph the post-change one.
+    kept = symf.filter(~is_batch)
+    symb, symw = (symf, kept) if delete else (kept, symf)
+    # Base phase: the cold kernel over the base graph's whole vertex
+    # set, so its first probe is the known row count.
+    if delete:
+        bverts, n_bverts = fverts, n_vertices
+    else:
+        bverts = (
+            symb.select(F.col("src").alias("id"))
+            .distinct()
+            .withColumn("h", mis_h(F.col("id")))
+            .localCheckpoint(eager=True)
+        )
+        n_bverts = bverts.count()
+    n_base_edges = n_edges if delete else n_edges - n_batch
+    base_mis = _mis_kernel(spark, symb, bverts, n_bverts, 2 * n_base_edges)
+    base_row = base_mis.agg(
+        F.count(F.lit(1)).cast("long").alias("sz"),
+        F.sum("id").cast("long").alias("cks"),
+    ).collect()[0]
+    # Warm phase: statuses = base MIS membership (batch-new vertices
+    # start false), adjacency-with-neighbor-status over the post-change
+    # graph checkpointed ONCE.
+    fstat = (
+        fverts.join(
+            broadcast_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
+            "id",
+            "left",
+        )
+        .select("id", "h", F.coalesce(F.col("s0"), F.lit(False)).alias("s"))
+        .localCheckpoint(eager=True)
+    )
+    # persist + src-sorted-within-partitions (round 15): the warm
+    # cascade's late rounds filter src IN (cone) and the cached batch
+    # min/max stats then skip everything outside the dirty cone — a
+    # localCheckpoint would have no batch stats to prune with.
+    adj = (
+        symw.join(
+            broadcast_side(
+                fstat.select(
+                    F.col("id").alias("dst"),
+                    F.col("h").alias("nh"),
+                    F.col("s").alias("ns"),
+                ),
+                n_vertices,
+            ),
+            "dst",
+        )
+        .select("src", F.col("dst").alias("nid"), "nh", "ns")
+        .sortWithinPartitions("src")
+        .persist()
+    )
+    # Dirty seed, only vertices whose VALUE can move: for each batch
+    # edge, the LOWER-priority endpoint when the higher-priority one is
+    # base-TRUE (only true higher-priority neighbors feed blocked()),
+    # plus every batch-new vertex (it must compute its own status) —
+    # seeding every batch endpoint re-judged ~all of the hub
+    # neighborhoods for nothing.  Every dirty vertex is a batch
+    # endpoint, so 2 * n_batch bounds the set.
+    st = broadcast_side(fstat, n_vertices)
+    dirty_ids = (
+        symf.filter(is_batch)
+        .join(
+            st.select(
+                F.col("id").alias("src"),
+                F.col("h").alias("sh"),
+                F.col("s").alias("ssb"),
+            ),
+            "src",
+        )
+        .join(st.select(F.col("id").alias("dst"), F.col("h").alias("dh")), "dst")
+        .filter(
+            F.col("ssb")
+            & (
+                F.struct(F.col("sh"), F.col("src"))
+                < F.struct(F.col("dh"), F.col("dst"))
+            )
+        )
+        .select(F.col("dst").alias("id"))
+    )
+    if not delete:
+        dirty_ids = dirty_ids.unionByName(
+            fverts.select("id").join(
+                broadcast_side(bverts.select("id"), n_bverts), "id", "left_anti"
+            )
+        )
+    dirty = fstat.join(
+        broadcast_side(dirty_ids.distinct(), 2 * n_batch), "id", "left_semi"
+    ).localCheckpoint(eager=True)
+    n_dirty = dirty.count()
+    delta, n_delta = _mis_warm_repair(spark, adj, dirty, n_dirty)
+    adj.unpersist()
+    final = (
+        fstat.join(
+            broadcast_side(
+                delta.select(F.col("id").alias("id"), F.col("s").alias("dls")),
+                n_delta,
+            ),
+            "id",
+            "left",
+        )
+        .select("id", F.coalesce(F.col("dls"), F.col("s")).alias("s"))
+        .localCheckpoint(eager=True)
+    )
+    warm_mis = final.filter(F.col("s")).select("id").localCheckpoint(eager=True)
+    warm_row = warm_mis.agg(
+        F.count(F.lit(1)).cast("long").alias("sz"),
+        F.sum("id").cast("long").alias("cks"),
+    ).collect()[0]
+    # Proof joins size-switch-broadcast the (known-count) MIS sides so
+    # the persisted symf streams without a sort-merge exchange (r14).
+    n_flipped = final.join(
+        broadcast_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
+        "id",
+        "left",
+    ).filter(F.col("s") != F.coalesce(F.col("s0"), F.lit(False))).count()
+    m_a = warm_mis.select(F.col("id").alias("aid"))
+    m_b = warm_mis.select(F.col("id").alias("bid"))
+    indep_viol = (
+        symw.join(broadcast_side(m_a, warm_row["sz"]), symw.src == F.col("aid"))
+        .join(broadcast_side(m_b, warm_row["sz"]), symw.dst == F.col("bid"))
+        .count()
+    )
+    covered = (
+        symw.join(broadcast_side(m_b, warm_row["sz"]), symw.dst == F.col("bid"))
+        .select(F.col("src").alias("id"))
+        .distinct()
+    )
+    uncov_viol = (
+        fverts.select("id")
+        .join(warm_mis, "id", "left_anti")
+        .join(covered, "id", "left_anti")
+        .count()
+    )
+    symf.unpersist()
+    return (
+        n_vertices, n_edges - n_batch, n_batch, base_row["sz"],
+        base_row["cks"], warm_row["sz"], warm_row["cks"], n_flipped,
+        indep_viol == 0, uncov_viol == 0, True,
+    )
+
+
 @register(
     "graph_mis_incremental",
     oracle=f"""
@@ -386,212 +637,19 @@ def _mis_warm_repair(
     "appended graph, all computed on both engines. The repair-"
     "locality claim (dirty cone shrinks geometrically, warm rounds "
     "see a small fraction of |V|) is pinned by the pure-Python replay "
-    "in tests/test_round13_graph.py. Scale shape: base phase is the "
-    "shared kernel (once-partitioned sym, broadcast frontiers, "
-    "driver-local tail); warm rounds scan the once-checkpointed "
-    "src-partitioned adjacency-with-status relation against a "
-    "broadcast dirty set — zero exchange in the broadcast regime "
-    "beyond the cone-bounded distincts; an adjacency of at most "
-    "_SYM_LOCAL_EDGE_MAX rows is collected once and the cascade runs "
-    "on the driver.",
+    "in tests/test_round13_graph.py. Scale shape: both edge counts "
+    "are observed on the edge checkpoint job; a graph whose symmetric "
+    "relation fits _SYM_LOCAL_EDGE_MAX rows is collected once as Arrow "
+    "and the whole entry (priorities, base MIS, cascade, proofs) runs "
+    "in numpy on the driver, about 5 Spark jobs. Above the bound the "
+    "base phase is the shared kernel (once-partitioned sym, broadcast "
+    "frontiers, driver-local tail); warm rounds scan the once-"
+    "checkpointed src-partitioned adjacency-with-status relation "
+    "against a broadcast dirty set — zero exchange in the broadcast "
+    "regime beyond the cone-bounded distincts.",
 )
 def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
-    from graphdatabases_spark.functions import text as T
-
-    edges = entity_edges(spark, sf, dedup=True).localCheckpoint(eager=True)
-    is_batch = ((F.col("src") + F.col("dst")) % _MI_MOD) == 0
-    # One pass for both edge counts (round 14; was two full scans).
-    ecounts = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(is_batch, 1)).alias("nb"),
-    ).collect()[0]
-    n_batch_edges = ecounts["nb"]
-    n_base_edges = ecounts["n"] - n_batch_edges
-    mis_h = lambda c: T.portable_hash64(  # noqa: E731
-        F.concat(F.lit("mis"), c.cast("string"))
-    )
-    fverts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .withColumn("h", mis_h(F.col("id")))
-        .localCheckpoint(eager=True)
-    )
-    n_vertices = fverts.count()
-    # persist, NOT localCheckpoint (round 14 — the _sym_und_build
-    # finding applied here too): a checkpointed frame reports
-    # UnknownPartitioning, so every kernel round's groupBy(src) would
-    # plan a fresh full exchange of the symmetric relation; the cached
-    # InMemoryRelation keeps hashpartitioning visible and those
-    # exchanges vanish.  Unpersisted after the maximality proof (the
-    # last consumer).
-    symf = (
-        edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(_sym_partition_key(n_vertices))
-        .persist()
-    )
-    # Base phase: cold kernel on the pre-append graph (the persisted
-    # prior result an incremental pipeline would read back).
-    symb = symf.filter(((F.col("src") + F.col("dst")) % _MI_MOD) != 0)
-    bverts = (
-        symb.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("h", mis_h(F.col("id")))
-        .localCheckpoint(eager=True)
-    )
-    n_bverts = bverts.count()
-    base_mis = _mis_kernel(spark, symb, bverts, n_bverts, None)
-    base_row = base_mis.agg(
-        F.count(F.lit(1)).cast("long").alias("sz"),
-        F.sum("id").cast("long").alias("cks"),
-    ).collect()[0]
-    # Warm phase: statuses = base MIS membership (batch-new vertices
-    # start false), adjacency-with-neighbor-status checkpointed ONCE.
-    fstat = (
-        fverts.join(
-            broadcast_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
-            "id",
-            "left",
-        )
-        .select("id", "h", F.coalesce(F.col("s0"), F.lit(False)).alias("s"))
-        .localCheckpoint(eager=True)
-    )
-    # persist + src-sorted-within-partitions (round 15): the warm
-    # cascade's late rounds filter src IN (cone) and the cached batch
-    # min/max stats then skip everything outside the dirty cone — a
-    # localCheckpoint would have no batch stats to prune with.
-    adj = (
-        symf.join(
-            broadcast_side(
-                fstat.select(
-                    F.col("id").alias("dst"),
-                    F.col("h").alias("nh"),
-                    F.col("s").alias("ns"),
-                ),
-                n_vertices,
-            ),
-            "dst",
-        )
-        .select("src", F.col("dst").alias("nid"), "nh", "ns")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    # Initial dirty set, filtered to endpoints whose VALUE can actually
-    # move: a batch-NEW vertex (must compute its own status), or an
-    # existing endpoint whose new batch neighbor is base-TRUE with
-    # higher priority (only true higher-priority neighbors feed
-    # blocked()) — seeding every batch endpoint re-judged ~all of the
-    # hub neighborhoods for nothing.
-    st = broadcast_side(fstat, n_vertices)
-    cand = (
-        edges.filter(is_batch)
-        .join(
-            st.select(
-                F.col("id").alias("src"),
-                F.col("h").alias("sh"),
-                F.col("s").alias("ssb"),
-            ),
-            "src",
-        )
-        .join(
-            st.select(
-                F.col("id").alias("dst"),
-                F.col("h").alias("dh"),
-                F.col("s").alias("dsb"),
-            ),
-            "dst",
-        )
-    )
-    newv = fverts.select("id").join(
-        broadcast_side(bverts.select("id"), n_bverts), "id", "left_anti"
-    )
-    dirty_ids = (
-        cand.filter(
-            F.col("dsb")
-            & (
-                F.struct(F.col("dh"), F.col("dst"))
-                < F.struct(F.col("sh"), F.col("src"))
-            )
-        )
-        .select(F.col("src").alias("id"))
-        .unionByName(
-            cand.filter(
-                F.col("ssb")
-                & (
-                    F.struct(F.col("sh"), F.col("src"))
-                    < F.struct(F.col("dh"), F.col("dst"))
-                )
-            ).select(F.col("dst").alias("id"))
-        )
-        .unionByName(newv)
-        .distinct()
-    )
-    dirty = fstat.join(
-        broadcast_side(dirty_ids, 2 * n_batch_edges), "id", "left_semi"
-    ).localCheckpoint(eager=True)
-    n_dirty = dirty.count()
-    delta, n_delta = _mis_warm_repair(
-        spark, adj, dirty, n_dirty, 2 * ecounts["n"]
-    )
-    adj.unpersist()
-    final = (
-        fstat.join(
-            broadcast_side(
-                delta.select(F.col("id").alias("id"), F.col("s").alias("dls")),
-                n_delta,
-            ),
-            "id",
-            "left",
-        )
-        .select("id", F.coalesce(F.col("dls"), F.col("s")).alias("s"))
-        .localCheckpoint(eager=True)
-    )
-    warm_mis = final.filter(F.col("s")).select("id").localCheckpoint(eager=True)
-    warm_row = warm_mis.agg(
-        F.count(F.lit(1)).cast("long").alias("sz"),
-        F.sum("id").cast("long").alias("cks"),
-    ).collect()[0]
-    # Proof joins size-switch-broadcast the (known-count) MIS sides so
-    # the persisted symf streams without a sort-merge exchange (r14).
-    n_flipped = final.join(
-        broadcast_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
-        "id",
-        "left",
-    ).filter(F.col("s") != F.coalesce(F.col("s0"), F.lit(False))).count()
-    m_a = warm_mis.select(F.col("id").alias("aid"))
-    m_b = warm_mis.select(F.col("id").alias("bid"))
-    indep_viol = (
-        symf.join(broadcast_side(m_a, warm_row["sz"]), symf.src == F.col("aid"))
-        .join(broadcast_side(m_b, warm_row["sz"]), symf.dst == F.col("bid"))
-        .count()
-    )
-    covered = (
-        symf.join(broadcast_side(m_b, warm_row["sz"]), symf.dst == F.col("bid"))
-        .select(F.col("src").alias("id"))
-        .distinct()
-    )
-    uncov_viol = (
-        fverts.select("id")
-        .join(warm_mis, "id", "left_anti")
-        .join(covered, "id", "left_anti")
-        .count()
-    )
-    symf.unpersist()
-    return spark.range(1).select(
-        F.lit(n_vertices).cast("long").alias("n_vertices"),
-        F.lit(n_base_edges).cast("long").alias("n_base_edges"),
-        F.lit(n_batch_edges).cast("long").alias("n_batch_edges"),
-        F.lit(base_row["sz"]).cast("long").alias("base_mis_size"),
-        F.lit(base_row["cks"]).cast("long").alias("base_sum_ids"),
-        F.lit(warm_row["sz"]).cast("long").alias("warm_mis_size"),
-        F.lit(warm_row["cks"]).cast("long").alias("warm_sum_ids"),
-        F.lit(n_flipped).cast("long").alias("n_flipped"),
-        F.lit(indep_viol == 0).alias("independent"),
-        F.lit(uncov_viol == 0).alias("maximal"),
-        F.lit(True).alias("converged"),
-    )
+    return local_frame(spark, [_mis_repair(spark, sf, delete=False)], _MIS_INC_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -80,25 +80,31 @@ def _induced_local(
     return und.toPandas(), ind.select("src", "dst").toPandas()
 
 
-def _mis_greedy_py(verts_pdf, edges_pdf) -> list[int]:
-    """Driver-local lexicographically-first MIS: process vertices in
-    (h, id) order; a vertex joins iff no already-chosen neighbor killed
-    it.  Equals the parallel fixed-priority fixpoint exactly."""
-    adj: dict[int, list[int]] = {}
-    for s, d in zip(edges_pdf["src"].to_numpy(), edges_pdf["dst"].to_numpy()):
-        adj.setdefault(int(s), []).append(int(d))
-    order = sorted(
-        zip(verts_pdf["h"].to_numpy().tolist(), verts_pdf["id"].to_numpy().tolist())
-    )
-    mis: list[int] = []
-    killed: set[int] = set()
-    for _h, vid in order:
-        if vid in killed:
-            continue
-        mis.append(vid)
-        killed.add(vid)
-        for nb in adj.get(vid, ()):
-            killed.add(nb)
+def _mis_greedy(rank, src, dst):
+    """Driver-local lexicographically-first MIS: the membership mask
+    over vertex positions ``0..n-1`` ordered by ``rank`` (a permutation,
+    lowest first) for the symmetric edges ``(src, dst)`` given as
+    positions.  Runs the kernel's own rounds in numpy — a live vertex
+    wins when it ranks below every live neighbour, then winners and
+    their neighbours leave — so it equals both the parallel
+    fixed-priority fixpoint and the sequential greedy pass.  Self-loops
+    never block a vertex."""
+    import numpy as np
+
+    n = len(rank)
+    keep = src != dst
+    src, dst = src[keep], dst[keep]
+    mis = np.zeros(n, dtype=bool)
+    live = np.ones(n, dtype=bool)
+    while live.any():
+        e = live[src] & live[dst]
+        src, dst = src[e], dst[e]
+        lowest = np.full(n, n, dtype=rank.dtype)
+        np.minimum.at(lowest, src, rank[dst])
+        win = live & (rank < lowest)
+        mis |= win
+        live &= ~win
+        live[dst[win[src]]] = False
     return mis
 
 
@@ -235,7 +241,18 @@ def _mis_kernel(
             )
         full_set = False
         if tail is not None:
-            win = _ids_df(spark, _mis_greedy_py(*tail)).localCheckpoint(
+            import numpy as np
+
+            verts, ind = tail
+            order = np.argsort(verts["id"].to_numpy())
+            ids = verts["id"].to_numpy()[order]
+            rank = np.lexsort((ids, verts["h"].to_numpy()[order])).argsort()
+            mis_mask = _mis_greedy(
+                rank,
+                np.searchsorted(ids, ind["src"].to_numpy()),
+                np.searchsorted(ids, ind["dst"].to_numpy()),
+            )
+            win = _ids_df(spark, ids[mis_mask].tolist()).localCheckpoint(
                 eager=True
             )
             mis = win if mis is None else mis.unionByName(win)

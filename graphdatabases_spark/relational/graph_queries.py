@@ -1385,15 +1385,8 @@ def graph_cc_incremental(spark: SparkSession, sf: str) -> DataFrame:
 _MIS_ROUNDS = 8  # measured fixpoint: 4/4/5 rounds at sf0.001/0.01/0.1
 
 from graphdatabases_spark.relational.graph_kernels import (
-    _SYM_LOCAL_EDGE_MAX,
-    _SYM_LOCAL_V_MAX,
-    _ids_df,
-    _induced_local,
-    _matching_greedy_py,
     _matching_kernel,
-    _mis_greedy_py,
     _mis_kernel,
-    _sym_partition_key,
     _sym_und_build,
 )
 

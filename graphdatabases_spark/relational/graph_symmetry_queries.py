@@ -176,7 +176,7 @@ def graph_coloring_mis(spark: SparkSession, sf: str) -> DataFrame:
     full_set = True
     while n_rem > 0:
         # Full driver-local finish: once the residual-induced subgraph
-        # fits (graph_queries._SYM_LOCAL_EDGE_MAX), every remaining
+        # fits (graph_kernels._SYM_LOCAL_EDGE_MAX), every remaining
         # color class is one in-process MIS extraction — this is where
         # the 30-round BSP scheduling floor lived (the long tail of
         # tiny hub-forced classes), and the fixed priorities make the

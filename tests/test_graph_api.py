@@ -238,8 +238,8 @@ def test_driver_frames_come_from_local_frame(spark):
     symmetry and incremental-repair kernels may also hand it a pandas or
     Arrow frame (a ``pd.DataFrame(...)``/``pa.table(...)`` call, possibly
     under a conditional expression), but never anything that may be a
-    list. The ``_*_local`` paths of ``algorithms.py`` call it not at all,
-    and the local ``weighted_sssp`` result reports its exact size."""
+    list. No function of ``algorithms.py`` calls it, and the local
+    ``weighted_sssp`` result reports its exact size."""
     from graphdatabases_spark.relational import (
         graph_incremental_queries,
         graph_kernels,
@@ -279,18 +279,12 @@ def test_driver_frames_come_from_local_frame(spark):
         ]
         assert not stray, f"{mod.__name__}: createDataFrame at lines {stray}"
 
-    # The whole-graph kernels' driver-side paths return through the
+    # The whole-graph kernels build every driver-side frame (local
+    # results, seed and start frames) through local_frame or the
     # exact-size result helpers, never a createDataFrame of their own.
     tree = ast.parse(inspect.getsource(algorithms_module))
-    local_paths = [
-        f for f in tree.body
-        if isinstance(f, ast.FunctionDef)
-        and f.name.startswith("_")
-        and f.name.endswith("_local")
-    ]
-    assert len(local_paths) >= 9, [f.name for f in local_paths]
-    stray = [f"{f.name}:{c.lineno}" for f in local_paths for c in calls(f)]
-    assert not stray, f"algorithms: createDataFrame in {stray}"
+    stray = [c.lineno for c in calls(tree)]
+    assert not stray, f"algorithms: createDataFrame at lines {stray}"
     # A finite size lets an ``auto`` kernel that consumes the result
     # still choose its local path.
     edges = local_frame(

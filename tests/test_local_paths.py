@@ -1,8 +1,8 @@
 """Small-graph local paths of the incremental PageRank, CC-quotient and
 MIS-cascade loops.
 
-* The driver-side MIS cascade and the distributed one return the same
-  rows for the append and the deletion repair entries.
+* The MIS append and deletion repair entries return the same row from
+  their whole-entry numpy body and from their distributed body.
 * The quotient CC of ``graph_cc_incremental`` gives the same labels on
   both strategies, and the batch-size gate picks ``local`` at sf0.001.
 * A job budget per entry: a future plan estimate that flips one of the
@@ -27,14 +27,17 @@ from tests.test_round13_graph import SF_SMALL
 
 @pytest.mark.parametrize("name", ["graph_mis_incremental", "graph_mis_decremental"])
 def test_local_cascade_equals_distributed(spark, monkeypatch, name):
+    """The whole-entry numpy body runs once on the default run; with the
+    driver bound at 0 the distributed body runs without it, and both
+    return the same row."""
     calls = []
-    local_cascade = graph_incremental_queries._mis_cascade_local
+    local_repair = graph_incremental_queries._mis_repair_local
 
-    def spy(*args):
+    def spy(*args, **kwargs):
         calls.append(1)
-        return local_cascade(*args)
+        return local_repair(*args, **kwargs)
 
-    monkeypatch.setattr(graph_incremental_queries, "_mis_cascade_local", spy)
+    monkeypatch.setattr(graph_incremental_queries, "_mis_repair_local", spy)
     local = queries()[name](spark, SF_SMALL).collect()
     assert len(calls) == 1
     monkeypatch.setattr(graph_incremental_queries, "_SYM_LOCAL_EDGE_MAX", 0)
@@ -58,14 +61,17 @@ def test_quotient_cc_local_equals_distributed(spark):
 
 
 # Upper bounds on the Spark jobs of one build + count of each entry at
-# sf0.001, about 25% over the counts measured in the default test session
-# (8 shuffle partitions, 4 cores): 9 jobs for graph_pagerank_incremental,
-# 19 for graph_cc_incremental and 58 for graph_mis_incremental. With the
-# distributed loops they ran 62, 56 and 97.
+# sf0.001, at most about 25% over the counts measured in the default test
+# session (8 shuffle partitions, 4 cores): 9 jobs for
+# graph_pagerank_incremental, 19 for graph_cc_incremental and 7 for each
+# MIS repair entry. With the distributed loops the first three ran 62, 56
+# and 97; with only the MIS cascade on the driver the MIS entries ran 58
+# (append) and 54 (delete).
 _JOB_BUDGET = {
     "graph_pagerank_incremental": 11,
     "graph_cc_incremental": 24,
-    "graph_mis_incremental": 72,
+    "graph_mis_incremental": 8,
+    "graph_mis_decremental": 8,
 }
 
 
