@@ -506,8 +506,9 @@ def _local_result_df(spark: SparkSession, rows: list, schema: StructType) -> Dat
     if rows and not any(isinstance(f.dataType, ArrayType) for f in schema.fields):
         import pandas as pd
 
-        pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
-        return spark.createDataFrame(pdf, schema)
+        return spark.createDataFrame(
+            pd.DataFrame(rows, columns=[f.name for f in schema.fields]), schema
+        )
     if rows and len(rows) == 1 and _all_integral(rows, schema):
         # The 1-ROW array-typed result (the SSP path): render as ONE
         # SQL statement — a single py4j round-trip. The Arrow batch
@@ -564,8 +565,9 @@ def _numpy_result_df(
     per-row conversion; the arrays are handed to pandas zero-copy."""
     import pandas as pd
 
-    pdf = pd.DataFrame(arrays, columns=[f.name for f in schema.fields])
-    return spark.createDataFrame(pdf, schema)
+    return spark.createDataFrame(
+        pd.DataFrame(arrays, columns=[f.name for f in schema.fields]), schema
+    )
 
 
 def _ssp_numpy(
@@ -773,7 +775,7 @@ def _bfs_distributed(
     spark = _spark_of(edges)
     sides = _EdgeSides(edges)
     try:
-        frontier = spark.createDataFrame([(src, 0)], DIST_SCHEMA)
+        frontier = local_frame(spark, [(src, 0)], DIST_SCHEMA)
         visited = frontier
         visited_rows = 1
         frontier_rows = 1
@@ -970,7 +972,7 @@ def khop(
             eager=True
         )
         if include_root:
-            root = spark.createDataFrame([(src,)], "id long")
+            root = local_frame(spark, [(src,)], StructType.fromDDL("id long"))
             return result.union(root).distinct()
         # Cycle check: any edge u → src where dist(u) ≤ hops-1.
         closers = (
@@ -983,7 +985,7 @@ def khop(
             .limit(1)
         )
         if closers.count() > 0:
-            root = spark.createDataFrame([(src,)], "id long")
+            root = local_frame(spark, [(src,)], StructType.fromDDL("id long"))
             return result.union(root).distinct()
         return result
 
@@ -1032,10 +1034,11 @@ def _ssp_distributed(
     """
     spark = _spark_of(edges)
     if src == dst:
-        return spark.createDataFrame([(0, [src])], PATH_SCHEMA)
+        return local_frame(spark, [(0, [src])], PATH_SCHEMA)
     sides = _EdgeSides(edges)
     try:
-        frontier = spark.createDataFrame(
+        frontier = local_frame(
+            spark,
             [(src, [src])],
             StructType(
                 [

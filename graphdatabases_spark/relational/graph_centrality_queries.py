@@ -11,7 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from graphdatabases_spark.graph.model import local_frame
 from graphdatabases_spark.graph.traversal import broadcast_side
 from graphdatabases_spark.relational.catalog import register, table
 from graphdatabases_spark.relational.graph_queries import (
@@ -752,8 +754,10 @@ def graph_betweenness_sampled(spark: SparkSession, sf: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    l0 = spark.createDataFrame(
-        [(s, s, 1) for s in _BC_SEEDS], "seed INT, node BIGINT, sigma BIGINT"
+    l0 = local_frame(
+        spark,
+        [(s, s, 1) for s in _BC_SEEDS],
+        StructType.fromDDL("seed INT, node BIGINT, sigma BIGINT"),
     )
     levels = [l0]
     visited = l0.select("seed", "node")

@@ -14,8 +14,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
+from graphdatabases_spark.graph.model import local_frame
 from graphdatabases_spark.graph.traversal import broadcast_side
 from graphdatabases_spark.relational.catalog import register, table
 from graphdatabases_spark.relational.graph_centrality_queries import (
@@ -619,7 +621,7 @@ def graph_louvain_multilevel(spark: SparkSession, sf: str) -> DataFrame:
     mm = e0.agg(F.count(F.lit(1)).cast("long").alias("m")).localCheckpoint(
         eager=True
     )
-    stats_schema = (
+    stats_schema = StructType.fromDDL(
         "level long, n_nodes long, n_comm_before long, n_comm_after long, "
         "n_moves long, gain_2m2 long, q_before_ppm long, q_after_ppm long"
     )
@@ -662,7 +664,8 @@ def graph_louvain_multilevel(spark: SparkSession, sf: str) -> DataFrame:
         else:
             post_l, st = _wlm_pass_local(local_wg, local_lab, m_int)
             level_rows.append(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [(
                         lvl,
                         st["n_nodes"],

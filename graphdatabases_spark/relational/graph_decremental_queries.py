@@ -6,9 +6,10 @@ entries repair after an edge-batch APPEND, these repair after a batch
 DELETE — deleting a true/matched element frees its neighbors, and the
 same priority-DAG predicate-flip cascade applies with the seed being
 the freed dependents (lower-priority neighbors of deleted-TRUE
-elements).  Both entries share the warm-phase machinery with their
-append siblings (`_mis_repair`, `_line_warm_repair` in
-graph_incremental_queries) — one cascade, both directions — and both
+elements).  Both entries share their repair with their append
+siblings in graph_incremental_queries — `_mis_repair` (one numpy body,
+on the driver or in one executor task) and `_line_warm_repair` — one
+cascade, both directions — and both
 oracles value-check warm == cold by unrolling the cold fixpoint of the
 PRUNED graph next to the cold fixpoint of the full graph (the same two
 graphs the append entries unroll with roles swapped, so the unroll
@@ -137,14 +138,11 @@ def _mde_mis_union(tag: str) -> str:
     "membership checksums, the flip count, and independence/"
     "maximality proofs on the pruned graph, computed on both engines; "
     "pure-Python replay pin in tests/test_round14_graph.py. Scale "
-    "shape: the append entry's (one _mis_repair, two edge masks): a "
-    "graph whose symmetric relation fits _SYM_LOCAL_EDGE_MAX rows is "
-    "collected once as Arrow and the whole entry runs in numpy on the "
-    "driver, about 5 Spark jobs; above the bound the base phase is "
-    "the shared kernel and warm rounds scan the once-checkpointed "
-    "pruned adjacency-with-status relation against a broadcast dirty "
-    "set (the shared _mis_warm_repair), exchanged work bounded by the "
-    "cascade cone.",
+    "shape: the append entry's (one _mis_repair, two edge masks): the "
+    "whole entry is one numpy body over the Arrow edge table, on the "
+    "driver when the symmetric relation fits _SYM_LOCAL_EDGE_MAX rows "
+    "and in one executor task above it, about 5 Spark jobs either "
+    "way.",
 )
 def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
     return local_frame(spark, [_mis_repair(spark, sf, delete=True)], _MIS_DEC_SCHEMA)

@@ -5,18 +5,19 @@ Pure-move split out of graph_symmetry_queries.py (round 13 — that
 module was heading for the 2k bar with the b-matching addition): the
 priority-DAG cascade repairs for MIS and maximal matching after an
 edge-batch append.  The MIS repair (``_mis_repair``, shared with the
-deletion entry in graph_decremental_queries) gates at its start: when
-the symmetric relation fits ``_SYM_LOCAL_EDGE_MAX`` rows the edges come
-to the driver as one Arrow table and the whole entry — base MIS,
-cascade, proofs — runs in numpy; above the bound the base kernel, the
-distributed relaxation and the proof joins run as Spark jobs.  The
-matching repair keeps its sub-threshold driver-local cascade with lazy
-adjacency fetches.  Same entries, same oracles, registry unchanged.
+deletion entry in graph_decremental_queries) is one numpy body over the
+entry's Arrow edge table — base MIS, cascade, proofs — run on the
+driver when the symmetric relation fits ``_SYM_LOCAL_EDGE_MAX`` rows
+and in one executor task above it.  The matching repair keeps its
+sub-threshold driver-local cascade with lazy adjacency fetches.  Same
+entries, same oracles, registry unchanged.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from functools import partial
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
@@ -27,8 +28,6 @@ from graphdatabases_spark.relational.graph_kernels import (
     _SYM_LOCAL_EDGE_MAX,
     _SYM_LOCAL_V_MAX,
     _mis_greedy,
-    _mis_kernel,
-    _sym_partition_key,
 )
 from graphdatabases_spark.relational.graph_queries import (
     ENTITY_EDGES_SQL,
@@ -43,10 +42,6 @@ _MI_MOD = 20      # (src + dst) % 20 == 0 -> the ~5% "appended" batch
                   # (the graph_pagerank_incremental split, symmetric in
                   # src/dst so it filters the symmetrized relation too)
 _MI_ROUNDS = 8    # oracle unroll per phase (measured fixpoints below)
-
-_MIS_DELTA_SCHEMA = StructType(
-    [StructField("id", LongType()), StructField("s", BooleanType())]
-)
 
 
 def _mi_round_sql(tag: str, k: int) -> str:
@@ -78,24 +73,6 @@ def _mi_mis_union(tag: str) -> str:
     )
 
 
-# Dirty-cone adjacency pruning (round 15, verdict item 3): once the
-# cascade's dirty set is this small, its ids are collected (a ~ms Arrow
-# pull of a checkpointed relation) and the round's two adjacency scans
-# filter ``src IN (ids)`` FIRST — the adjacency is persisted sorted by
-# src, so the InMemoryTableScan's per-batch min/max stats skip every
-# cached batch outside the cone instead of streaming all of symf per
-# round.  The literal list is capped so the filter expression stays
-# trivial; above the cap (the seed round) the full scan is the honest
-# cost.
-_CONE_PRUNE_MAX = 1024
-
-
-def _cone_ids(dirty: DataFrame, n_dirty: int) -> "list[int] | None":
-    if not (0 < n_dirty <= _CONE_PRUNE_MAX):
-        return None
-    return [int(v) for v in dirty.select("id").toPandas()["id"]]
-
-
 def _segments(lo, hi):
     """Concatenated row indices of the CSR segments ``[lo[i], hi[i])``
     and, per row, the index ``i`` of the segment it came from."""
@@ -125,23 +102,22 @@ _MIS_INC_SCHEMA = _mis_row_schema("n_base_edges", "n_batch_edges")
 
 
 def _mis_repair_local(edges, delete: bool) -> tuple:
-    """A whole MIS repair entry on the driver, in numpy, over the Arrow
-    table of the deduplicated entity ``edges``: returns the entry's
-    result row.  Both entries are one computation with two edge masks
-    over the batch ``(src + dst) % _MI_MOD == 0``: the append entry's
-    base graph drops the batch and its warm graph has every edge; the
-    delete entry's base graph has every edge and its warm graph drops
-    the batch.  The steps are the distributed body's: the ``(h, id)``
-    priorities (md5-48 of ``'mis' || id``, as ``portable_hash64``); the
-    cold greedy MIS of the base graph over the vertices it touches; the
-    dirty seed (the lower-priority endpoint of every batch edge whose
-    higher-priority endpoint is base-true, plus every vertex without a
-    base edge); the priority-DAG cascade in Jacobi rounds — each round
-    judges every dirty vertex against the previous round's statuses
-    (blocked = some higher-priority neighbour is true), flips the
-    changed ones and takes the lower-priority neighbours of each flip
-    as the next dirty set; and the flip count and the independence and
-    maximality proofs on the warm graph."""
+    """A whole MIS repair entry in numpy over the Arrow table of the
+    deduplicated entity ``edges``: returns the entry's result row.  Both
+    entries are one computation with two edge masks over the batch
+    ``(src + dst) % _MI_MOD == 0``: the append entry's base graph drops
+    the batch and its warm graph has every edge; the delete entry's
+    base graph has every edge and its warm graph drops the batch.  The
+    steps: the ``(h, id)`` priorities (md5-48 of ``'mis' || id``, as
+    ``portable_hash64``); the cold greedy MIS of the base graph over the
+    vertices it touches; the dirty seed (the lower-priority endpoint of
+    every batch edge whose higher-priority endpoint is base-true, plus
+    every vertex without a base edge); the priority-DAG cascade in
+    Jacobi rounds — each round judges every dirty vertex against the
+    previous round's statuses (blocked = some higher-priority neighbour
+    is true), flips the changed ones and takes the lower-priority
+    neighbours of each flip as the next dirty set; and the flip count
+    and the independence and maximality proofs on the warm graph."""
     import hashlib
 
     import numpy as np
@@ -151,7 +127,10 @@ def _mis_repair_local(edges, delete: bool) -> tuple:
         for c in ("src", "dst")
     )
     batch = (src + dst) % _MI_MOD == 0
-    ids = np.unique(np.concatenate([src, dst]))
+    # The symmetric edge set as vertex positions, each row flagged when
+    # its edge is in the batch.
+    ids, s = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    d = np.concatenate([s[len(src):], s[: len(src)]])
     n = len(ids)
     h = np.fromiter(
         (int(hashlib.md5(b"mis%d" % v).hexdigest()[:12], 16) for v in ids.tolist()),
@@ -159,10 +138,6 @@ def _mis_repair_local(edges, delete: bool) -> tuple:
         count=n,
     )
     rank = np.lexsort((ids, h)).argsort()
-    # The symmetric edge set as vertex positions, each row flagged when
-    # its edge is in the batch.
-    s = np.searchsorted(ids, np.concatenate([src, dst]))
-    d = np.searchsorted(ids, np.concatenate([dst, src]))
     changed = np.concatenate([batch, batch])
     every = np.ones_like(changed)
     base_e, warm_e = (every, ~changed) if delete else (~changed, every)
@@ -172,8 +147,8 @@ def _mis_repair_local(edges, delete: bool) -> tuple:
     dirty = ~touched
     dirty[d[changed & base[s] & (rank[s] < rank[d])]] = True
     # Warm graph as CSR: the neighbours of position v are
-    # nb[lo[v]:hi[v]].
-    order = np.argsort(s[warm_e], kind="stable")
+    # nb[lo[v]:hi[v]], in no particular order.
+    order = np.argsort(s[warm_e])
     ws, nb = s[warm_e][order], d[warm_e][order]
     lo = np.searchsorted(ws, np.arange(n), side="left")
     hi = np.searchsorted(ws, np.arange(n), side="right")
@@ -210,347 +185,49 @@ def _mis_repair_local(edges, delete: bool) -> tuple:
     )
 
 
-def _mis_warm_repair(spark, adj: DataFrame, dirty: DataFrame, n_dirty: int):
-    """Shared distributed warm-phase cascade for the vertex-side (MIS)
-    repair entries above the driver bound (graphs whose symmetric
-    relation exceeds _SYM_LOCAL_EDGE_MAX rows; smaller ones never get
-    here, see _mis_repair_local): relax vertex statuses from the dirty
-    seed until the unique priority-DAG fixpoint, returning the
-    ``(delta, n_delta)`` (id, s) status-override relation.  ``adj`` is
-    the once-persisted (src-sorted-within-partitions) adjacency-with-
-    neighbor-status relation (src, nid, nh, ns) over the POST-CHANGE
-    graph (appended for the incremental entry, pruned for the
-    decremental one); ``dirty`` carries (id, h, s) seed rows.
-    """
-    delta = local_frame(spark, [], _MIS_DELTA_SCHEMA)
-    n_delta = 0
-    if n_dirty == 0:
-        return delta, n_delta
-    cone = _cone_ids(dirty, n_dirty)
-    while n_dirty > 0:
-        # The cascade cone: both of this round's adjacency consumers
-        # (the blocked() probe over `dirty` and the propagation over
-        # `changed` ⊆ `dirty`) read only rows with src in the dirty
-        # set, so the batch-pruned slice is exact.
-        adjr = (
-            adj.filter(F.col("src").isin(cone)) if cone is not None else adj
-        )
-        # Recompute each dirty vertex from its strictly-higher-priority
-        # neighbors' effective statuses (base overlaid with delta).
-        nb = adjr.join(
-            broadcast_side(
-                dirty.select(
-                    F.col("id").alias("d"),
-                    F.col("h").alias("dh"),
-                    F.col("s").alias("dscur"),
-                ),
-                n_dirty,
-            ),
-            adj.src == F.col("d"),
-        ).join(
-            broadcast_side(
-                delta.select(
-                    F.col("id").alias("nid"), F.col("s").alias("dls")
-                ),
-                n_delta,
-            ),
-            "nid",
-            "left",
-        )
-        blocked = (
-            nb.filter(
-                F.coalesce(F.col("dls"), F.col("ns"))
-                & (
-                    F.struct(F.col("nh"), F.col("nid"))
-                    < F.struct(F.col("dh"), F.col("d"))
-                )
-            )
-            .select("d")
-            .distinct()
-        )
-        changed = (
-            dirty.join(
-                broadcast_side(blocked, n_dirty), dirty.id == blocked.d, "left"
-            )
-            .withColumn("s_new", F.col("d").isNull())
-            .filter(F.col("s_new") != F.col("s"))
-            .select("id", "h", F.col("s_new").alias("s"))
-            .localCheckpoint(eager=True)
-        )
-        n_changed = changed.count()
-        if n_changed == 0:
-            break
-        # The overlay is referenced twice per round (blocked + dirty
-        # rebuild), so it stays eager-checkpointed — a lazy chain was
-        # tried (round 14) and re-evaluated k nested broadcast builds
-        # per reference, quadratic in rounds.  Only the per-round
-        # delta.count() is dropped: n_delta becomes an upper BOUND
-        # (sum of flip counts; a vertex flipping twice counts twice),
-        # which is only ever used for the size-switched broadcast
-        # decision — conservative is correct.
-        delta = (
-            delta.join(changed.select("id"), "id", "left_anti")
-            .unionByName(changed.select("id", "s"))
-            .localCheckpoint(eager=True)
-        )
-        n_delta += n_changed
-        # Propagate: strictly-lower-priority neighbors of every flip
-        # become the next dirty set (their dependency just changed).
-        cand = (
-            adjr.join(
-                broadcast_side(
-                    changed.select(
-                        F.col("id").alias("c"), F.col("h").alias("ch")
-                    ),
-                    n_changed,
-                ),
-                adjr.src == F.col("c"),
-            )
-            .filter(
-                F.struct(F.col("nh"), F.col("nid"))
-                > F.struct(F.col("ch"), F.col("c"))
-            )
-            .select(
-                F.col("nid").alias("id"),
-                F.col("nh").alias("h"),
-                F.col("ns").alias("sb"),
-            )
-            .distinct()
-        )
-        dirty = (
-            cand.join(
-                broadcast_side(
-                    delta.select(F.col("id").alias("id"), F.col("s").alias("dls")),
-                    n_delta,
-                ),
-                "id",
-                "left",
-            )
-            .select(
-                "id", "h", F.coalesce(F.col("dls"), F.col("sb")).alias("s")
-            )
-            .localCheckpoint(eager=True)
-        )
-        n_dirty = dirty.count()
-        cone = _cone_ids(dirty, n_dirty)
-    return delta, n_delta
+def _mis_repair_task(batches, delete: bool):
+    """_mis_repair_local in an executor: the one task of a coalesced
+    edge relation gets every edge batch and yields the entry's row."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    row = _mis_repair_local(pa.Table.from_batches(list(batches)), delete)
+    yield pa.RecordBatch.from_pylist(
+        [dict(zip(_MIS_INC_SCHEMA.names, row))],
+        schema=to_arrow_schema(_MIS_INC_SCHEMA),
+    )
+
+
+def _mis_task_frame(edges: DataFrame, delete: bool) -> DataFrame:
+    """The one-row frame that runs _mis_repair_local over ``edges`` in a
+    single executor task (the row is positional: the deletion entry's
+    two edge-count columns carry the append entry's names here)."""
+    return edges.coalesce(1).mapInArrow(
+        partial(_mis_repair_task, delete=delete), _MIS_INC_SCHEMA
+    )
 
 
 def _mis_repair(spark: SparkSession, sf: str, delete: bool) -> tuple:
     """The result row of a MIS repair entry (``delete``: the deletion
-    one).  The gate sits at the start: the edge count and batch-edge
-    count are observed on the eager edge checkpoint itself, and when the
-    symmetric relation's ``2 * n`` rows fit ``_SYM_LOCAL_EDGE_MAX`` the
-    edges come to the driver as ONE Arrow table and the whole entry runs
-    in numpy (_mis_repair_local); above the bound the distributed body
-    runs.  The gate reads the exact row count before anything is
-    collected, so no hub degree can push the collect past the bound
-    (the reverted round-13 cascade pulled hub adjacency lazily, round
-    after round).  The bound caps driver memory; it is not the speed
-    crossover: on 4 cores the numpy cascade beat the distributed one
-    at both 0.25M (sf0.01) and 2.7M (sf0.1) symmetric rows."""
-    is_batch = ((F.col("src") + F.col("dst")) % _MI_MOD) == 0
+    one), computed by _mis_repair_local wherever the edges fit.  The
+    edge count is observed on the eager edge checkpoint itself, before
+    anything is collected, so no hub degree can push a collect past the
+    bound.  When the symmetric relation's ``2 * n`` rows fit
+    ``_SYM_LOCAL_EDGE_MAX`` the edges come to the driver as one Arrow
+    table; above it the checkpointed edges go to one executor task
+    through Arrow (_mis_task_frame) and only the result row comes back.
+    The bound caps driver memory; it is not a speed crossover.  The
+    driver host skips the task's Python worker launch, which shows at
+    the small end (SCALE.md)."""
     obs = Observation()
     edges = (
         entity_edges(spark, sf, dedup=True)
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.count(F.when(is_batch, 1)).alias("nb"),
-        )
+        .observe(obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    n_edges, n_batch = obs.get["n"], obs.get["nb"]
-    if 2 * n_edges <= _SYM_LOCAL_EDGE_MAX:
+    if 2 * obs.get["n"] <= _SYM_LOCAL_EDGE_MAX:
         return _mis_repair_local(edges.toArrow(), delete)
-    return _mis_repair_distributed(
-        spark, edges, n_edges, n_batch, is_batch, delete
-    )
-
-
-def _mis_repair_distributed(
-    spark,
-    edges: DataFrame,
-    n_edges: int,
-    n_batch: int,
-    is_batch: Column,
-    delete: bool,
-) -> tuple:
-    """_mis_repair above the driver bound: the base MIS by the shared
-    kernel, then the warm cascade (_mis_warm_repair) and the proofs as
-    Spark jobs.  ``edges`` is the checkpointed edge relation with
-    ``n_edges`` rows, ``n_batch`` of them ``is_batch``."""
-    from graphdatabases_spark.functions import text as T
-
-    mis_h = lambda c: T.portable_hash64(  # noqa: E731
-        F.concat(F.lit("mis"), c.cast("string"))
-    )
-    fverts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .withColumn("h", mis_h(F.col("id")))
-        .localCheckpoint(eager=True)
-    )
-    n_vertices = fverts.count()
-    # persist, NOT localCheckpoint (round 14 — the _sym_und_build
-    # finding applied here too): a checkpointed frame reports
-    # UnknownPartitioning, so every kernel round's groupBy(src) would
-    # plan a fresh full exchange of the symmetric relation; the cached
-    # InMemoryRelation keeps hashpartitioning visible and those
-    # exchanges vanish.  Unpersisted after the maximality proof (the
-    # last consumer).
-    symf = (
-        edges.union(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .repartition(_sym_partition_key(n_vertices))
-        .persist()
-    )
-    # The two edge masks: the base graph is the pre-change one (the
-    # persisted prior result a dynamic pipeline would read back) — all
-    # edges before a deletion, the non-batch ones before an append —
-    # and the warm graph the post-change one.
-    kept = symf.filter(~is_batch)
-    symb, symw = (symf, kept) if delete else (kept, symf)
-    # Base phase: the cold kernel over the base graph's whole vertex
-    # set, so its first probe is the known row count.
-    if delete:
-        bverts, n_bverts = fverts, n_vertices
-    else:
-        bverts = (
-            symb.select(F.col("src").alias("id"))
-            .distinct()
-            .withColumn("h", mis_h(F.col("id")))
-            .localCheckpoint(eager=True)
-        )
-        n_bverts = bverts.count()
-    n_base_edges = n_edges if delete else n_edges - n_batch
-    base_mis = _mis_kernel(spark, symb, bverts, n_bverts, 2 * n_base_edges)
-    base_row = base_mis.agg(
-        F.count(F.lit(1)).cast("long").alias("sz"),
-        F.sum("id").cast("long").alias("cks"),
-    ).collect()[0]
-    # Warm phase: statuses = base MIS membership (batch-new vertices
-    # start false), adjacency-with-neighbor-status over the post-change
-    # graph checkpointed ONCE.
-    fstat = (
-        fverts.join(
-            broadcast_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
-            "id",
-            "left",
-        )
-        .select("id", "h", F.coalesce(F.col("s0"), F.lit(False)).alias("s"))
-        .localCheckpoint(eager=True)
-    )
-    # persist + src-sorted-within-partitions (round 15): the warm
-    # cascade's late rounds filter src IN (cone) and the cached batch
-    # min/max stats then skip everything outside the dirty cone — a
-    # localCheckpoint would have no batch stats to prune with.
-    adj = (
-        symw.join(
-            broadcast_side(
-                fstat.select(
-                    F.col("id").alias("dst"),
-                    F.col("h").alias("nh"),
-                    F.col("s").alias("ns"),
-                ),
-                n_vertices,
-            ),
-            "dst",
-        )
-        .select("src", F.col("dst").alias("nid"), "nh", "ns")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    # Dirty seed, only vertices whose VALUE can move: for each batch
-    # edge, the LOWER-priority endpoint when the higher-priority one is
-    # base-TRUE (only true higher-priority neighbors feed blocked()),
-    # plus every batch-new vertex (it must compute its own status) —
-    # seeding every batch endpoint re-judged ~all of the hub
-    # neighborhoods for nothing.  Every dirty vertex is a batch
-    # endpoint, so 2 * n_batch bounds the set.
-    st = broadcast_side(fstat, n_vertices)
-    dirty_ids = (
-        symf.filter(is_batch)
-        .join(
-            st.select(
-                F.col("id").alias("src"),
-                F.col("h").alias("sh"),
-                F.col("s").alias("ssb"),
-            ),
-            "src",
-        )
-        .join(st.select(F.col("id").alias("dst"), F.col("h").alias("dh")), "dst")
-        .filter(
-            F.col("ssb")
-            & (
-                F.struct(F.col("sh"), F.col("src"))
-                < F.struct(F.col("dh"), F.col("dst"))
-            )
-        )
-        .select(F.col("dst").alias("id"))
-    )
-    if not delete:
-        dirty_ids = dirty_ids.unionByName(
-            fverts.select("id").join(
-                broadcast_side(bverts.select("id"), n_bverts), "id", "left_anti"
-            )
-        )
-    dirty = fstat.join(
-        broadcast_side(dirty_ids.distinct(), 2 * n_batch), "id", "left_semi"
-    ).localCheckpoint(eager=True)
-    n_dirty = dirty.count()
-    delta, n_delta = _mis_warm_repair(spark, adj, dirty, n_dirty)
-    adj.unpersist()
-    final = (
-        fstat.join(
-            broadcast_side(
-                delta.select(F.col("id").alias("id"), F.col("s").alias("dls")),
-                n_delta,
-            ),
-            "id",
-            "left",
-        )
-        .select("id", F.coalesce(F.col("dls"), F.col("s")).alias("s"))
-        .localCheckpoint(eager=True)
-    )
-    warm_mis = final.filter(F.col("s")).select("id").localCheckpoint(eager=True)
-    warm_row = warm_mis.agg(
-        F.count(F.lit(1)).cast("long").alias("sz"),
-        F.sum("id").cast("long").alias("cks"),
-    ).collect()[0]
-    # Proof joins size-switch-broadcast the (known-count) MIS sides so
-    # the persisted symf streams without a sort-merge exchange (r14).
-    n_flipped = final.join(
-        broadcast_side(base_mis.withColumn("s0", F.lit(True)), base_row["sz"]),
-        "id",
-        "left",
-    ).filter(F.col("s") != F.coalesce(F.col("s0"), F.lit(False))).count()
-    m_a = warm_mis.select(F.col("id").alias("aid"))
-    m_b = warm_mis.select(F.col("id").alias("bid"))
-    indep_viol = (
-        symw.join(broadcast_side(m_a, warm_row["sz"]), symw.src == F.col("aid"))
-        .join(broadcast_side(m_b, warm_row["sz"]), symw.dst == F.col("bid"))
-        .count()
-    )
-    covered = (
-        symw.join(broadcast_side(m_b, warm_row["sz"]), symw.dst == F.col("bid"))
-        .select(F.col("src").alias("id"))
-        .distinct()
-    )
-    uncov_viol = (
-        fverts.select("id")
-        .join(warm_mis, "id", "left_anti")
-        .join(covered, "id", "left_anti")
-        .count()
-    )
-    symf.unpersist()
-    return (
-        n_vertices, n_edges - n_batch, n_batch, base_row["sz"],
-        base_row["cks"], warm_row["sz"], warm_row["cks"], n_flipped,
-        indep_viol == 0, uncov_viol == 0, True,
-    )
+    return tuple(_mis_task_frame(edges, delete).collect()[0])
 
 
 @register(
@@ -622,7 +299,7 @@ def _mis_repair_distributed(
     "append by priority-DAG cascade relaxation instead of recomputing: "
     "only vertices whose dependency set changed (batch endpoints, then "
     "lower-priority neighbors of every status flip) are ever "
-    "recomputed, so per-round exchanged work is bounded by the "
+    "recomputed, so per-round work is bounded by the "
     "batch's cascade cone, not |V|. The scope pin the general "
     "lexicographic-first result demands: the repaired fixpoint equals "
     "the COLD greedy MIS of the appended graph exactly — the cascade "
@@ -637,16 +314,13 @@ def _mis_repair_distributed(
     "appended graph, all computed on both engines. The repair-"
     "locality claim (dirty cone shrinks geometrically, warm rounds "
     "see a small fraction of |V|) is pinned by the pure-Python replay "
-    "in tests/test_round13_graph.py. Scale shape: both edge counts "
-    "are observed on the edge checkpoint job; a graph whose symmetric "
-    "relation fits _SYM_LOCAL_EDGE_MAX rows is collected once as Arrow "
-    "and the whole entry (priorities, base MIS, cascade, proofs) runs "
-    "in numpy on the driver, about 5 Spark jobs. Above the bound the "
-    "base phase is the shared kernel (once-partitioned sym, broadcast "
-    "frontiers, driver-local tail); warm rounds scan the once-"
-    "checkpointed src-partitioned adjacency-with-status relation "
-    "against a broadcast dirty set — zero exchange in the broadcast "
-    "regime beyond the cone-bounded distincts.",
+    "in tests/test_round13_graph.py. Scale shape: the edge count is "
+    "observed on the edge checkpoint job, then the whole entry "
+    "(priorities, base MIS, cascade, proofs) is one numpy body over "
+    "the Arrow edge table: on the driver when the symmetric relation "
+    "fits _SYM_LOCAL_EDGE_MAX rows, otherwise in one executor task of "
+    "the coalesced edges that sends back only the result row — about "
+    "5 Spark jobs either way.",
 )
 def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
     return local_frame(spark, [_mis_repair(spark, sf, delete=False)], _MIS_INC_SCHEMA)
@@ -793,28 +467,13 @@ def _mat_cascade_local(
                             ):
                                 continue
                         dirty_set.add(f)
-    import pandas as pd
-
     overrides = [
         (e[0], e[1], s)
         for e, s in status.items()
         if s != base_s.get(e, False)
     ]
-    return spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "dsrc": pd.Series([o[0] for o in overrides], dtype="int64"),
-                "ddst": pd.Series([o[1] for o in overrides], dtype="int64"),
-                "dls": pd.Series([o[2] for o in overrides], dtype="bool"),
-            }
-        )
-        if overrides
-        else pd.DataFrame(
-            {"dsrc": pd.Series([], dtype="int64"),
-             "ddst": pd.Series([], dtype="int64"),
-             "dls": pd.Series([], dtype="bool")}
-        )
-    ).localCheckpoint(eager=True), len(overrides)
+    schema = StructType.fromDDL("dsrc long, ddst long, dls boolean")
+    return local_frame(spark, overrides, schema), len(overrides)
 
 
 def _line_warm_repair(

@@ -11,7 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from graphdatabases_spark.graph.model import local_frame
 from graphdatabases_spark.graph.traversal import broadcast_side
 from graphdatabases_spark.relational.catalog import register, table
 from graphdatabases_spark.relational.graph_queries import (
@@ -150,8 +152,10 @@ def graph_random_walks(spark: SparkSession, sf: str) -> DataFrame:
         F.count(F.lit(1)).over(w_src).cast("long").alias("deg"),
     ).localCheckpoint(eager=True)
 
-    walks = spark.createDataFrame(
-        [(s, s) for s in _RW_SEEDS], "seed BIGINT, node BIGINT"
+    walks = local_frame(
+        spark,
+        [(s, s) for s in _RW_SEEDS],
+        StructType.fromDDL("seed BIGINT, node BIGINT"),
     )
     out = walks.withColumn("step", F.lit(0).cast("int"))
     for k in range(1, _RW_STEPS + 1):
@@ -266,8 +270,10 @@ def _tr_round_sql(k: int) -> str:
 def graph_temporal_reach(spark: SparkSession, sf: str) -> DataFrame:
     tedges = _dated_entity_edges(spark, sf)
 
-    arr = spark.createDataFrame(
-        [(s, s, -1) for s in _TR_SEEDS], "seed BIGINT, id BIGINT, d BIGINT"
+    arr = local_frame(
+        spark,
+        [(s, s, -1) for s in _TR_SEEDS],
+        StructType.fromDDL("seed BIGINT, id BIGINT, d BIGINT"),
     )
     n_arr = len(_TR_SEEDS)
     for _ in range(_TR_ROUNDS):
@@ -456,9 +462,10 @@ def _ld_round_sql(k: int) -> str:
 def graph_temporal_latest_dep(spark: SparkSession, sf: str) -> DataFrame:
     tedges = _dated_entity_edges(spark, sf)
 
-    ld = spark.createDataFrame(
+    ld = local_frame(
+        spark,
         [(SUPP_BASE + s, SUPP_BASE + s, _LD_INF) for s in _LD_TARGETS],
-        "tgt BIGINT, id BIGINT, d BIGINT",
+        StructType.fromDDL("tgt BIGINT, id BIGINT, d BIGINT"),
     )
     # DELTA-FRONTIER relaxation: only labels that IMPROVED last round
     # re-join the edges (each edge relaxed once per target in the
@@ -580,9 +587,10 @@ def graph_temporal_reach_delta(spark: SparkSession, sf: str) -> DataFrame:
     ).localCheckpoint(eager=True)
 
     def relax(edges: DataFrame) -> DataFrame:
-        arr = spark.createDataFrame(
+        arr = local_frame(
+            spark,
             [(s, s, -1) for s in _TR_SEEDS],
-            "seed BIGINT, id BIGINT, d BIGINT",
+            StructType.fromDDL("seed BIGINT, id BIGINT, d BIGINT"),
         )
         n_arr = len(_TR_SEEDS)
         for _ in range(_TR_ROUNDS):
@@ -749,9 +757,10 @@ def graph_node2vec_walks(spark: SparkSession, sf: str) -> DataFrame:
         "rn", F.row_number().over(Window.partitionBy("src").orderBy("dst"))
     ).localCheckpoint(eager=True)
 
-    walks = spark.createDataFrame(
+    walks = local_frame(
+        spark,
         [(s, s, -1) for s in _RW_SEEDS],
-        "seed BIGINT, node BIGINT, prev BIGINT",
+        StructType.fromDDL("seed BIGINT, node BIGINT, prev BIGINT"),
     )
     out = walks.withColumn("step", F.lit(0).cast("int"))
     for k in range(1, _N2V_STEPS + 1):

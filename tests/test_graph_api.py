@@ -235,15 +235,17 @@ def test_driver_frames_come_from_local_frame(spark):
     """api.py and model.py call ``createDataFrame`` only inside
     ``local_frame``: a frame built from a Python list reports
     Long.MaxValue and silently flips ``auto`` to distributed. The
-    symmetry and incremental-repair kernels may also hand it a pandas or
-    Arrow frame (a ``pd.DataFrame(...)``/``pa.table(...)`` call, possibly
-    under a conditional expression), but never anything that may be a
-    list. No function of ``algorithms.py`` calls it, and the local
-    ``weighted_sssp`` result reports its exact size."""
-    from graphdatabases_spark.relational import (
-        graph_incremental_queries,
-        graph_kernels,
-    )
+    traversal kernels and every ``relational/graph_*.py`` module may
+    also hand it a pandas or Arrow frame (a ``pd.DataFrame(...)``/
+    ``pa.table(...)`` call, possibly under a conditional expression),
+    but never anything that may be a list. No function of
+    ``algorithms.py`` calls it, and the local ``weighted_sssp`` result
+    reports its exact size."""
+    import importlib
+    import pkgutil
+
+    from graphdatabases_spark import relational
+    from graphdatabases_spark.graph import traversal
 
     def calls(node):
         return [
@@ -272,7 +274,13 @@ def test_driver_frames_come_from_local_frame(spark):
             and arg.func.attr in ("DataFrame", "table")
         )
 
-    for mod in (graph_kernels, graph_incremental_queries):
+    graph_modules = [
+        importlib.import_module(f"{relational.__name__}.{m.name}")
+        for m in pkgutil.iter_modules(relational.__path__)
+        if m.name.startswith("graph_")
+    ]
+    assert len(graph_modules) >= 8
+    for mod in [traversal, *graph_modules]:
         tree = ast.parse(inspect.getsource(mod))
         stray = [
             c.lineno for c in calls(tree) if not (c.args and frame_ctor(c.args[0]))

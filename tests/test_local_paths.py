@@ -1,8 +1,9 @@
 """Small-graph local paths of the incremental PageRank, CC-quotient and
-MIS-cascade loops.
+MIS-repair loops.
 
-* The MIS append and deletion repair entries return the same row from
-  their whole-entry numpy body and from their distributed body.
+* The MIS append and deletion repair entries run one numpy body, on the
+  driver under the driver bound and in one executor task above it;
+  both hosts return the same row and leave no cache behind.
 * The quotient CC of ``graph_cc_incremental`` gives the same labels on
   both strategies, and the batch-size gate picks ``local`` at sf0.001.
 * A job budget per entry: a future plan estimate that flips one of the
@@ -22,29 +23,33 @@ from graphdatabases_spark.graph.traversal import LOCAL_EDGE_THRESHOLD, _pick_str
 from graphdatabases_spark.relational import graph_incremental_queries, queries
 from graphdatabases_spark.relational.graph_queries import _cc_inc_quotient
 
+from tests.test_algorithms import _cached_rdd_ids
 from tests.test_round13_graph import SF_SMALL
 
 
 @pytest.mark.parametrize("name", ["graph_mis_incremental", "graph_mis_decremental"])
 def test_local_cascade_equals_distributed(spark, monkeypatch, name):
-    """The whole-entry numpy body runs once on the default run; with the
-    driver bound at 0 the distributed body runs without it, and both
-    return the same row."""
+    """The numpy repair runs on the driver on the default run; with the
+    driver bound at 0 it runs in one executor task instead, and both
+    hosts return the same row. Neither leaves a cache behind that is not
+    a local checkpoint."""
     calls = []
-    local_repair = graph_incremental_queries._mis_repair_local
+    task_frame = graph_incremental_queries._mis_task_frame
 
     def spy(*args, **kwargs):
         calls.append(1)
-        return local_repair(*args, **kwargs)
+        return task_frame(*args, **kwargs)
 
-    monkeypatch.setattr(graph_incremental_queries, "_mis_repair_local", spy)
-    local = queries()[name](spark, SF_SMALL).collect()
-    assert len(calls) == 1
+    monkeypatch.setattr(graph_incremental_queries, "_mis_task_frame", spy)
+    before = _cached_rdd_ids(spark)
+    driver = queries()[name](spark, SF_SMALL).collect()
+    assert calls == []
     monkeypatch.setattr(graph_incremental_queries, "_SYM_LOCAL_EDGE_MAX", 0)
-    distributed = queries()[name](spark, SF_SMALL).collect()
-    assert len(calls) == 1
-    assert local == distributed
-    assert local[0]["independent"] and local[0]["maximal"]
+    task = queries()[name](spark, SF_SMALL).collect()
+    assert calls == [1]
+    assert _cached_rdd_ids(spark) - before == set()
+    assert driver == task
+    assert driver[0]["independent"] and driver[0]["maximal"]
 
 
 def test_quotient_cc_local_equals_distributed(spark):
@@ -64,24 +69,30 @@ def test_quotient_cc_local_equals_distributed(spark):
 # sf0.001, at most about 25% over the counts measured in the default test
 # session (8 shuffle partitions, 4 cores): 9 jobs for
 # graph_pagerank_incremental, 19 for graph_cc_incremental and 7 for each
-# MIS repair entry. With the distributed loops the first three ran 62, 56
-# and 97; with only the MIS cascade on the driver the MIS entries ran 58
-# (append) and 54 (delete).
+# MIS repair entry on either host (``:task``: the driver bound at 0, so
+# the numpy repair runs in one executor task). With the distributed loops
+# the first three ran 62, 56 and 97; with only the MIS cascade on the
+# driver the MIS entries ran 58 (append) and 54 (delete).
 _JOB_BUDGET = {
     "graph_pagerank_incremental": 11,
     "graph_cc_incremental": 24,
     "graph_mis_incremental": 8,
     "graph_mis_decremental": 8,
+    "graph_mis_incremental:task": 8,
+    "graph_mis_decremental:task": 8,
 }
 
 
 @pytest.mark.parametrize("name", sorted(_JOB_BUDGET))
-def test_entry_job_budget(spark, name):
+def test_entry_job_budget(spark, monkeypatch, name):
+    entry, _, host = name.partition(":")
+    if host == "task":
+        monkeypatch.setattr(graph_incremental_queries, "_SYM_LOCAL_EDGE_MAX", 0)
     sc = spark.sparkContext
-    group = f"job-budget-{name}-{uuid.uuid4().hex}"
+    group = f"job-budget-{entry}-{uuid.uuid4().hex}"
     sc.setJobGroup(group, name)
     try:
-        queries()[name](spark, SF_SMALL).count()
+        queries()[entry](spark, SF_SMALL).count()
     finally:
         sc._jsc.clearJobGroup()
     # The status store is fed asynchronously: empty the bus first.
