@@ -94,17 +94,15 @@ def _spark_of(df: DataFrame) -> SparkSession:
     return df.sparkSession
 
 
-def _vertices_local(
-    graph: PropertyGraph | DataFrame, adj: dict[int, list[int]]
-) -> list[int]:
-    """Driver-side vertex id list matching ``_vertices_from`` semantics."""
-    if isinstance(graph, PropertyGraph):
-        pdf = graph.vertices.select("id").toPandas()
-        return [int(i) for i in pdf["id"]]
-    ids = set(adj)
-    for vs in adj.values():
-        ids.update(vs)
-    return sorted(ids)
+def _release(df: DataFrame) -> None:
+    """Drop ``df``'s blocks: its RDD when ``df`` is what ``localCheckpoint``
+    returned, its cache otherwise. Nothing may read ``df`` afterwards."""
+    plan = df._jdf.queryExecution().analyzed()
+    rdd = plan.rdd() if plan.getClass().getSimpleName() == "LogicalRDD" else None
+    if rdd is not None and rdd.isLocallyCheckpointed():
+        rdd.unpersist(False)
+    else:
+        df.unpersist()
 
 
 def _supersteps(
@@ -130,12 +128,15 @@ def _supersteps(
     ``rounds`` rounds warn with a RuntimeWarning, or raise RuntimeError
     under ``strict``; the message names ``name`` and ``stale`` (a format
     string given the count). A last round that is not a checkpoint is
-    checkpointed before return. ``release`` (the static edge relations)
-    and a persisted round are unpersisted in ``finally``, also when a
-    round or the ``strict`` check raises.
+    checkpointed before return; each checkpoint is released once the
+    next is materialised. ``release`` (the static edge relations and
+    setup checkpoints), a persisted round and a checkpoint not returned
+    are released in ``finally``, also when a round or ``strict`` raises.
     """
     cached: DataFrame | None = None
-    detached = True
+    ckpt: DataFrame | None = None
+    result: DataFrame | None = None
+    detached = False
     moved = 0
     try:
         for i in range(rounds):
@@ -146,13 +147,16 @@ def _supersteps(
             elif changed is not None:
                 new = new.persist(StorageLevel.MEMORY_AND_DISK)
             old, state = state, new
-            if changed is None:
-                continue
-            moved = changed(new, old).count()
-            if cached is not None:
-                cached.unpersist()
-            cached = None if detached else new
-            if moved == 0:
+            if changed is not None:
+                moved = changed(new, old).count()
+                if cached is not None:
+                    cached.unpersist()
+                cached = None if detached else new
+            if detached:
+                if ckpt is not None:
+                    _release(ckpt)
+                ckpt = new
+            if changed is not None and moved == 0:
                 break
         if moved:
             msg = (
@@ -164,12 +168,14 @@ def _supersteps(
             warnings.warn(msg, RuntimeWarning, stacklevel=3)
         if not detached:
             state = state.localCheckpoint(eager=True)
+        result = state
         return state
     finally:
         if cached is not None:
             cached.unpersist()
-        for df in release:
-            df.unpersist()
+        for df in (*release, ckpt):
+            if df is not None and df is not result:
+                _release(df)
 
 
 def _out_links(edges: DataFrame, by_src: bool = True) -> DataFrame:
@@ -214,8 +220,8 @@ def _power_iteration_local(
     restart mass is spread over ``sources``, or over every vertex (plain
     PageRank, r0 = 1/N) when ``sources`` is None; dangling mass decays."""
     spark = _spark_of(edges)
-    adj = _collect_adjacency(edges)
-    vertices = _vertices_local(graph, adj)
+    idx = _collect_index(edges)
+    adj, vertices = idx.adj, _vertex_edges(graph, idx)[0].tolist()
     if not vertices:
         return _local_result_df(spark, [], RANK_SCHEMA)
     if sources is None:
@@ -529,76 +535,49 @@ def _div_trunc(a, b):
     return (a - np.fmod(a, b)) // b
 
 
-def _pagerank_units_local(
-    graph,
-    edges: DataFrame,
-    num_iters: int,
-    damping_pct: int,
-    unit_scale: int,
-    init_ranks: DataFrame | None,
-) -> DataFrame:
-    """Driver-side ``pagerank_units``: the same integer recurrence in
-    exact int64 numpy over the cached CSR edge index. Per round, contrib
-    = units div outdeg per edge, a dst-sorted ``np.add.reduceat`` for
-    the message sums, then base + damping_pct·msg div 100. No float ever
-    carries a rank (sums can pass 2^53); int64 overflow raises, as ANSI
-    Spark does, instead of wrapping."""
+def _vertex_edges(graph, idx):
+    """The sorted vertex ids (the vertex frame, else the endpoints) and
+    each CSR edge's src and dst positions in them, -1 for a non-vertex."""
     import numpy as np
 
-    spark = _spark_of(edges)
-    i64 = np.iinfo(np.int64)
-
-    def overflow(what: str):
-        raise OverflowError(f"pagerank_units: long overflow in {what}")
-
-    idx = _collect_index(edges)
     if isinstance(graph, PropertyGraph):
         tbl = graph.vertices.select(F.col("id").cast("long")).toArrow()
         vids = np.unique(np.asarray(tbl.column("id").to_numpy(), dtype=np.int64))
     else:
         vids = idx.universe
-    nv = len(vids)
-    if nv == 0:
-        return _local_result_df(spark, [], UNITS_SCHEMA)
+    u = idx.universe
+    upos = np.where(np.isin(u, vids), np.searchsorted(vids, u), -1)
+    src_u = np.repeat(np.arange(len(idx.universe)), np.diff(idx.indptr))
+    return vids, upos[src_u], upos[idx.nbr_idx]
 
-    def vpos(ids):
-        # Position of each id in ``vids``, or -1 when it is no vertex.
-        p = np.minimum(np.searchsorted(vids, ids), nv - 1)
-        return np.where(vids[p] == ids, p, -1)
 
-    # Per-edge (src, dst) vertex positions and outdeg. outdeg counts
-    # every edge of src, also those to non-vertices, whose messages are
-    # dropped (the distributed left join from the vertex set).
-    deg_u = np.diff(idx.indptr)
-    src_u = np.repeat(np.arange(len(idx.universe)), deg_u)
-    upos = vpos(idx.universe)
-    e_src, e_dst = upos[src_u], upos[idx.nbr_idx]
-    keep = (e_src >= 0) & (e_dst >= 0)
-    order = np.argsort(e_dst[keep], kind="stable")
-    e_src, e_dst = e_src[keep][order], e_dst[keep][order]
-    e_deg = deg_u[src_u][keep][order]
+def _pagerank_units_rounds(
+    units, e_src, e_dst, e_deg, num_iters: int, damping_pct: int, unit_scale: int
+):
+    """The integer recurrence of ``pagerank_units`` in exact int64
+    numpy: ``units`` (one value per vertex position) after ``num_iters``
+    rounds over the edges ``e_src -> e_dst`` (vertex positions), each
+    carrying its source's outdeg ``e_deg``. Per round, contrib = units
+    div outdeg per edge, a dst-sorted ``np.add.reduceat`` for the
+    message sums, then base + damping_pct·msg div 100. No float ever
+    carries a rank (sums can pass 2^53); int64 overflow raises, as ANSI
+    Spark does, instead of wrapping."""
+    import numpy as np
+
+    i64 = np.iinfo(np.int64)
+
+    def overflow(what: str):
+        raise OverflowError(f"pagerank_units: long overflow in {what}")
+
+    order = np.argsort(e_dst)
+    e_src, e_dst, e_deg = e_src[order], e_dst[order], e_deg[order]
     seg = np.flatnonzero(np.r_[True, e_dst[1:] != e_dst[:-1]])
     seg_end = np.r_[seg[1:], len(e_dst)]
-
-    units = np.full(nv, np.int64(unit_scale))
-    if init_ranks is not None:
-        prev = (
-            init_ranks.select(
-                F.col("id").cast("long").alias("id"),
-                F.col("rank_units").cast("long").alias("rank_units"),
-            )
-            .dropna()
-            .toArrow()
-        )
-        ids = np.asarray(prev.column("id").to_numpy(), dtype=np.int64)
-        vals = np.asarray(prev.column("rank_units").to_numpy(), dtype=np.int64)
-        p = vpos(ids)
-        units[p[p >= 0]] = vals[p >= 0]
     base = np.int64(((100 - damping_pct) * unit_scale) // 100)
     mul_lim = i64.max // abs(damping_pct) if damping_pct else i64.max
     for _ in range(num_iters):
         contrib = _div_trunc(units[e_src], e_deg)
-        msg = np.zeros(nv, dtype=np.int64)
+        msg = np.zeros(len(units), dtype=np.int64)
         if len(contrib):
             # |float sum of |contrib|| < 2^62 proves the exact segment
             # sum (and every partial sum) fits; recheck the rest exactly.
@@ -614,6 +593,47 @@ def _pagerank_units_local(
         if ((step > i64.max - base) if base >= 0 else (step < i64.min - base)).any():
             overflow("base + damping")
         units = base + step
+    return units
+
+
+def _pagerank_units_local(
+    graph,
+    edges: DataFrame,
+    num_iters: int,
+    damping_pct: int,
+    unit_scale: int,
+    init_ranks: DataFrame | None,
+) -> DataFrame:
+    """Driver-side ``pagerank_units``: ``_pagerank_units_rounds`` over
+    the cached CSR edge index."""
+    import numpy as np
+
+    spark = _spark_of(edges)
+    idx = _collect_index(edges)
+    vids, e_src, e_dst = _vertex_edges(graph, idx)
+    nv = len(vids)
+    if nv == 0:
+        return _local_result_df(spark, [], UNITS_SCHEMA)
+    # outdeg counts every edge of src, also those to non-vertices, whose
+    # messages are dropped (the distributed left join from the vertex set).
+    deg_u = np.diff(idx.indptr)
+    e_deg = np.repeat(deg_u, deg_u)
+    keep = (e_src >= 0) & (e_dst >= 0)
+
+    units = np.full(nv, np.int64(unit_scale))
+    if init_ranks is not None:
+        prev = init_ranks.select(
+            *(F.col(c).cast("long").alias(c) for c in ("id", "rank_units"))
+        ).dropna().toArrow()
+        ids, vals = (
+            np.asarray(prev.column(c).to_numpy(), dtype=np.int64)
+            for c in ("id", "rank_units")
+        )
+        hit = np.isin(ids, vids)
+        units[np.searchsorted(vids, ids[hit])] = vals[hit]
+    units = _pagerank_units_rounds(
+        units, e_src[keep], e_dst[keep], e_deg[keep], num_iters, damping_pct, unit_scale
+    )
     return _numpy_result_df(spark, {"id": vids, "rank_units": units}, UNITS_SCHEMA)
 
 
@@ -722,31 +742,39 @@ def pagerank_units(
             .alias("rank_units"),
         )
 
-    return _supersteps(ranks, step, num_iters, release=(links,))
+    return _supersteps(ranks, step, num_iters, release=(links, vertices, ranks))
+
+
+def _min_labels(src, dst, n: int):
+    """The smallest position in each position's component of the
+    undirected edges ``src - dst`` over positions ``0..n-1``, by
+    vectorised hook-and-shortcut: each round hooks every edge's larger
+    root under the smaller, then jumps pointers until every tree is a
+    star, until a round hooks nothing. Pointers only go to smaller
+    positions, so a component's minimum stays its root."""
+    import numpy as np
+
+    lab = np.arange(n)
+    while True:
+        lo = np.minimum(lab[src], lab[dst])
+        new = lab.copy()
+        np.minimum.at(new, lab[src], lo)
+        np.minimum.at(new, lab[dst], lo)
+        while (new[new] != new).any():
+            new = new[new]
+        if (new == lab).all():
+            return lab
+        lab = new
 
 
 def _connected_components_local(graph, edges: DataFrame) -> DataFrame:
-    """Union-find — the converged fixpoint of min-id propagation."""
-    spark = _spark_of(edges)
-    adj = _collect_adjacency(edges)
-    vertices = _vertices_local(graph, adj)
-    parent = {v: v for v in vertices}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for u, vs in adj.items():
-        for v in vs:
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                # Union by min id so the root IS the component label.
-                lo, hi = (ru, rv) if ru < rv else (rv, ru)
-                parent[hi] = lo
-    return _local_result_df(
-        spark, [(v, find(v)) for v in sorted(vertices)], COMP_SCHEMA
+    """``_min_labels`` over the cached CSR edge index; an edge to a
+    non-vertex carries no label, as in the distributed loop."""
+    vids, e_src, e_dst = _vertex_edges(graph, _collect_index(edges))
+    keep = (e_src >= 0) & (e_dst >= 0)
+    lab = _min_labels(e_src[keep], e_dst[keep], len(vids))
+    return _numpy_result_df(
+        _spark_of(edges), {"id": vids, "comp": vids[lab]}, COMP_SCHEMA
     )
 
 
@@ -763,8 +791,8 @@ def connected_components(
     small-star optimization halves that but needs the same kernel).
     A caller-supplied ``max_iters`` can cut a long-path component short,
     leaving split component ids: that warns, or raises under ``strict``.
-    Small edge sets run union-find on the driver — the same converged
-    answer without O(diameter) job rounds.
+    Small edge sets run ``_min_labels`` on the driver — the same
+    converged answer without O(diameter) job rounds.
     Returns DataFrame(id BIGINT, comp BIGINT).
     """
     if max_iters < 1:
@@ -870,8 +898,8 @@ def _label_propagation_local(graph, edges: DataFrame, num_iters: int) -> DataFra
     """Synchronous LPA on the driver — mirrors the distributed rounds
     exactly, including per-edge multiplicity in the neighbor counts."""
     spark = _spark_of(edges)
-    adj = _collect_adjacency(edges)
-    vertices = _vertices_local(graph, adj)
+    idx = _collect_index(edges)
+    adj, vertices = idx.adj, _vertex_edges(graph, idx)[0].tolist()
     # Symmetric neighbor multiset, duplicates preserved (matches the
     # distributed union of forward + reversed edges without distinct).
     nbrs: dict[int, list[int]] = {v: [] for v in vertices}
@@ -951,7 +979,7 @@ def label_propagation(
         vertices.select("id", F.col("id").alias("label")),
         step,
         num_iters,
-        release=(sym,),
+        release=(sym, vertices),
     )
 
 

@@ -329,7 +329,7 @@ class _AdjIndex:
     ``nbr_idx`` (a Python dict BFS pays ~1 µs/edge in interpreter
     overhead; the CSR form does a whole frontier level in a handful of
     numpy ops). The dict view (``adj``) is built lazily for consumers
-    that genuinely need per-node Python iteration (union-find, LPA,
+    that genuinely need per-node Python iteration (LPA,
     local triangle counting) — neighbor lists come out dst-sorted.
     """
 

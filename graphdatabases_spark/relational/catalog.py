@@ -18,11 +18,13 @@ Determinism discipline (FIXTURES.md §C):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -61,9 +63,24 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
     return deco
 
 
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}  # path -> (_signature, schema)
+
+
+def _signature(path: str) -> tuple:
+    """``(file, size, mtime_ns)`` of every file at or under ``path``."""
+    files = [path] if os.path.isfile(path) else sorted(
+        os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs
+    )
+    return tuple((f, st.st_size, st.st_mtime_ns) for f in files for st in [os.stat(f)])
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table. Parquet scan → Catalyst gets pushdown,
     pruning, and row-group skipping for free.
+
+    Schema inference is a Spark job, so a read supplies the schema
+    inferred before while the files keep their ``_signature``; a
+    rewritten table, or one with no local files, is inferred again.
 
     ``events.ts`` is TIMESTAMP(NANOS) parquet, which Spark reads only as
     a long (``spark.sql.legacy.parquet.nanosAsLong``); convert to a
@@ -80,7 +97,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # the UTC session timezone our own get_spark sets; pin it here too
     # so the catalog is deterministic on ANY externally built session.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    sig = _signature(path)
+    known, schema = _SCHEMAS.get(path, ((), None))
+    reader = spark.read.schema(schema) if sig and sig == known else spark.read
+    df = reader.parquet(path)
+    if sig:
+        _SCHEMAS[path] = (sig, df.schema)
     for field in df.schema.fields:
         if field.name == "ts" and field.dataType.simpleString() == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -115,21 +138,12 @@ def stage_derived(
     lazily under the lock after a 10-minute grace period.
     """
     import hashlib
-    import os
     import shutil
     import tempfile
     import uuid
 
     src = os.path.join(sf_dir, f"{name}.parquet")
-    sig_parts = [src]
-    if os.path.isdir(src):
-        for fname in sorted(os.listdir(src)):
-            st = os.stat(os.path.join(src, fname))
-            sig_parts.append(f"{fname}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        sig_parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    sig = hashlib.md5("|".join(sig_parts).encode()).hexdigest()[:12]
+    sig = hashlib.md5(repr((src, _signature(src))).encode()).hexdigest()[:12]
     path_tag = hashlib.md5(src.encode()).hexdigest()[:12]
     # CONTENT-ADDRESSED publication (ADVICE r8): every source signature
     # gets its OWN directory, which once published is never deleted in

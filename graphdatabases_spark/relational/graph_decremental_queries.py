@@ -26,7 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from graphdatabases_spark.graph.model import local_frame
 from graphdatabases_spark.graph.traversal import broadcast_side
 from graphdatabases_spark.relational.catalog import register
 from graphdatabases_spark.relational.graph_incremental_queries import (
@@ -141,11 +140,11 @@ def _mde_mis_union(tag: str) -> str:
     "shape: the append entry's (one _mis_repair, two edge masks): the "
     "whole entry is one numpy body over the Arrow edge table, on the "
     "driver when the symmetric relation fits _SYM_LOCAL_EDGE_MAX rows "
-    "and in one executor task above it, about 5 Spark jobs either "
-    "way.",
+    "and in one executor task above it, 3 Spark jobs either way "
+    "with the count.",
 )
 def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
-    return local_frame(spark, [_mis_repair(spark, sf, delete=True)], _MIS_DEC_SCHEMA)
+    return _mis_repair(spark, sf, delete=True, schema=_MIS_DEC_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

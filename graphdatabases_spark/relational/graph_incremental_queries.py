@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from functools import partial
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
@@ -31,6 +31,8 @@ from graphdatabases_spark.relational.graph_kernels import (
 )
 from graphdatabases_spark.relational.graph_queries import (
     ENTITY_EDGES_SQL,
+    _edge_positions,
+    _numpy_entry,
     entity_edges,
 )
 
@@ -101,9 +103,10 @@ def _mis_row_schema(kept: str, changed: str) -> StructType:
 _MIS_INC_SCHEMA = _mis_row_schema("n_base_edges", "n_batch_edges")
 
 
-def _mis_repair_local(edges, delete: bool) -> tuple:
+def _mis_repair_local(edges, delete: bool) -> list[tuple]:
     """A whole MIS repair entry in numpy over the Arrow table of the
-    deduplicated entity ``edges``: returns the entry's result row.  Both
+    entity ``edges`` (their distinct pairs, ``_edge_positions``):
+    returns the entry's one result row.  Both
     entries are one computation with two edge masks over the batch
     ``(src + dst) % _MI_MOD == 0``: the append entry's base graph drops
     the batch and its warm graph has every edge; the delete entry's
@@ -122,15 +125,11 @@ def _mis_repair_local(edges, delete: bool) -> tuple:
 
     import numpy as np
 
-    src, dst = (
-        np.asarray(edges.column(c).to_numpy(), dtype=np.int64)
-        for c in ("src", "dst")
-    )
+    src, dst, ids, s, d = _edge_positions(edges)
     batch = (src + dst) % _MI_MOD == 0
     # The symmetric edge set as vertex positions, each row flagged when
     # its edge is in the batch.
-    ids, s = np.unique(np.concatenate([src, dst]), return_inverse=True)
-    d = np.concatenate([s[len(src):], s[: len(src)]])
+    s, d = np.concatenate([s, d]), np.concatenate([d, s])
     n = len(ids)
     h = np.fromiter(
         (int(hashlib.md5(b"mis%d" % v).hexdigest()[:12], 16) for v in ids.tolist()),
@@ -170,7 +169,7 @@ def _mis_repair_local(edges, delete: bool) -> tuple:
     def checksum(mask):  # Spark's sum over no rows is null
         return int(ids[mask].sum()) if mask.any() else None
 
-    return (
+    return [(
         n,
         int((~batch).sum()),
         int(batch.sum()),
@@ -182,52 +181,21 @@ def _mis_repair_local(edges, delete: bool) -> tuple:
         not (warm[ws] & warm[nb]).any(),
         bool((warm | covered).all()),
         True,
+    )]
+
+
+def _mis_repair(
+    spark: SparkSession, sf: str, delete: bool, schema: StructType
+) -> DataFrame:
+    """A MIS repair entry (``delete``: the deletion one) by
+    _mis_repair_local, on the driver while the symmetric relation's
+    ``2 * n`` rows fit ``_SYM_LOCAL_EDGE_MAX`` (_numpy_entry)."""
+    return _numpy_entry(
+        entity_edges(spark, sf, dedup=False),
+        partial(_mis_repair_local, delete=delete),
+        schema,
+        _SYM_LOCAL_EDGE_MAX // 2,
     )
-
-
-def _mis_repair_task(batches, delete: bool):
-    """_mis_repair_local in an executor: the one task of a coalesced
-    edge relation gets every edge batch and yields the entry's row."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    row = _mis_repair_local(pa.Table.from_batches(list(batches)), delete)
-    yield pa.RecordBatch.from_pylist(
-        [dict(zip(_MIS_INC_SCHEMA.names, row))],
-        schema=to_arrow_schema(_MIS_INC_SCHEMA),
-    )
-
-
-def _mis_task_frame(edges: DataFrame, delete: bool) -> DataFrame:
-    """The one-row frame that runs _mis_repair_local over ``edges`` in a
-    single executor task (the row is positional: the deletion entry's
-    two edge-count columns carry the append entry's names here)."""
-    return edges.coalesce(1).mapInArrow(
-        partial(_mis_repair_task, delete=delete), _MIS_INC_SCHEMA
-    )
-
-
-def _mis_repair(spark: SparkSession, sf: str, delete: bool) -> tuple:
-    """The result row of a MIS repair entry (``delete``: the deletion
-    one), computed by _mis_repair_local wherever the edges fit.  The
-    edge count is observed on the eager edge checkpoint itself, before
-    anything is collected, so no hub degree can push a collect past the
-    bound.  When the symmetric relation's ``2 * n`` rows fit
-    ``_SYM_LOCAL_EDGE_MAX`` the edges come to the driver as one Arrow
-    table; above it the checkpointed edges go to one executor task
-    through Arrow (_mis_task_frame) and only the result row comes back.
-    The bound caps driver memory; it is not a speed crossover.  The
-    driver host skips the task's Python worker launch, which shows at
-    the small end (SCALE.md)."""
-    obs = Observation()
-    edges = (
-        entity_edges(spark, sf, dedup=True)
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    if 2 * obs.get["n"] <= _SYM_LOCAL_EDGE_MAX:
-        return _mis_repair_local(edges.toArrow(), delete)
-    return tuple(_mis_task_frame(edges, delete).collect()[0])
 
 
 @register(
@@ -319,11 +287,11 @@ def _mis_repair(spark: SparkSession, sf: str, delete: bool) -> tuple:
     "(priorities, base MIS, cascade, proofs) is one numpy body over "
     "the Arrow edge table: on the driver when the symmetric relation "
     "fits _SYM_LOCAL_EDGE_MAX rows, otherwise in one executor task of "
-    "the coalesced edges that sends back only the result row — about "
-    "5 Spark jobs either way.",
+    "the coalesced edges that sends back only the result row — 3 "
+    "Spark jobs either way with the count.",
 )
 def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
-    return local_frame(spark, [_mis_repair(spark, sf, delete=False)], _MIS_INC_SCHEMA)
+    return _mis_repair(spark, sf, delete=False, schema=_MIS_INC_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

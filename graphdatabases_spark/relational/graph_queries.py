@@ -19,10 +19,14 @@ API uses.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from graphdatabases_spark.graph.algorithms import (
+    _min_labels,
+    _pagerank_units_rounds,
+    _release,
     connected_components,
     pagerank,
     personalized_pagerank,
@@ -31,9 +35,9 @@ from graphdatabases_spark.graph.algorithms import (
     weighted_sssp,
 )
 from graphdatabases_spark.graph.generators import grid_graph, ring_graph
+from graphdatabases_spark.graph.model import local_frame
 from graphdatabases_spark.graph.traversal import (
     LOCAL_EDGE_THRESHOLD,
-    _pick_strategy,
     bfs_distances,
     broadcast_side,
     khop,
@@ -90,6 +94,61 @@ def entity_edges(spark: SparkSession, sf: str, dedup: bool = True) -> DataFrame:
     ).select("e.src", "e.dst")
     out = o.union(both)
     return out.distinct() if dedup else out
+
+
+def _edge_positions(edges) -> tuple:
+    """``(src, dst, ids, s, d)`` of an Arrow edge table: its distinct
+    ``(src, dst)`` pairs as int64 arrays, the sorted vertex ids, and
+    each pair's endpoints as positions in ``ids``."""
+    import numpy as np
+
+    src, dst = (
+        np.asarray(edges.column(c).to_numpy(), dtype=np.int64)
+        for c in ("src", "dst")
+    )
+    ids, pos = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    # One key per pair; it fits int64 up to 3e9 vertices.
+    s, d = np.divmod(np.unique(pos[: len(src)] * len(ids) + pos[len(src) :]), len(ids))
+    return ids[s], ids[d], ids, s, d
+
+
+def _task_frame(edges: DataFrame, body, schema: StructType) -> DataFrame:
+    """The frame that runs ``body`` in one executor task, which gets
+    every Arrow batch of ``edges`` and yields the rows."""
+
+    def task(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        rows = body(pa.Table.from_batches(list(batches)))
+        yield pa.RecordBatch.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], to_arrow_schema(schema)
+        )
+
+    return edges.coalesce(1).mapInArrow(task, schema)
+
+
+def _numpy_entry(
+    edges: DataFrame, body, schema: StructType, max_edges: int
+) -> DataFrame:
+    """An entry computed whole by ``body``, a numpy function from the
+    Arrow table of ``edges`` to the entry's rows. The row count of
+    ``edges`` (duplicates included, as a collect carries them) is
+    observed on their eager checkpoint, before anything is collected.
+    Up to ``max_edges`` rows the table comes to the driver; above it
+    one executor task runs ``body`` and only the rows come back: the
+    bound caps driver memory, it is not a speed crossover. The rows
+    return as one partition, which ``count()`` reads in one job."""
+    obs = Observation()
+    ckpt = edges.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(True)
+    try:
+        if obs.get["n"] <= max_edges:
+            rows = body(ckpt.toArrow())
+        else:
+            rows = _task_frame(ckpt, body, schema).collect()
+    finally:
+        _release(ckpt)
+    return local_frame(edges.sparkSession, rows, schema).coalesce(1)
 
 
 # ---------------------------------------------------------------------------
@@ -1004,6 +1063,35 @@ def _pr_inc_round_sql(tag: str, k: int, everts: str, eedges: str, eoutdeg: str) 
     )"""
 
 
+def _pagerank_incremental_rows(edges) -> list[tuple]:
+    """graph_pagerank_incremental in numpy over an Arrow edge table:
+    _PR_INC_ROUNDS_BASE rounds of ``_pagerank_units_rounds`` without
+    the batch, _PR_INC_ROUNDS_WARM more on every edge from those ranks
+    (_PR_INC_UNIT for a vertex with no base edge), then the top
+    _PR_INC_K by warm units. The base rounds run over every vertex: one
+    with no base edge sends and receives nothing there."""
+    import numpy as np
+
+    src, dst, ids, s, d = _edge_positions(edges)
+    base = (src + dst) % _PR_INC_MOD != 0
+
+    def ranks(keep, units, rounds):
+        deg = np.bincount(s[keep], minlength=len(ids))
+        return _pagerank_units_rounds(
+            units, s[keep], d[keep], deg[s[keep]], rounds, 85, _PR_INC_UNIT
+        )
+
+    cold = np.full(len(ids), _PR_INC_UNIT)
+    in_base = np.bincount(np.r_[s[base], d[base]], minlength=len(ids)) > 0
+    units_base = np.where(in_base, ranks(base, cold, _PR_INC_ROUNDS_BASE), cold)
+    warm = ranks(np.ones_like(base), units_base, _PR_INC_ROUNDS_WARM)
+    return [
+        (int(ids[v]), int(units_base[v]), int(warm[v]),
+         int(warm[v] - units_base[v]), k + 1)
+        for k, v in enumerate(np.lexsort((ids, -warm))[:_PR_INC_K])
+    ]
+
+
 @register(
     "graph_pagerank_incremental",
     oracle=f"""
@@ -1073,59 +1161,18 @@ def _pr_inc_round_sql(tag: str, k: int, everts: str, eedges: str, eoutdeg: str) 
     "CTEs, each AS MATERIALIZED so DuckDB evaluates the chain "
     "round-by-round (inlined, the single fused pipeline holds every "
     "round's join hash tables at once — measured >85 GB temp spill at "
-    "sf1; materialized, zero spill, 144 s). Scale shape: the links relation shuffles once per phase "
-    "and is reused every round; each round is one partitioning-reuse "
-    "join plus one dst-keyed agg; state is one BIGINT per vertex.",
+    "sf1; materialized, zero spill, 144 s). Scale shape: one int64 "
+    "numpy body over the Arrow edge table (_numpy_entry), on the driver "
+    "up to LOCAL_EDGE_THRESHOLD edges, else in one executor task; 3 "
+    "Spark jobs with the count; one BIGINT per vertex.",
 )
 def graph_pagerank_incremental(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from graphdatabases_spark.graph.algorithms import pagerank_units
-
-    # One materialization of the distinct edge list — every downstream
-    # consumer (outdeg, links, vertex frames, the batch filter; ×2
-    # phases) would otherwise re-run the 3-way union + distinct scan
-    # (measured 9 s of the entry's wall at sf0.1, paid ~5×).
-    edges = entity_edges(spark, sf, dedup=True).localCheckpoint(eager=True)
-    is_batch = ((F.col("src") + F.col("dst")) % _PR_INC_MOD) == 0
-    base_ranks = pagerank_units(
-        edges.filter(~is_batch),
-        num_iters=_PR_INC_ROUNDS_BASE,
-        unit_scale=_PR_INC_UNIT,
-    )
-    warm_ranks = pagerank_units(
-        edges,
-        num_iters=_PR_INC_ROUNDS_WARM,
-        unit_scale=_PR_INC_UNIT,
-        init_ranks=base_ranks,
-    )
-    # Top-k via TakeOrdered (orderBy + limit = per-partition heaps +
-    # one k-row merge, never a global sort); the pos-numbering window
-    # then runs over the ALREADY-BOUNDED k-row frame (the docs_bm25_topk
-    # pattern, allowlisted in test_plans._GLOBAL_WINDOW_OK).
-    w = Window.orderBy(F.col("units_warm").desc(), F.col("id"))
-    return (
-        warm_ranks.withColumnRenamed("rank_units", "units_warm")
-        .join(
-            base_ranks.withColumnRenamed("rank_units", "units_base"),
-            "id",
-            "left",
-        )
-        .select(
-            "id",
-            F.coalesce("units_base", F.lit(_PR_INC_UNIT))
-            .cast("long")
-            .alias("units_base"),
-            F.col("units_warm").cast("long"),
-        )
-        .withColumn(
-            "delta_units",
-            (F.col("units_warm") - F.col("units_base")).cast("long"),
-        )
-        .orderBy(F.col("units_warm").desc(), F.col("id"))
-        .limit(_PR_INC_K)
-        .withColumn("pos", F.row_number().over(w))
-        .orderBy("pos")
+    schema = "id long, units_base long, units_warm long, delta_units long, pos int"
+    return _numpy_entry(
+        entity_edges(spark, sf, dedup=False),
+        _pagerank_incremental_rows,
+        StructType.fromDDL(schema),
+        LOCAL_EDGE_THRESHOLD,
     )
 
 
@@ -1134,7 +1181,7 @@ def graph_pagerank_incremental(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _CC_INC_K = 40
-# Oracle-side fixed unrolls (the Spark kernel loops to the true fixpoint;
+# Oracle-side fixed unrolls (the engine solves to the true fixpoint;
 # the oracle's converged-pin columns fail the differential loudly if a
 # bigger fixture ever needs more rounds). Measured to fixpoint: base
 # 3/4/5 rounds at sf0.001/0.01/0.1, quotient 2 — margins of 2+ each.
@@ -1156,34 +1203,29 @@ def _cc_round_sql(tag: str, k: int, sym: str) -> str:
     )"""
 
 
-def _cc_inc_quotient(spark: SparkSession, sf: str):
-    """``(batch_e, base_lab, qe)`` of graph_cc_incremental: the appended
-    batch, the persisted base labels, and the quotient edge relation."""
-    edges = entity_edges(spark, sf, dedup=True).localCheckpoint(eager=True)
-    is_batch = (F.col("src") >= ORDER_BASE) & (F.col("src") < PART_BASE)
-    base_e = edges.filter(~is_batch)
-    batch_e = edges.filter(is_batch).localCheckpoint(eager=True)
+def _cc_incremental_rows(edges) -> list[tuple]:
+    """graph_cc_incremental in numpy over an Arrow edge table, by
+    quotient contraction on vertex positions (in id order, so the
+    smallest position is the smallest id): ``_min_labels`` of the base
+    edges (a vertex with no base edge keeps its own id), the batch edges
+    through those labels less the intra-component ones, ``_min_labels``
+    of that quotient, then the top _CC_INC_K base components by size."""
+    import numpy as np
 
-    base_lab = connected_components(base_e, strict=True).localCheckpoint(
-        eager=True
-    )
-
-    # Quotient contraction: batch edges through the persisted labels
-    # (coalesce = batch-new vertices cold-start at own id), dropping
-    # already-intra-component edges.
-    ls = base_lab.select(F.col("id").alias("src"), F.col("comp").alias("scomp"))
-    ld = base_lab.select(F.col("id").alias("dst"), F.col("comp").alias("dcomp"))
-    qe = (
-        batch_e.join(ls, "src", "left")
-        .join(ld, "dst", "left")
-        .select(
-            F.coalesce("scomp", F.col("src")).alias("src"),
-            F.coalesce("dcomp", F.col("dst")).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    return batch_e, base_lab, qe
+    src, dst, ids, s, d = _edge_positions(edges)
+    batch = (src >= ORDER_BASE) & (src < PART_BASE)
+    base_lab = _min_labels(s[~batch], d[~batch], len(ids))
+    qs, qd = base_lab[s[batch]], base_lab[d[batch]]
+    cross = qs != qd
+    warm_lab = _min_labels(qs[cross], qd[cross], len(ids))
+    comps, sizes = np.unique(base_lab, return_counts=True)
+    warm = warm_lab[comps]
+    n_warm = len(np.unique(warm))
+    return [
+        (k + 1, int(ids[comps[c]]), int(ids[warm[c]]), int(sizes[c]),
+         bool(comps[c] != warm[c]), len(comps), n_warm, True, True)
+        for k, c in enumerate(np.lexsort((comps, -sizes))[:_CC_INC_K])
+    ]
 
 
 @register(
@@ -1299,82 +1341,24 @@ def _cc_inc_quotient(spark: SparkSession, sf: str):
     "labels, the merged flag, and global base/warm component counts "
     "(the bridging pin lives IN the output: n_base_comps >> "
     "n_warm_comps). base_converged/q_converged are the oracle's "
-    "fixed-unroll guards; the Spark side runs the engine kernel "
-    "(graph/algorithms.py connected_components, strict=True — raises "
-    "rather than emit unconverged labels, so the literal True columns "
-    "are honest). Scale shape: base labels are the persisted state "
-    "(one BIGINT per vertex); per batch the work is two keyed joins "
-    "against the batch, CC on the tiny quotient (driver union-find "
-    "while the BATCH is under the adaptive threshold — |quotient| <= "
-    "|batch| — distributed propagation above), one relabel join, one "
-    "bounded top-k.",
+    "fixed-unroll guards; the engine side solves both graphs to the "
+    "fixpoint (graph/algorithms.py _min_labels stops only when no edge "
+    "hooks), so the literal True columns are honest. Scale shape: one "
+    "numpy body over the Arrow edge table (_numpy_entry), on the driver "
+    "up to LOCAL_EDGE_THRESHOLD edges, else in one executor task; 3 "
+    "Spark jobs with the count.",
 )
 def graph_cc_incremental(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    batch_e, base_lab, qe = _cc_inc_quotient(spark, sf)
-    # The quotient's strategy comes from the batch's exact size, because
-    # contraction never adds edges: |qe| <= |batch_e|. Catalyst sizes
-    # qe's two left outer joins as the product of their children
-    # (3.3e13 B at sf0.001, 3.0e19 B at sf0.1, for a quotient of 150 and
-    # 14,999 edges), which is past _STATS_DIST_BYTES, so ``auto`` on qe
-    # itself would run the distributed loop on a few hundred edges.
-    q_strategy = _pick_strategy(batch_e, "auto", LOCAL_EDGE_THRESHOLD)
-    qlab = connected_components(qe, strict=True, strategy=q_strategy)
-
-    # Batch-new vertices (none in this fixture — every order has its
-    # customer edge and every part its supplier edge in base — but the
-    # operator handles them: they entered the quotient at own id).
-    bverts = (
-        batch_e.select(F.col("src").alias("id"))
-        .union(batch_e.select(F.col("dst").alias("id")))
-        .distinct()
+    schema = (
+        "pos int, comp_base long, comp_warm long, n_vertices long, "
+        "merged boolean, n_base_comps long, n_warm_comps long, "
+        "base_converged boolean, q_converged boolean"
     )
-    newv = bverts.join(base_lab, "id", "left_anti").select(
-        "id", F.col("id").alias("comp")
-    )
-    allv = base_lab.unionByName(newv)
-
-    final = allv.join(
-        qlab.select(
-            F.col("id").alias("comp"), F.col("comp").alias("qcomp")
-        ),
-        "comp",
-        "left",
-    ).select(
-        "id",
-        F.col("comp").alias("comp_base"),
-        F.coalesce("qcomp", F.col("comp")).alias("comp_warm"),
-    )
-    stats = final.groupBy("comp_base").agg(
-        F.min("comp_warm").alias("comp_warm"),
-        F.count(F.lit(1)).cast("long").alias("n_vertices"),
-    )
-    tot = stats.agg(
-        F.count(F.lit(1)).cast("long").alias("n_base_comps"),
-        F.countDistinct("comp_warm").cast("long").alias("n_warm_comps"),
-    )
-    # TakeOrdered top-k, then pos over the bounded frame
-    # (test_plans._GLOBAL_WINDOW_OK); 1-row totals crossJoin
-    # (test_plans._BNLJ_OK).
-    w = Window.orderBy(F.col("n_vertices").desc(), F.col("comp_base"))
-    return (
-        stats.orderBy(F.col("n_vertices").desc(), "comp_base")
-        .limit(_CC_INC_K)
-        .withColumn("pos", F.row_number().over(w))
-        .crossJoin(tot)
-        .select(
-            "pos",
-            F.col("comp_base").cast("long"),
-            F.col("comp_warm").cast("long"),
-            "n_vertices",
-            (F.col("comp_base") != F.col("comp_warm")).alias("merged"),
-            "n_base_comps",
-            "n_warm_comps",
-            F.lit(True).alias("base_converged"),
-            F.lit(True).alias("q_converged"),
-        )
-        .orderBy("pos")
+    return _numpy_entry(
+        entity_edges(spark, sf, dedup=False),
+        _cc_incremental_rows,
+        StructType.fromDDL(schema),
+        LOCAL_EDGE_THRESHOLD,
     )
 
 

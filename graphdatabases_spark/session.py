@@ -8,6 +8,7 @@ knob that matters at 100 TB explicit:
 - UTC session timezone (deterministic timestamp rendering vs the oracle)
 - shuffle partitions sized from env (32 locally; a real cluster sets
   this to ~2-3x total cores or relies on AQE coalescing)
+- the package root on the Python workers' path, from any working dir
 """
 
 from __future__ import annotations
@@ -67,6 +68,11 @@ def get_spark(
         )
         # --- Python/Arrow ---------------------------------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Spark merges it with its own and the launcher's PYTHONPATH.
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
         # --- Determinism ----------------------------------------------------
         .config("spark.sql.session.timeZone", "UTC")
         # Read TIMESTAMP(NANOS) parquet (events.ts) as long; the table

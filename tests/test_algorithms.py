@@ -212,6 +212,32 @@ class TestLocalDistributedEquivalence:
         )
         assert loc == dist
 
+    @pytest.mark.parametrize("seed", range(4))
+    def test_min_labels_equal_union_find(self, seed):
+        """The vectorised min-label solve against a Python union-find on
+        random multigraphs with self-loops, plus a chain whose ids fall
+        along it (the longest hook-and-shortcut path)."""
+        import numpy as np
+
+        from graphdatabases_spark.graph.algorithms import _min_labels
+
+        rng = np.random.default_rng(seed)
+        n = 300
+        src, dst = rng.integers(0, n, 250), rng.integers(0, n, 250)
+        chain = np.arange(n - 1, 200, -1)
+        src, dst = np.r_[src, chain[:-1]], np.r_[dst, chain[1:]]
+        parent = list(range(n))
+
+        def find(x):
+            while parent[x] != x:
+                x = parent[x]
+            return x
+
+        for u, v in zip(src.tolist(), dst.tolist()):
+            ru, rv = find(u), find(v)
+            parent[max(ru, rv)] = min(ru, rv)
+        assert _min_labels(src, dst, n).tolist() == [find(v) for v in range(n)]
+
     def test_label_propagation(self, mixed_graph):
         loc = self._pairs(
             label_propagation(mixed_graph, num_iters=4, strategy="local")
@@ -345,11 +371,11 @@ class TestStrictMaxIters:
         }[kernel]
         # Strict first: the edge frames are fresh, so none of the caches
         # the call persists can be an earlier call's.
-        before = _cached_rdd_ids(spark)
+        before = _persisted_rdd_ids(spark)
         with pytest.raises(RuntimeError, match=f"max_iters={cap} exhausted") as err:
             run(strategy="distributed", strict=True)
         assert "fixpoint" in str(err.value) and fragment in str(err.value)
-        assert _cached_rdd_ids(spark) - before == set()
+        assert _persisted_rdd_ids(spark) - before == set()
         with _w.catch_warnings(record=True) as caught:
             _w.simplefilter("always")
             rows = run(strategy="distributed").collect()
@@ -360,25 +386,32 @@ class TestStrictMaxIters:
         assert "fixpoint" in msgs[0] and fragment in msgs[0]
 
 
-def _cached_rdd_ids(spark) -> set[int]:
-    """Ids of the persisted RDDs that are not local checkpoints. A
-    ``localCheckpoint``'s blocks are registered as persisted too, but
-    they are the detached result itself and live until the frame is
-    garbage-collected; a cache a kernel forgot to release is the rest."""
-    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+def _persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the persisted RDDs, local checkpoints included (their
+    blocks are registered as persisted too)."""
     return {
-        int(k)
-        for k in rdds.keySet().toArray()
-        if not rdds.get(k).rdd().isLocallyCheckpointed()
+        int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
     }
+
+
+def _checkpoints_read_by(df) -> set[int]:
+    """Ids of the local checkpoints that ``df``'s plan scans."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    ids = set()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            ids.add(int(leaf.rdd().id()))
+    return ids
 
 
 class TestLineageIndependence:
     """The superstep driver's release contract, on each of the nine
     distributed kernels: a returned frame never reads a cache the kernel
-    released (it collects the same rows after ``clearCache``), and no
-    cache the kernel persisted outlives the call (after a ``strict``
-    raise too: ``TestStrictMaxIters``)."""
+    released (it collects the same rows after ``clearCache``), and
+    nothing the kernel persisted outlives the call but the checkpoint
+    the result reads: no cache, no superseded round's checkpoint (after
+    a ``strict`` raise, nothing at all: ``TestStrictMaxIters``)."""
 
     @pytest.fixture()
     def edges(self, spark):
@@ -415,13 +448,25 @@ class TestLineageIndependence:
         "weighted_sssp": lambda e: weighted_sssp(e, 0, strategy="distributed"),
     }
 
+    def test_superseded_round_checkpoints_are_released(self, spark):
+        """Nine fixed rounds checkpoint at rounds 4 and 8 and once more
+        at the end: only the returned checkpoint stays persisted."""
+        from graphdatabases_spark.graph.algorithms import _supersteps
+
+        before = _persisted_rdd_ids(spark)
+        out = _supersteps(
+            spark.range(3), lambda df, _: df.select((F.col("id") + 1).alias("id")), 9
+        )
+        assert _persisted_rdd_ids(spark) - before == _checkpoints_read_by(out)
+        assert sorted(r.id for r in out.collect()) == [9, 10, 11]
+
     @pytest.mark.parametrize("kernel", sorted(_KERNELS))
     def test_result_survives_clear_cache_and_nothing_leaks(
         self, spark, edges, kernel
     ):
-        before = _cached_rdd_ids(spark)
+        before = _persisted_rdd_ids(spark)
         out = self._KERNELS[kernel](edges)
-        assert _cached_rdd_ids(spark) - before == set()
+        assert _persisted_rdd_ids(spark) - before <= _checkpoints_read_by(out)
         first = sorted(tuple(r) for r in out.collect())
         assert first
         spark.catalog.clearCache()

@@ -1,85 +1,152 @@
-"""Small-graph local paths of the incremental PageRank, CC-quotient and
-MIS-repair loops.
+"""Whole-entry numpy hosts of the ``graph_iterative`` entries.
 
-* The MIS append and deletion repair entries run one numpy body, on the
-  driver under the driver bound and in one executor task above it;
-  both hosts return the same row and leave no cache behind.
-* The quotient CC of ``graph_cc_incremental`` gives the same labels on
-  both strategies, and the batch-size gate picks ``local`` at sf0.001.
-* A job budget per entry: a future plan estimate that flips one of the
-  loops back to distributed fails here instead of silently costing
+* ``graph_pagerank_incremental``, ``graph_cc_incremental`` and the MIS
+  append and deletion repair entries each run one numpy body over one
+  Arrow edge table (``graph_queries._numpy_entry``): on the driver
+  under the entry's bound and in one executor task above it. Both
+  hosts return the same rows and leave nothing persisted behind, the
+  edge checkpoint included.
+* The Python worker of the task host imports the package from any
+  working directory, with ``PYTHONPATH`` unset.
+* A table read after the first one supplies the cached schema, so it
+  runs no schema-inference job; a rewritten file is inferred again.
+* A job budget per entry and host: a change that puts Spark work back
+  into one of these entries fails here instead of silently costing
   tens of Spark jobs. (``pagerank_units`` local vs distributed vs the
-  replay is pinned in ``test_round11_graph.py``.)
+  replay is pinned in ``test_round11_graph.py``; the local CC kernel
+  in ``test_algorithms.py::TestLocalDistributedEquivalence``.)
 """
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import uuid
 
 import pytest
 
-from graphdatabases_spark.graph.algorithms import connected_components
-from graphdatabases_spark.graph.traversal import LOCAL_EDGE_THRESHOLD, _pick_strategy
-from graphdatabases_spark.relational import graph_incremental_queries, queries
-from graphdatabases_spark.relational.graph_queries import _cc_inc_quotient
+import graphdatabases_spark
+from graphdatabases_spark.relational import (
+    graph_incremental_queries,
+    graph_queries,
+    queries,
+)
+from graphdatabases_spark.relational.catalog import table
+from graphdatabases_spark.relational.graph_queries import entity_edges
 
-from tests.test_algorithms import _cached_rdd_ids
+from tests.test_algorithms import _persisted_rdd_ids
 from tests.test_round13_graph import SF_SMALL
 
+_ENTRIES = [
+    "graph_cc_incremental",
+    "graph_mis_decremental",
+    "graph_mis_incremental",
+    "graph_pagerank_incremental",
+]
 
-@pytest.mark.parametrize("name", ["graph_mis_incremental", "graph_mis_decremental"])
+
+def _task_host(monkeypatch) -> None:
+    """Every entry's driver bound at 0, so each body runs in a task."""
+    monkeypatch.setattr(graph_queries, "LOCAL_EDGE_THRESHOLD", 0)
+    monkeypatch.setattr(graph_incremental_queries, "_SYM_LOCAL_EDGE_MAX", 0)
+
+
+def _jobs(spark, fn) -> int:
+    """The Spark jobs that ``fn()`` runs."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # The status store is fed asynchronously: empty the bus first.
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("name", _ENTRIES)
 def test_local_cascade_equals_distributed(spark, monkeypatch, name):
-    """The numpy repair runs on the driver on the default run; with the
-    driver bound at 0 it runs in one executor task instead, and both
-    hosts return the same row. Neither leaves a cache behind that is not
-    a local checkpoint."""
+    """The body runs on the driver on the default run; with the driver
+    bounds at 0 it runs in one executor task instead, and both hosts
+    return the same rows. Neither leaves a persisted RDD behind, not
+    even the edge checkpoint."""
     calls = []
-    task_frame = graph_incremental_queries._mis_task_frame
+    task_frame = graph_queries._task_frame
 
     def spy(*args, **kwargs):
         calls.append(1)
         return task_frame(*args, **kwargs)
 
-    monkeypatch.setattr(graph_incremental_queries, "_mis_task_frame", spy)
-    before = _cached_rdd_ids(spark)
+    monkeypatch.setattr(graph_queries, "_task_frame", spy)
+    before = _persisted_rdd_ids(spark)
     driver = queries()[name](spark, SF_SMALL).collect()
     assert calls == []
-    monkeypatch.setattr(graph_incremental_queries, "_SYM_LOCAL_EDGE_MAX", 0)
+    _task_host(monkeypatch)
     task = queries()[name](spark, SF_SMALL).collect()
     assert calls == [1]
-    assert _cached_rdd_ids(spark) - before == set()
-    assert driver == task
-    assert driver[0]["independent"] and driver[0]["maximal"]
+    assert _persisted_rdd_ids(spark) - before == set()
+    assert driver and driver == task
+    if name.startswith("graph_mis"):
+        assert driver[0]["independent"] and driver[0]["maximal"]
 
 
-def test_quotient_cc_local_equals_distributed(spark):
-    batch_e, _base_lab, qe = _cc_inc_quotient(spark, SF_SMALL)
-    assert _pick_strategy(batch_e, "auto", LOCAL_EDGE_THRESHOLD) == "local"
-    labels = {
-        s: sorted(
-            tuple(r)
-            for r in connected_components(qe, strict=True, strategy=s).collect()
-        )
-        for s in ("local", "distributed")
-    }
-    assert labels["local"] and labels["local"] == labels["distributed"]
+def test_task_host_imports_package_from_any_directory(tmp_path):
+    """get_spark puts the package root on the workers' PYTHONPATH: a
+    driver that found the package through ``sys.path`` alone, run from
+    another directory with PYTHONPATH unset, still gets its row from
+    the executor task."""
+    root = os.path.dirname(os.path.dirname(graphdatabases_spark.__file__))
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+from graphdatabases_spark import get_spark
+from graphdatabases_spark.relational import graph_incremental_queries, queries
+spark = get_spark(shuffle_partitions=2, driver_memory="1g")
+graph_incremental_queries._SYM_LOCAL_EDGE_MAX = 0
+rows = queries()["graph_mis_incremental"](spark, {SF_SMALL!r}).collect()
+print("ROW", len(rows), rows[0]["independent"])
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_OFFHEAP="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "ROW 1 True" in out.stdout.splitlines()
+
+
+def test_table_schema_is_inferred_once_per_file_version(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert table(spark, str(tmp_path), "t").columns == ["a"]
+    assert _jobs(spark, lambda: table(spark, str(tmp_path), "t")) == 0
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    df = table(spark, str(tmp_path), "t")
+    assert df.columns == ["b", "c"]
+    assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
 
 
 # Upper bounds on the Spark jobs of one build + count of each entry at
-# sf0.001, at most about 25% over the counts measured in the default test
-# session (8 shuffle partitions, 4 cores): 9 jobs for
-# graph_pagerank_incremental, 19 for graph_cc_incremental and 7 for each
-# MIS repair entry on either host (``:task``: the driver bound at 0, so
-# the numpy repair runs in one executor task). With the distributed loops
-# the first three ran 62, 56 and 97; with only the MIS cascade on the
-# driver the MIS entries ran 58 (append) and 54 (delete).
+# sf0.001, one over the counts measured in the default test session (8
+# shuffle partitions, 4 cores): 3 jobs for every entry on either host
+# (``:task``: the driver bounds at 0, so the body runs in one executor
+# task): the edge checkpoint, the Arrow collect (or the task) and the
+# count of the one-partition result. As Spark compositions
+# graph_pagerank_incremental ran 9 jobs and graph_cc_incremental 19;
+# with the distributed loops they ran 62 and 56, and the MIS entries 97.
 _JOB_BUDGET = {
-    "graph_pagerank_incremental": 11,
-    "graph_cc_incremental": 24,
-    "graph_mis_incremental": 8,
-    "graph_mis_decremental": 8,
-    "graph_mis_incremental:task": 8,
-    "graph_mis_decremental:task": 8,
+    f"{name}{host}": 4 for name in _ENTRIES for host in ("", ":task")
 }
 
 
@@ -87,15 +154,7 @@ _JOB_BUDGET = {
 def test_entry_job_budget(spark, monkeypatch, name):
     entry, _, host = name.partition(":")
     if host == "task":
-        monkeypatch.setattr(graph_incremental_queries, "_SYM_LOCAL_EDGE_MAX", 0)
-    sc = spark.sparkContext
-    group = f"job-budget-{entry}-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, name)
-    try:
-        queries()[entry](spark, SF_SMALL).count()
-    finally:
-        sc._jsc.clearJobGroup()
-    # The status store is fed asynchronously: empty the bus first.
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        _task_host(monkeypatch)
+    entity_edges(spark, SF_SMALL, dedup=False)  # table schemas cached
+    jobs = _jobs(spark, lambda: queries()[entry](spark, SF_SMALL).count())
     assert jobs <= _JOB_BUDGET[name], f"{name}: {jobs} Spark jobs"

@@ -294,13 +294,8 @@ class TestUniversalGates:
         # ordered window over the HORIZON-bounded hourly relation
         # (the events_hourly_autocorr pattern)
         "events_cusum_hourly",
-        # pos numbering over the limit(25) TakeOrdered frame (the
-        # docs_bm25_topk pattern)
-        "graph_pagerank_incremental",
         # pos numbering over the limit(k+1) TakeOrdered frame
         "docs_priority_sample",
-        # pos numbering over the limit(40) TakeOrdered frame
-        "graph_cc_incremental",
         # pos numbering over the limit(12) TakeOrdered frame
         "docs_token_mg_hitters",
         # cumulative window over the VALUE-bounded bucket list (the
@@ -380,7 +375,6 @@ class TestUniversalGates:
         "docs_dsir_weights",          # 1-row model-total scalars (tt, ct)
         "retrieval_rrf_fusion",       # same bounded runs as ndcg_mrr
         "events_cusum_hourly",        # 1-row baseline/split scalars
-        "graph_cc_incremental",       # 1-row base/warm comp-count totals
         "graph_triangle_delta",       # 1-row count scalars folded (x3)
         "docs_token_mg_hitters",      # 1-row error-bound scalar
         "docs_tok_range_partition_plan",  # 1-row histogram-totals scalar
