@@ -70,12 +70,16 @@ def local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFram
     ``spark.sql.execution.arrow.localRelationThreshold`` (48 MB by
     default); a larger table becomes a scan of its Arrow batches.
     """
+    return spark.createDataFrame(arrow_table(rows, schema), schema)
+
+
+def arrow_table(rows: list, schema: StructType):
+    """``rows`` as the ``pyarrow.Table`` that ``local_frame`` hands to Spark."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    arrow_schema = to_arrow_schema(schema)
     cols = {f.name: [row[i] for row in rows] for i, f in enumerate(schema.fields)}
-    return spark.createDataFrame(pa.table(cols, schema=arrow_schema), schema)
+    return pa.table(cols, schema=to_arrow_schema(schema))
 
 
 def prop(df_or_col, key: str) -> Column:

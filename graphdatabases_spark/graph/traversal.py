@@ -25,11 +25,15 @@ Execution strategy (the 100-TB design decision):
 - **local**: when the edge set is small enough to fit on the driver
   (adaptive threshold, like Catalyst collapsing small plans to
   LocalRelation), collect the adjacency list once (cached across calls
-  by plan semanticHash) and run BFS in-process. A 300-round distributed
-  loop on a 45k-edge graph pays ~300 job latencies for no parallelism
-  benefit; the local path answers in milliseconds, matching the
-  reference's server-side traversal times (BASELINE: 0.06-1.1 s for 300
-  hops).
+  by plan semanticHash in ``_ADJ_CACHE``) and run BFS in-process. A
+  300-round distributed loop on a 45k-edge graph pays ~300 job
+  latencies for no parallelism benefit; the local path answers in
+  milliseconds, matching the reference's server-side traversal times
+  (BASELINE: 0.06-1.1 s for 300 hops). The same cache holds the vertex
+  table that ``GraphEngine.get_single_node`` answers point lookups
+  from, and ``GraphEngine.flush()`` registers both indexes of the
+  post-write graph from the driver-held delta (``_extend_indexes``), so
+  reads after a write collect nothing again.
 - **auto** (default): decided first from the optimized plan's Catalyst
   ``sizeInBytes`` (``_decide_strategy``): local at or under 64 MB,
   distributed at or over 4 GB, and in between local if
@@ -58,7 +62,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from graphdatabases_spark.graph.model import PropertyGraph, local_frame
+from graphdatabases_spark.graph.model import (
+    VERTEX_SCHEMA,
+    PropertyGraph,
+    arrow_table,
+    local_frame,
+)
 
 DIST_SCHEMA = StructType(
     [
@@ -291,14 +300,18 @@ def _pick_strategy(edges: DataFrame, strategy: str, threshold: int) -> str:
     return "local" if edges.count() <= threshold else "distributed"
 
 
-def _decide_strategy(edges: DataFrame, strategy: str) -> str:
-    """'local' | 'distributed' | 'probe' (= stats inconclusive, count)."""
+def _decide_strategy(plan: DataFrame, strategy: str, kind: str = "edges") -> str:
+    """'local' | 'distributed' | 'probe' (= stats inconclusive, count).
+
+    ``kind`` names the driver index the local side reads from ``plan``:
+    ``"edges"`` (a traversal's CSR) or ``"vertices"`` (the point-lookup
+    table)."""
     if strategy != "auto":
         return strategy
-    # Already collected this edge set → local, no job at all.
-    if edges.semanticHash() in _ADJ_CACHE:
+    # Already collected this plan → local, no job at all.
+    if (kind, plan.semanticHash()) in _ADJ_CACHE:
         return "local"
-    size = _plan_size_bytes(edges)
+    size = _plan_size_bytes(plan)
     if size is not None:
         if size <= _STATS_LOCAL_BYTES:
             return "local"
@@ -313,13 +326,34 @@ def _decide_strategy(edges: DataFrame, strategy: str) -> str:
 # local fast path
 # ---------------------------------------------------------------------------
 
-# Tiny LRU for the local fast path: repeated traversals over the same
-# logical edge set (the reference's workload shape — many khop/ssp calls
-# against one loaded graph) skip the re-collect. Keyed by the analyzed
-# plan's semanticHash: same plan ⇒ same data within a session (mutation
-# goes through GraphEngine, which builds a new plan on every change).
-_ADJ_CACHE: dict[int, "_AdjIndex"] = {}
+# Tiny LRU of driver-side indexes: repeated traversals and point lookups
+# over the same logical graph (the reference's workload shape — many
+# khop/ssp/get_single_node calls against one loaded graph) skip the
+# re-collect. Keyed by (kind, semanticHash of the analyzed plan), kind
+# "edges" for an ``_AdjIndex`` and "vertices" for a ``_VertexIndex``, so
+# the two never collide: same plan ⇒ same data within a session
+# (mutation goes through GraphEngine, which builds a new plan on every
+# change). A hit moves its entry to the end; the oldest is evicted. An
+# engine session holds 4 entries: the base and the flushed graph's
+# vertex and edge indexes. Reads and writes pop and reinsert, never
+# index a key they checked before, so threads racing a fill or an
+# eviction at worst collect an index twice.
+_ADJ_CACHE: dict[tuple[str, int], object] = {}
 _ADJ_CACHE_MAX = 4
+
+
+def _cache_get(key: tuple[str, int]):
+    hit = _ADJ_CACHE.pop(key, None)
+    if hit is not None:
+        _ADJ_CACHE[key] = hit
+    return hit
+
+
+def _cache_put(key: tuple[str, int], idx) -> None:
+    _ADJ_CACHE.pop(key, None)
+    while len(_ADJ_CACHE) >= _ADJ_CACHE_MAX:
+        _ADJ_CACHE.pop(next(iter(list(_ADJ_CACHE)), None), None)
+    _ADJ_CACHE[key] = idx
 
 
 class _AdjIndex:
@@ -388,8 +422,8 @@ class _AdjIndex:
 
 def _collect_index(edges: DataFrame) -> _AdjIndex:
     """Collect the edge set to a driver-side CSR index via Arrow."""
-    key = edges.semanticHash()
-    hit = _ADJ_CACHE.get(key)
+    key = ("edges", edges.semanticHash())
+    hit = _cache_get(key)
     if hit is not None:
         return hit
     sel = edges.select("src", "dst")
@@ -402,15 +436,131 @@ def _collect_index(edges: DataFrame) -> _AdjIndex:
         src = pdf["src"].to_numpy()
         dst = pdf["dst"].to_numpy()
     idx = _AdjIndex(src, dst)
-    if len(_ADJ_CACHE) >= _ADJ_CACHE_MAX:
-        _ADJ_CACHE.pop(next(iter(_ADJ_CACHE)))
-    _ADJ_CACHE[key] = idx
+    _cache_put(key, idx)
     return idx
 
 
 def _collect_adjacency(edges: DataFrame) -> dict[int, list[int]]:
     """Driver-side adjacency dict (compat view over the CSR index)."""
     return _collect_index(edges).adj
+
+
+def _true(mask):
+    """An Arrow boolean array as a numpy mask, null read as False."""
+    return mask.fill_null(False).to_numpy(zero_copy_only=False)
+
+
+class _VertexIndex:
+    """Driver-side vertex table: the rows of one vertex plan, in its
+    collect order, as a single-chunk Arrow table.
+
+    ``first_match`` answers ``GraphEngine.get_single_node`` with Arrow
+    compute kernels over the flattened label values and property-map
+    entries, mapped back to rows, instead of a Spark filter job."""
+
+    def __init__(self, table):
+        self.table = table.combine_chunks()
+
+    def extended(self, rows) -> "_VertexIndex":
+        """This table followed by the Arrow table ``rows`` (its columns
+        renamed to these, types widened to the nullable union)."""
+        import pyarrow as pa
+
+        rows = rows.rename_columns(self.table.column_names)
+        return _VertexIndex(
+            pa.concat_tables([self.table, rows], promote_options="permissive")
+        )
+
+    def first_match(self, labels, properties):
+        """The first row holding every label in ``labels`` and mapping
+        every key of ``properties`` to its value, as the ``Row`` that
+        ``collect()`` gives, or None. A row matches exactly when the
+        ``array_contains`` / ``element_at ==`` filter of
+        ``GraphEngine.find_nodes`` keeps it: a null ``labels`` or
+        ``props``, a null label element and a null map value never
+        match."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        from pyspark.sql import Row
+
+        n = self.table.num_rows
+        if n == 0:
+            return None
+        keep = np.ones(n, dtype=bool)
+        if labels:
+            col = self.table.column("labels").chunk(0)
+            owner = pc.list_parent_indices(col).to_numpy()
+            values = col.flatten()
+            for label in labels:
+                hit = np.zeros(n, dtype=bool)
+                hit[owner[_true(pc.equal(values, label))]] = True
+                keep &= hit
+        if properties:
+            col = self.table.column("props").chunk(0)
+            offs = col.offsets.to_numpy()
+            owner = np.repeat(np.arange(n), np.diff(offs))
+            keys = col.keys.slice(offs[0], offs[-1] - offs[0])
+            items = col.items.slice(offs[0], offs[-1] - offs[0])
+            for k, v in properties.items():
+                at = np.flatnonzero(_true(pc.equal(keys, str(k))))
+                # element_at reads the first entry with the key.
+                rows, first = np.unique(owner[at], return_index=True)
+                ok = _true(pc.equal(items.take(at[first]), str(v)))
+                hit = np.zeros(n, dtype=bool)
+                hit[rows[ok]] = True
+                keep &= hit
+        match = np.flatnonzero(keep)
+        if len(match) == 0:
+            return None
+        rec = self.table.slice(int(match[0]), 1).to_pylist()[0]
+        for f in self.table.schema:
+            if pa.types.is_map(f.type) and rec[f.name] is not None:
+                rec[f.name] = dict(rec[f.name])
+        return Row(**rec)
+
+
+def _vertex_index(vertices: DataFrame) -> _VertexIndex:
+    """Collect the vertex table to a driver-side index via Arrow."""
+    key = ("vertices", vertices.semanticHash())
+    hit = _cache_get(key)
+    if hit is None:
+        hit = _VertexIndex(vertices.toArrow())
+        _cache_put(key, hit)
+    return hit
+
+
+def _extend_indexes(
+    old: PropertyGraph, new: PropertyGraph, nodes: list, edges: list
+) -> None:
+    """Register the indexes of ``new`` — ``old`` plus the flushed
+    ``nodes`` and ``edges`` rows (``GraphEngine.flush``) — from the cached
+    indexes of ``old``, without a job. The vertex table gains the node
+    rows; the CSR gains the edges whose two endpoints are vertex ids, the
+    rule of ``GraphEngine._validate_edges``. Nothing is registered for
+    an index whose ``old`` side is not cached, and the CSR only when the
+    vertex table is."""
+    import numpy as np
+
+    vidx = _cache_get(("vertices", old.vertices.semanticHash()))
+    if vidx is None:
+        return
+    if nodes:
+        vidx = vidx.extended(arrow_table(nodes, VERTEX_SCHEMA))
+    _cache_put(("vertices", new.vertices.semanticHash()), vidx)
+    eidx = _cache_get(("edges", old.edge_pairs().semanticHash()))
+    if eidx is None:
+        return
+    if edges:
+        ids = vidx.table.column("id").to_numpy()
+        src = np.array([e[0] for e in edges], dtype=np.int64)
+        dst = np.array([e[1] for e in edges], dtype=np.int64)
+        keep = np.isin(src, ids) & np.isin(dst, ids)
+        eidx = _AdjIndex(
+            np.concatenate([eidx.src, src[keep]]),
+            np.concatenate([eidx.dst, dst[keep]]),
+        )
+    _cache_put(("edges", new.edge_pairs().semanticHash()), eidx)
 
 
 def _bfs_numpy(idx: _AdjIndex, src: int, max_hops: int | None):
@@ -912,11 +1062,12 @@ def bfs_distances(
             if dist is None:  # src absent from the edge universe
                 return _local_result_df(spark, [(src, 0)], DIST_SCHEMA)
             mask = dist >= 0
+            # One partition: a count of the result is then one job.
             return _numpy_result_df(
                 spark,
                 {"id": idx.universe[mask], "dist": dist[mask]},
                 DIST_SCHEMA,
-            )
+            ).coalesce(1)
         return _bfs_distributed(edges, src, max_hops)
 
 
@@ -965,7 +1116,9 @@ def khop(
                 root_in = bool(np.any((du >= 0) & (du <= hops - 1)))
             if root_in:
                 mask[pos] = True
-            return _numpy_result_df(spark, {"id": idx.universe[mask]}, id_schema)
+            return _numpy_result_df(
+                spark, {"id": idx.universe[mask]}, id_schema
+            ).coalesce(1)
 
         visited = _bfs_distributed(edges, src, hops)
         result = visited.filter(F.col("dist") >= 1).select("id").localCheckpoint(

@@ -15,13 +15,24 @@ from graphdatabases_spark.graph import model as model_module
 from graphdatabases_spark.graph.api import GraphEngine
 from graphdatabases_spark.graph import io as graph_io
 from graphdatabases_spark.graph.generators import chain_graph, grid_graph
-from graphdatabases_spark.graph.model import EDGE_SCHEMA, VERTEX_SCHEMA, local_frame
+from graphdatabases_spark.graph import traversal as traversal_module
+from graphdatabases_spark.graph.model import (
+    EDGE_SCHEMA,
+    VERTEX_SCHEMA,
+    PropertyGraph,
+    local_frame,
+)
 from graphdatabases_spark.graph.traversal import (
+    _ADJ_CACHE,
     _STATS_LOCAL_BYTES,
+    _AdjIndex,
+    _cache_get,
+    _cache_put,
     _decide_strategy,
     _plan_size_bytes,
 )
 from graphdatabases_spark.harness.workloads import create_grid_graph
+from tests.test_local_paths import _jobs
 
 
 @pytest.fixture()
@@ -229,6 +240,217 @@ class TestExactStats:
             assert _plan_size_bytes(df) <= 1024 * max(n, 1)
             assert df.schema == schema
             assert [tuple(r) for r in df.collect()] == rows
+
+
+_LOOKUP_ROWS = [
+    (1, ["a", "b"], {"name": "u1", "k": "v"}),
+    (2, ["a"], {"name": "dup", "k": "v"}),
+    (3, ["b"], {"name": "dup", "k": "w"}),
+    (4, None, {"name": "nolabels"}),
+    (5, ["a", None], None),
+    (6, [None], {"name": None, "k": "v"}),
+    (7, [], {}),
+]
+
+_LOOKUPS = {
+    "unique-name": (None, {"name": "u1"}, True),
+    "missing-name": (None, {"name": "zzz"}, True),
+    "labels-honored": (["b"], {"name": "dup"}, True),
+    "labels-ignored": (["b"], {"name": "dup"}, False),
+    "two-properties": (None, {"name": "dup", "k": "w"}, True),
+    "two-labels": (["b", "a"], None, True),
+    "label-array-holding-null": (["a"], {"k": "v"}, True),
+    "null-labels": (["a"], {"name": "nolabels"}, True),
+    "null-labels-ignored": (["a"], {"name": "nolabels"}, False),
+    "null-map-value": (None, {"name": "None"}, True),
+    "label-after-null-props": (["a"], None, True),
+    "no-predicate": (None, None, True),
+    "null-element-only": (["x"], None, True),
+}
+
+
+def _index_path(engine) -> bool:
+    """Whether the engine's current vertex plan has a cached index."""
+    key = ("vertices", engine.graph.vertices.semanticHash())
+    return key in _ADJ_CACHE
+
+
+class TestDriverIndexes:
+    """``get_single_node`` answers from a driver-side vertex index under
+    the statistics bound, and ``flush()`` extends the cached vertex and
+    edge indexes instead of leaving the next read to re-collect them."""
+
+    @staticmethod
+    def _lookup_engine(spark):
+        return GraphEngine(
+            spark,
+            PropertyGraph(
+                local_frame(spark, _LOOKUP_ROWS, VERTEX_SCHEMA),
+                local_frame(spark, [], EDGE_SCHEMA),
+            ),
+        )
+
+    @pytest.mark.parametrize("case", sorted(_LOOKUPS))
+    def test_index_and_spark_filter_agree(self, spark, monkeypatch, case):
+        labels, props, match_labels = _LOOKUPS[case]
+        _ADJ_CACHE.clear()
+        engine = self._lookup_engine(spark)
+        got = engine.get_single_node(labels, props, match_labels)
+        assert _index_path(engine)
+        _ADJ_CACHE.clear()
+        monkeypatch.setattr(traversal_module, "_STATS_LOCAL_BYTES", 0)
+        want = engine.get_single_node(labels, props, match_labels)
+        assert not _index_path(engine)
+        assert got == want
+        if want is not None:
+            assert got.asDict() == want.asDict()
+
+    def test_statistics_bound_is_inclusive(self, spark, monkeypatch):
+        """At the bound the lookup reads the index; one byte past it,
+        the Spark filter, with no index collected."""
+        engine = self._lookup_engine(spark)
+        size = _plan_size_bytes(engine.graph.vertices)
+        for bound, indexed in ((size, True), (size - 1, False)):
+            _ADJ_CACHE.clear()
+            monkeypatch.setattr(traversal_module, "_STATS_LOCAL_BYTES", bound)
+            assert engine.get_single_node(properties={"name": "u1"})["id"] == 1
+            assert _index_path(engine) is indexed
+
+    @staticmethod
+    def _assert_indexes_fresh(engine):
+        """The cached indexes of the engine's graph hold what a fresh
+        collect of its plans gives."""
+        g = engine.graph
+        vidx = _ADJ_CACHE.get(("vertices", g.vertices.semanticHash()))
+        eidx = _ADJ_CACHE.get(("edges", g.edge_pairs().semanticHash()))
+        assert vidx is not None and eidx is not None
+        assert vidx.table.to_pylist() == g.vertices.toArrow().to_pylist()
+        tbl = g.edge_pairs().toArrow()
+        fresh = _AdjIndex(tbl.column("src").to_numpy(), tbl.column("dst").to_numpy())
+        assert sorted(zip(eidx.src.tolist(), eidx.dst.tolist())) == sorted(
+            zip(fresh.src.tolist(), fresh.dst.tolist())
+        )
+        assert eidx.universe.tolist() == fresh.universe.tolist()
+        adj = {}
+        for a, b in zip(fresh.src.tolist(), fresh.dst.tolist()):
+            adj.setdefault(a, []).append(b)
+        return adj
+
+    def test_flush_extends_cached_indexes(self, spark):
+        """Every flush, the 16th (which checkpoints both tables) among
+        them, registers post-flush indexes equal to fresh collects;
+        dangling edges are dropped as the semi-joins drop them, and the
+        traversals over the extended CSR match a pure-Python BFS."""
+        _ADJ_CACHE.clear()
+        engine = GraphEngine(spark, chain_graph(spark, 6))
+        assert engine.get_single_node(properties={"name": "test3"})["id"] == 3
+        assert engine.get_nodes_hops(0, 2).count() == 2
+        nid = 100
+        for i in range(engine._CHECKPOINT_FLUSHES):
+            engine.add_node(nid, ["w"], {"name": f"w{nid}"})
+            engine.add_edge(nid - 1 if i else 5, nid)
+            engine.add_edge(nid, 1000 + i)  # dangling dst
+            engine.add_edge(2000 + i, nid)  # dangling src
+            if i % 3 == 0:
+                engine.add_edge(nid, i % 6)  # back into the chain
+            engine.flush()
+            adj = self._assert_indexes_fresh(engine)
+            nid += 1
+        assert engine._flush_count == engine._CHECKPOINT_FLUSHES
+        assert "LogicalRDD" in engine.graph.vertices._jdf.queryExecution(
+        ).logical().toString()
+        row = engine.get_single_node(["w"], {"name": "w107"})
+        assert row is not None and row["id"] == 107
+        for src, hops in ((0, 3), (5, 8), (104, 30)):
+            got = {r["id"] for r in engine.get_nodes_hops(src, hops).collect()}
+            assert got == _khop_ids(adj, src, hops)
+        dist = _bfs_dist(adj, 0)
+        dst = max(dist, key=lambda v: (dist[v], -v))
+        rows = engine.ssp(0, dst).collect()
+        assert rows[0]["dist"] == dist[dst]
+
+    def test_nothing_cached_nothing_extended(self, spark):
+        _ADJ_CACHE.clear()
+        engine = GraphEngine(spark, chain_graph(spark, 4))
+        engine.add_node(10)
+        engine.add_edge(3, 10)
+        engine.flush()
+        assert not _ADJ_CACHE
+
+    @pytest.mark.parametrize("write", ["add_nodes_df", "merge_nodes_df", "clear", "load_database"])
+    def test_bulk_writes_leave_no_stale_index(self, spark, tmp_path, write):
+        _ADJ_CACHE.clear()
+        engine = GraphEngine(spark, chain_graph(spark, 4))
+        assert engine.get_single_node(properties={"test": "test"}) is None
+        assert engine.get_single_node(properties={"name": "test2"})["id"] == 2
+        assert engine.get_nodes_hops(0, 5).count() == 3
+        fresh = local_frame(spark, [(50, ["n"], {"test": "test"})], VERTEX_SCHEMA)
+        if write == "add_nodes_df":
+            engine.add_nodes_df(fresh)
+        elif write == "merge_nodes_df":
+            engine.merge_nodes_df(fresh)
+        elif write == "clear":
+            engine.clear()
+        else:
+            (tmp_path / "n.txt").write_text("50\n51\n")
+            (tmp_path / "e.tsv").write_text("50\t51\n")
+            engine.load_database(str(tmp_path / "n.txt"), str(tmp_path / "e.tsv"))
+        row = engine.get_single_node(properties={"test": "test"})
+        if write == "clear":
+            assert row is None
+            assert engine.get_single_node(properties={"name": "test2"}) is None
+            assert engine.get_nodes_hops(0, 5).count() == 0
+        else:
+            assert row is not None and row["id"] == 50
+            assert engine.get_single_node(properties={"name": "test2"})["id"] == 2
+            assert engine.get_nodes_hops(0, 5).count() == 3
+            loaded_edge = write == "load_database"
+            assert engine.get_nodes_hops(50, 1).count() == int(loaded_edge)
+
+    def test_job_counts(self, spark):
+        g = grid_graph(spark, 20)
+        g.vertices.persist().count()
+        g.edges.persist().count()
+        try:
+            _ADJ_CACHE.clear()
+            engine = GraphEngine(spark, g)
+            names = [f"test{i}" for i in (0, 7, 399, 123, 400)]
+            found = []
+            lookups = _jobs(spark, lambda: found.extend(
+                engine.get_single_node(properties={"name": n}) for n in names
+            ))
+            assert lookups <= 1, lookups
+            assert [r and r["id"] for r in found] == [0, 7, 399, 123, None]
+            assert engine.get_nodes_hops(0, 4).count() == 14
+            assert _jobs(spark, lambda: engine.get_nodes_hops(1, 4).count()) <= 1
+            engine.add_node(400, ["test"], {"name": "test400"})
+            engine.add_edge(0, 400)
+            engine.add_edge(400, 399)
+            engine.flush()
+            counts = []
+            after = _jobs(spark, lambda: counts.append(engine.get_nodes_hops(0, 4).count()))
+            assert after <= 1, after
+            assert counts == [16]
+            assert _jobs(spark, lambda: engine.get_single_node(
+                properties={"name": "test400"})) == 0
+            _ADJ_CACHE.clear()
+            assert _jobs(spark, lambda: engine.get_single_node(
+                properties={"name": "test400"})) >= 1
+        finally:
+            g.vertices.unpersist()
+            g.edges.unpersist()
+
+    def test_cache_hit_refreshes_entry(self, monkeypatch):
+        """A re-read entry survives as many later inserts as the cache
+        holds; insertion-order eviction would drop it at the last one."""
+        monkeypatch.setattr(traversal_module, "_ADJ_CACHE", {})
+        _cache_put(("edges", 0), "kept")
+        for i in range(1, traversal_module._ADJ_CACHE_MAX + 1):
+            assert _cache_get(("edges", 0)) == "kept"
+            _cache_put(("edges", i), i)
+        assert _cache_get(("edges", 0)) == "kept"
+        assert len(traversal_module._ADJ_CACHE) == traversal_module._ADJ_CACHE_MAX
+        assert ("edges", 1) not in traversal_module._ADJ_CACHE
 
 
 def test_driver_frames_come_from_local_frame(spark):
