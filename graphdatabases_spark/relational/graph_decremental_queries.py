@@ -7,9 +7,9 @@ DELETE — deleting a true/matched element frees its neighbors, and the
 same priority-DAG predicate-flip cascade applies with the seed being
 the freed dependents (lower-priority neighbors of deleted-TRUE
 elements).  Both entries share their repair with their append
-siblings in graph_incremental_queries — `_mis_repair` (one numpy body,
-on the driver or in one executor task) and `_line_warm_repair` — one
-cascade, both directions — and both
+siblings in graph_incremental_queries — `_mis_repair` and
+`_matching_repair`, each one numpy body on the driver or in one
+executor task: one cascade, both directions — and both
 oracles value-check warm == cold by unrolling the cold fixpoint of the
 PRUNED graph next to the cold fixpoint of the full graph (the same two
 graphs the append entries unroll with roles swapped, so the unroll
@@ -24,25 +24,20 @@ insert/delete symmetry for the incremental family.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from graphdatabases_spark.graph.traversal import broadcast_side
 from graphdatabases_spark.relational.catalog import register
 from graphdatabases_spark.relational.graph_incremental_queries import (
     _MI_MOD,
     _MI_ROUNDS,
     _MMI_ROUNDS,
-    _line_warm_repair,
+    _mat_row_schema,
+    _matching_repair,
     _mi_round_sql,
     _mis_repair,
     _mis_row_schema,
     _mmi_round_sql,
 )
-from graphdatabases_spark.relational.graph_kernels import _matching_kernel
-from graphdatabases_spark.relational.graph_queries import (
-    ENTITY_EDGES_SQL,
-    entity_edges,
-)
+from graphdatabases_spark.relational.graph_queries import ENTITY_EDGES_SQL
 
 # ---------------------------------------------------------------------------
 # MIS repair after an edge-batch DELETE
@@ -152,6 +147,9 @@ def graph_mis_decremental(spark: SparkSession, sf: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+_MAT_DEC_SCHEMA = _mat_row_schema("n_kept_edges", "n_deleted_edges")
+
+
 def _mde_mat_union(tag: str) -> str:
     return " UNION ALL ".join(
         f"SELECT src, dst FROM {tag}m{k}" for k in range(1, _MMI_ROUNDS + 1)
@@ -228,209 +226,17 @@ def _mde_mat_union(tag: str) -> str:
     "whose match was deleted re-matches its next free neighbor, "
     "possibly kicking a lower-priority match, which frees another "
     "vertex...) is exactly the flip propagation of the shared "
-    "_line_warm_repair. The oracle value-checks warm == cold by "
+    "_matching_repair. The oracle value-checks warm == cold by "
     "unrolling the cold rounds on the full and pruned graphs side by "
     "side (the same graph pair as the append oracle, roles swapped); "
     "n_changed_edges counts |full-cold Δ pruned-cold| — deleted "
     "matched edges count as changes. Proofs (no endpoint conflict, "
     "no free edge) on the kept graph, both engines; pure-Python "
-    "replay pin in tests/test_round14_graph.py. Scale shape: cold "
-    "phase is the shared argmin-edge kernel; the warm cascade "
-    "broadcasts only per-vertex matched-state and the cone-sized "
-    "dirty side (hub-degree-guarded local path, distributed "
-    "relaxation fallback).",
+    "replay pin in tests/test_round14_graph.py. Scale shape: the "
+    "append entry's (one _matching_repair, two edge universes): the "
+    "whole entry is one numpy body over the Arrow edge table, on the "
+    "driver under _SYM_LOCAL_EDGE_MAX // 2 edge rows and in one "
+    "executor task above it, 3 Spark jobs either way with the count.",
 )
 def graph_matching_decremental(spark: SparkSession, sf: str) -> DataFrame:
-    from graphdatabases_spark.functions import text as T
-
-    g = (
-        entity_edges(spark, sf, dedup=True)
-        .withColumn(
-            "h",
-            T.portable_hash64(
-                F.concat(
-                    F.lit("mat"),
-                    F.col("src").cast("string"),
-                    F.lit(":"),
-                    F.col("dst").cast("string"),
-                )
-            )
-            * F.lit(32768)
-            + (F.col("src") * 31 + F.col("dst")) % 32768,
-        )
-        .localCheckpoint(eager=True)
-    )
-    is_del = ((F.col("src") + F.col("dst")) % _MI_MOD) == 0
-    # One pass for both edge counts (round 14; was two full scans).
-    _gc = g.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(is_del, 1)).alias("nd"),
-    ).collect()[0]
-    n_edges, n_deleted_edges = _gc["n"], _gc["nd"]
-    # Base phase: cold kernel on the FULL pre-delete edge set.
-    mat_base = _matching_kernel(spark, g, n_edges)
-    base_row = mat_base.agg(
-        F.count(F.lit(1)).cast("long").alias("sz"),
-        F.sum(F.col("src") + F.col("dst")).cast("long").alias("cks"),
-    ).collect()[0]
-    # Kept-universe edge-status relation: deleted edges leave the
-    # universe; s = full-matching membership among kept edges.
-    g_keep = g.filter(~is_del).localCheckpoint(eager=True)
-    estat = (
-        g_keep.join(
-            broadcast_side(mat_base.withColumn("s0", F.lit(True)), base_row["sz"]),
-            ["src", "dst"],
-            "left",
-        )
-        .select(
-            "src", "dst", "h", F.coalesce(F.col("s0"), F.lit(False)).alias("s")
-        )
-        .localCheckpoint(eager=True)
-    )
-    x = (
-        estat.select(
-            F.col("src").alias("v"),
-            F.col("src").alias("fsrc"),
-            F.col("dst").alias("fdst"),
-            F.col("h").alias("fh"),
-            F.col("s").alias("fs"),
-        )
-        .unionByName(
-            estat.select(
-                F.col("dst").alias("v"),
-                F.col("src").alias("fsrc"),
-                F.col("dst").alias("fdst"),
-                F.col("h").alias("fh"),
-                F.col("s").alias("fs"),
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    # Per-vertex matched-state from KEPT true edges only (a deleted
-    # matched edge must stop blocking immediately).
-    vstat0 = (
-        estat.filter(F.col("s"))
-        .select(F.col("src").alias("v"), F.col("h").alias("m1"))
-        .unionByName(
-            estat.filter(F.col("s")).select(
-                F.col("dst").alias("v"), F.col("h").alias("m1")
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    n_vstat0 = 2 * base_row["sz"]
-    # Dirty seed: kept edges at an endpoint of a deleted-TRUE edge,
-    # with priority LOWER than the deleted edge's (strictly-higher-
-    # priority adjacents never read lower-priority state, and deleted
-    # FALSE edges fed no dependency).
-    del_true = (
-        g.filter(is_del)
-        .join(
-            broadcast_side(mat_base.select("src", "dst"), base_row["sz"]),
-            ["src", "dst"],
-            "left_semi",
-        )
-        .localCheckpoint(eager=True)
-    )
-    n_del_true = del_true.count()
-    del_ends = (
-        del_true.select(F.col("src").alias("v"), F.col("h").alias("hdel"))
-        .unionByName(
-            del_true.select(F.col("dst").alias("v"), F.col("h").alias("hdel"))
-        )
-    )
-    # ...and not already blocked at the OTHER endpoint under the base
-    # state (then its value stays false; a cascade flip there re-fires
-    # the propagation filter).  vstat0 has <= 1 row per vertex (it is
-    # a matching), so the left join cannot fan out.  The unrefined
-    # seed pulled ~1/3 of |E| at the deleted hubs (measured, SCALE.md
-    # round 14); this is the same value-can't-change rule the shared
-    # propagation applies, fuzz-pinned in both directions.
-    dirty = (
-        x.join(broadcast_side(del_ends, 2 * n_del_true), "v")
-        .filter(F.col("fh") > F.col("hdel"))
-        .withColumn("ov", F.col("fsrc") + F.col("fdst") - F.col("v"))
-        .join(
-            broadcast_side(
-                vstat0.select(
-                    F.col("v").alias("ov"), F.col("m1").alias("om1")
-                ),
-                n_vstat0,
-            ),
-            "ov",
-            "left",
-        )
-        .filter(~F.coalesce(F.col("om1") < F.col("fh"), F.lit(False)))
-        .select(
-            F.col("fsrc").alias("src"),
-            F.col("fdst").alias("dst"),
-            F.col("fh").alias("h"),
-            F.col("fs").alias("s"),
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_dirty = dirty.count()
-    delta, n_delta = _line_warm_repair(
-        spark, x, vstat0, dirty, n_dirty, n_vstat0, b=1
-    )
-    final = (
-        estat.join(
-            broadcast_side(delta, n_delta),
-            (estat.src == F.col("dsrc")) & (estat.dst == F.col("ddst")),
-            "left",
-        )
-        .select(
-            "src", "dst",
-            F.coalesce(F.col("dls"), F.col("s")).alias("sf"),
-            F.col("s").alias("sb"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    warm_mat = final.filter(F.col("sf")).select("src", "dst").localCheckpoint(
-        eager=True
-    )
-    warm_row = warm_mat.agg(
-        F.count(F.lit(1)).cast("long").alias("sz"),
-        F.sum(F.col("src") + F.col("dst")).cast("long").alias("cks"),
-    ).collect()[0]
-    # Changes vs the FULL base matching: kept-edge flips plus the
-    # deleted matched edges themselves (they left the result).
-    n_changed_edges = (
-        final.filter(F.col("sf") != F.col("sb")).count() + n_del_true
-    )
-    mv = (
-        warm_mat.select(F.col("src").alias("v"))
-        .unionByName(warm_mat.select(F.col("dst").alias("v")))
-        .localCheckpoint(eager=True)
-    )
-    conflict = mv.groupBy("v").agg(F.count(F.lit(1)).alias("c")).filter(
-        F.col("c") > 1
-    ).count()
-    n_mv = 2 * warm_row["sz"]
-    free_viol = (
-        g_keep.join(
-            broadcast_side(mv, n_mv).withColumnRenamed("v", "xsrc"),
-            g_keep.src == F.col("xsrc"),
-            "left_anti",
-        )
-        .join(
-            broadcast_side(mv, n_mv).withColumnRenamed("v", "xdst"),
-            F.col("dst") == F.col("xdst"),
-            "left_anti",
-        )
-        .count()
-    )
-    return spark.range(1).select(
-        F.lit(n_edges).cast("long").alias("n_edges"),
-        F.lit(n_edges - n_deleted_edges).cast("long").alias("n_kept_edges"),
-        F.lit(n_deleted_edges).cast("long").alias("n_deleted_edges"),
-        F.lit(base_row["sz"]).cast("long").alias("base_matching_size"),
-        F.lit(base_row["cks"]).cast("long").alias("base_sum_ids"),
-        F.lit(warm_row["sz"]).cast("long").alias("warm_matching_size"),
-        F.lit(warm_row["cks"]).cast("long").alias("warm_sum_ids"),
-        F.lit(n_changed_edges).cast("long").alias("n_changed_edges"),
-        F.lit(conflict == 0).alias("is_matching"),
-        F.lit(free_viol == 0).alias("maximal"),
-        F.lit(True).alias("converged"),
-    )
+    return _matching_repair(spark, sf, delete=True, b=1, schema=_MAT_DEC_SCHEMA)

@@ -3,14 +3,14 @@ graph analytics, the incremental family).
 
 Pure-move split out of graph_symmetry_queries.py (round 13 — that
 module was heading for the 2k bar with the b-matching addition): the
-priority-DAG cascade repairs for MIS and maximal matching after an
-edge-batch append.  The MIS repair (``_mis_repair``, shared with the
-deletion entry in graph_decremental_queries) is one numpy body over the
-entry's Arrow edge table — base MIS, cascade, proofs — run on the
-driver when the symmetric relation fits ``_SYM_LOCAL_EDGE_MAX`` rows
-and in one executor task above it.  The matching repair keeps its
-sub-threshold driver-local cascade with lazy adjacency fetches.  Same
-entries, same oracles, registry unchanged.
+priority-DAG cascade repairs for MIS, maximal matching and b-matching
+after an edge-batch append.  The MIS repair (``_mis_repair``) and the
+(b-)matching repair (``_matching_repair``), both shared with the
+deletion entries in graph_decremental_queries, are each one numpy body
+over the entry's Arrow edge table — base fixpoint, cascade, proofs —
+run on the driver under a ``_SYM_LOCAL_EDGE_MAX`` bound and in one
+executor task above it.  Same entries, same oracles, registry
+unchanged.
 """
 
 from __future__ import annotations
@@ -19,15 +19,21 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType, LongType, StructField, StructType
+from pyspark.sql.types import (
+    BooleanType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
-from graphdatabases_spark.graph.model import local_frame
-from graphdatabases_spark.graph.traversal import broadcast_side
 from graphdatabases_spark.relational.catalog import register
 from graphdatabases_spark.relational.graph_kernels import (
     _SYM_LOCAL_EDGE_MAX,
-    _SYM_LOCAL_V_MAX,
+    _capacity_greedy,
+    _matching_priority,
     _mis_greedy,
+    _pair_hash,
 )
 from graphdatabases_spark.relational.graph_queries import (
     ENTITY_EDGES_SQL,
@@ -86,18 +92,23 @@ def _segments(lo, hi):
     return np.arange(int(counts.sum())) + starts, owner
 
 
+def _row_schema(counts: list[str], proofs: tuple[str, ...]) -> StructType:
+    """A repair entry's one-row result: the ``counts`` as LongType (the
+    capacity ``b`` as IntegerType), then the ``proofs`` as BooleanType.
+    Built without ``fromDDL``, which needs a JVM: a task host's Python
+    worker imports this module."""
+    return StructType(
+        [StructField(c, IntegerType() if c == "b" else LongType()) for c in counts]
+        + [StructField(c, BooleanType()) for c in proofs]
+    )
+
+
 def _mis_row_schema(kept: str, changed: str) -> StructType:
     """The one-row result of a MIS repair entry; ``kept``/``changed``
     name its two edge-count columns."""
     counts = ["n_vertices", kept, changed, "base_mis_size", "base_sum_ids",
               "warm_mis_size", "warm_sum_ids", "n_flipped"]
-    return StructType(
-        [StructField(c, LongType()) for c in counts]
-        + [
-            StructField(c, BooleanType())
-            for c in ("independent", "maximal", "converged")
-        ]
-    )
+    return _row_schema(counts, ("independent", "maximal", "converged"))
 
 
 _MIS_INC_SCHEMA = _mis_row_schema("n_base_edges", "n_batch_edges")
@@ -301,385 +312,152 @@ def graph_mis_incremental(spark: SparkSession, sf: str) -> DataFrame:
 _MMI_ROUNDS = 10  # oracle unroll per phase (cold fixpoint 5/5/6 measured)
 
 
-def _mat_cascade_local(
-    spark,
-    x: DataFrame,
-    vstat0: DataFrame,
-    dirty_df: DataFrame,
-    b: int = 1,
-):
-    """Driver-local matching cascade with LAZY adjacency fetches: the
-    cascade's working state (batch edges, per-vertex true-h lists,
-    status overrides) is cone-sized, so run the relaxation in-process
-    and pull the endpoint index rows for newly-touched vertices one
-    bounded Spark job per round — ~1 job/round instead of the
-    distributed loop's ~8 actions/round of scheduling floor.  Exact
-    same fixpoint (the pure-Python replay IS this algorithm).  Returns
-    the (dsrc, ddst, dls) status-override relation, or ``None`` when a
-    fetch would exceed the Arrow collect budget — the guard at the
-    call site bounds batch size and base-matching size but NOT vertex
-    degree, and a hub endpoint would otherwise pull its entire
-    neighborhood to the driver (the same blowup the distributed warm
-    path was redesigned to avoid).  Each fetch is therefore counted
-    before collecting (as _induced_local does) against a cumulative
-    _SYM_LOCAL_EDGE_MAX budget; on breach the caller falls back to the
-    distributed relaxation, which reads only per-vertex matched-state
-    and is hub-safe by construction.
+def _mat_row_schema(kept: str, changed: str) -> StructType:
+    """The one-row result of a matching repair entry; ``kept``/``changed``
+    name its two edge-count columns."""
+    counts = ["n_edges", kept, changed, "base_matching_size", "base_sum_ids",
+              "warm_matching_size", "warm_sum_ids", "n_changed_edges"]
+    return _row_schema(counts, ("is_matching", "maximal", "converged"))
 
-    ``b`` (round 14): per-vertex capacity — blocked(e at v) is "at
-    least b true adjacent edges with smaller h", which for b = 1 is
-    exactly the maximal-matching rule; graph_bmatching_incremental
-    passes its capacity and an EXPLODED vstat0 (one row per base-true
-    h per endpoint), and the same cascade repairs the b-matching."""
-    from graphdatabases_spark.relational.graph_kernels import (
-        _SYM_LOCAL_EDGE_MAX,
-        _ids_df,
+
+_MAT_INC_SCHEMA = _mat_row_schema("n_base_edges", "n_batch_edges")
+
+
+def _matching_repair_local(edges, delete: bool, b: int) -> list[tuple]:
+    """A whole (b-)matching repair entry in numpy over the Arrow table
+    of the entity ``edges``: their distinct pairs (``_edge_positions``)
+    with the priority ``h`` and, for b-matching, the weight ``w``.
+    Returns the entry's one result row. An edge is taken iff at both
+    endpoints fewer than ``b`` taken edges have a smaller ``(h, src,
+    dst)`` priority (b = 1: maximal matching). As in
+    ``_mis_repair_local``, both directions are one computation with two
+    edge universes over the batch ``(src + dst) % _MI_MOD == 0``: on
+    append the base graph drops the batch and the warm graph has every
+    edge; on delete the base graph has every edge and the warm graph
+    drops the batch. The steps: the cold greedy of the base graph
+    (``_capacity_greedy``); the dirty seed (append: the batch edges,
+    which enter untaken; delete: the kept edges ranked below a deleted
+    taken edge at a shared endpoint and not blocked at their other
+    one); the priority-DAG cascade in Jacobi rounds — each round judges
+    the dirty edges against the previous round's statuses, flips the
+    changed ones, and the next dirty set is the edges at a flip's
+    endpoint whose blocked-there predicate changed, less those whose
+    value cannot change (untaken and now blocked there, or untaken and
+    blocked at their other endpoint); and the sizes, weights,
+    checksums, the changed-edge count and the b-feasibility and
+    maximality proofs on the warm graph."""
+    import numpy as np
+
+    weights = ["w"] if "w" in edges.column_names else []
+    src, dst, ids, s, d, h, *w = _edge_positions(edges, "h", *weights)
+    n, m = len(ids), len(src)
+    batch = (src + dst) % _MI_MOD == 0
+    # The pairs come sorted by (src, dst): a stable sort on h ranks them.
+    rank = np.empty(m, dtype=np.int64)
+    rank[np.argsort(h, kind="stable")] = np.arange(m)
+    every = np.ones_like(batch)
+    base_e, warm_e = (every, ~batch) if delete else (~batch, every)
+    base = np.zeros(m, dtype=bool)
+    base[base_e] = _capacity_greedy(
+        rank[base_e], s[base_e], d[base_e], np.full(n, b)
     )
+    # The warm graph's incidences, keyed vertex * M + rank and sorted:
+    # each vertex's incident edges in priority order. M leaves room
+    # for the rank m, which stands for "none".
+    M = m + 1
+    ie = np.tile(np.flatnonzero(warm_e), 2)
+    key = np.concatenate([s[warm_e], d[warm_e]]) * M + rank[ie]
+    order = np.argsort(key)
+    key, ie = key[order], ie[order]
 
-    fetched_rows = 0
+    def taken_keys(mask):  # sorted, with a sentinel past every vertex
+        t = np.flatnonzero(mask)
+        ends = np.concatenate([s[t], d[t], [n]])
+        return np.sort(ends * M + np.r_[rank[t], rank[t], 0])
 
-    vtrue: dict[int, list[int]] = {}
-    for r in vstat0.toPandas().itertuples(index=False):
-        vtrue.setdefault(int(r.v), []).append(int(r.m1))
-    status: dict[tuple[int, int], bool] = {}
-    base_s: dict[tuple[int, int], bool] = {}
-    hmap: dict[tuple[int, int], int] = {}
-    dirty_set: set[tuple[int, int]] = set()
-    for r in dirty_df.select("src", "dst", "h", "s").toPandas().itertuples(
-        index=False
-    ):
-        e = (int(r.src), int(r.dst))
-        base_s[e] = bool(r.s)
-        hmap[e] = int(r.h)
-        dirty_set.add(e)
-    adj: dict[int, list[tuple[tuple[int, int], int]]] = {}
-    fetched: set[int] = set()
+    def bar(tk, v):
+        """Per vertex in ``v``, the b-th smallest rank among its taken
+        edges (m if it has fewer): an edge ranked above it is blocked
+        there."""
+        at = np.minimum(np.searchsorted(tk, v * M) + b - 1, len(tk) - 1)
+        return np.where(tk[at] // M == v, tk[at] % M, m)
 
-    def stat(e):
-        return status.get(e, base_s.get(e, False))
+    def ranked_in(v, lo, hi):
+        """The incidences at each vertex in ``v`` ranked in ``(lo, hi]``,
+        as (edge, index into ``v``)."""
+        pos, owner = _segments(
+            np.searchsorted(key, v * M + lo, side="right"),
+            np.searchsorted(key, v * M + hi, side="right"),
+        )
+        return ie[pos], owner
 
-    while dirty_set:
-        changed = []
-        for e in dirty_set:
-            he = hmap[e]
-            blocked = any(
-                sum(1 for hh in vtrue.get(v, ()) if hh < he) >= b for v in e
-            )
-            ns = not blocked
-            if ns != stat(e):
-                changed.append((e, ns))
-        dirty_set = set()
-        if not changed:
+    warm = base & warm_e
+    tk = taken_keys(warm)
+    if delete:
+        lost = np.flatnonzero(batch & base)
+        v = np.concatenate([s[lost], d[lost]])
+        f, owner = ranked_in(v, np.tile(rank[lost], 2), m)
+        cur = np.unique(f[rank[f] <= bar(tk, s[f] + d[f] - v[owner])])
+    else:
+        cur = np.flatnonzero(batch)
+    while len(cur):
+        blocked = (rank[cur] > bar(tk, s[cur])) | (rank[cur] > bar(tk, d[cur]))
+        flip = cur[blocked == warm[cur]]
+        if not len(flip):
             break
-        av = set()
-        for e, ns in changed:
-            status[e] = ns
-            av.add(e[0])
-            av.add(e[1])
-        new_verts = [v for v in av if v not in fetched]
-        if new_verts:
-            sel = x.join(
-                F.broadcast(
-                    _ids_df(spark, new_verts).withColumnRenamed("id", "v")
-                ),
-                "v",
-                "left_semi",
-            )
-            # Degree guard: count before collecting.  The broadcast
-            # semi costs no exchange; a rejected probe wastes one scan
-            # of the checkpointed index, an accepted one recomputes it
-            # straight into Arrow.
-            fetched_rows += sel.count()
-            if fetched_rows > _SYM_LOCAL_EDGE_MAX:
-                return None
-            rows = sel.toPandas()
-            for rr in rows.itertuples(index=False):
-                e = (int(rr.fsrc), int(rr.fdst))
-                hmap.setdefault(e, int(rr.fh))
-                base_s.setdefault(e, bool(rr.fs))
-                adj.setdefault(int(rr.v), []).append((e, hmap[e]))
-            fetched.update(new_verts)
-        for e, ns in changed:
-            he = hmap[e]
-            for v in e:
-                hs = vtrue.setdefault(v, [])
-                old = list(hs)
-                if ns:
-                    hs.append(he)
-                elif he in hs:
-                    hs.remove(he)
-                for f, hf in adj.get(v, ()):
-                    if f == e:
-                        continue
-                    po = sum(1 for hh in old if hh < hf) >= b
-                    pn = sum(1 for hh in hs if hh < hf) >= b
-                    if po != pn:
-                        # Refined propagation (round 14, fuzz-pinned):
-                        # skip f when its VALUE provably cannot change
-                        # — f false & newly blocked at v stays false;
-                        # f false & unblocked at v but still blocked
-                        # at its other endpoint stays false (a later
-                        # state change there re-fires po != pn).  All
-                        # of this round's status flips were applied
-                        # above, so stat(f) is round-consistent — the
-                        # pending-read hazard the fuzz caught.  Cut
-                        # measured recompute ~5x on the hub-heavy
-                        # deletion cascade (SCALE.md round 14).
-                        if not stat(f):
-                            if pn:
-                                continue
-                            u = f[0] + f[1] - v
-                            if (
-                                sum(1 for hh in vtrue.get(u, ()) if hh < hf)
-                                >= b
-                            ):
-                                continue
-                        dirty_set.add(f)
-    overrides = [
-        (e[0], e[1], s)
-        for e, s in status.items()
-        if s != base_s.get(e, False)
-    ]
-    schema = StructType.fromDDL("dsrc long, ddst long, dls boolean")
-    return local_frame(spark, overrides, schema), len(overrides)
+        warm[flip] = ~warm[flip]
+        v = np.unique(np.concatenate([s[flip], d[flip]]))
+        old, tk = bar(tk, v), taken_keys(warm)
+        new = bar(tk, v)
+        f, owner = ranked_in(v, np.minimum(old, new), np.maximum(old, new))
+        keep = warm[f] | (
+            (rank[f] <= new[owner]) & (rank[f] <= bar(tk, s[f] + d[f] - v[owner]))
+        )
+        cur = np.unique(f[keep])
+    deg = np.bincount(np.concatenate([s[warm], d[warm]]), minlength=n)
+
+    def side(mask):  # Spark's sum over no rows is null
+        sums = [c[mask].sum() for c in (*w, src + dst)]
+        return [int(mask.sum())] + [int(x) if mask.any() else None for x in sums]
+
+    return [(
+        m,
+        int((~batch).sum()),
+        int(batch.sum()),
+        *([b] if w else []),
+        *side(base),
+        *side(warm),
+        int((base != warm).sum()),
+        bool((deg <= b).all()),
+        not (warm_e & ~warm & (deg[s] < b) & (deg[d] < b)).any(),
+        True,
+    )]
 
 
-def _line_warm_repair(
-    spark,
-    x: DataFrame,
-    vstat0: DataFrame,
-    dirty: DataFrame,
-    n_dirty: int,
-    n_vstat0: int,
-    b: int = 1,
-):
-    """Shared warm-phase cascade for the line-graph repair entries
-    (graph_matching_incremental b = 1, graph_bmatching_incremental
-    b = capacity): relax edge statuses from the dirty seed until the
-    unique priority-DAG fixpoint, returning the ``(delta, n_delta)``
-    status-override relation.  blocked(e at v) = "at least b true
-    adjacent edges with smaller h" — a pure function of the strictly-
-    higher-priority adjacent edges, so chaotic relaxation converges to
-    the cold greedy fixpoint for ANY capacity.  Inputs: ``x`` the
-    endpoint index (v, fsrc, fdst, fh, fs), ``vstat0`` the EXPLODED
-    base vertex state (one (v, m1) row per base-true h per endpoint —
-    <= b rows per vertex at a fixpoint), ``dirty`` the seed edges
-    (src, dst, h, s).  Tries the driver-local cascade below the Arrow
-    bounds (hub-degree-guarded — bails back here on breach), then the
-    distributed relaxation whose per-round joins broadcast the
-    cascade-cone-sized side only."""
-    delta = local_frame(
-        spark, [], StructType.fromDDL("dsrc long, ddst long, dls boolean")
+def _matching_repair(
+    spark: SparkSession, sf: str, delete: bool, b: int, schema: StructType
+) -> DataFrame:
+    """A (b-)matching repair entry (``delete``: the deletion one) by
+    _matching_repair_local, on the driver while the entity edges fit
+    ``_SYM_LOCAL_EDGE_MAX // 2`` rows (_numpy_entry). b = 1 ranks the
+    edges by graph_matching_greedy's priority, a capacity b > 1 by
+    graph_bmatching_greedy's weight-majored one, with the weight."""
+    from graphdatabases_spark.relational.graph_symmetry_queries import _BM_P48
+
+    edges = entity_edges(spark, sf, dedup=False)
+    if b == 1:
+        edges = edges.withColumn("h", _matching_priority())
+    else:
+        w = ((F.col("src") * 7 + F.col("dst") * 13) % 100 + 1).cast("long")
+        edges = edges.withColumns(
+            {"h": (100 - w) * F.lit(_BM_P48) + _pair_hash("bmat"), "w": w}
+        )
+    return _numpy_entry(
+        edges,
+        partial(_matching_repair_local, delete=delete, b=b),
+        schema,
+        _SYM_LOCAL_EDGE_MAX // 2,
     )
-    n_delta = 0
-    vdelta = local_frame(spark, [], StructType.fromDDL("v long, hs array<bigint>"))
-    n_vdelta = 0
-    if (
-        n_dirty > 0
-        and n_dirty <= _SYM_LOCAL_EDGE_MAX
-        and n_vstat0 <= _SYM_LOCAL_V_MAX
-    ):
-        # None = a lazy fetch breached the degree-aware edge budget
-        # (hub endpoint); fall through to the distributed path.
-        res = _mat_cascade_local(spark, x, vstat0, dirty, b=b)
-        if res is not None:
-            return res
-    if n_dirty == 0:
-        return delta, n_delta
-    empty_arr = F.array().cast("array<bigint>")
-    # Base state as per-vertex sorted arrays (b-safe: the exploded
-    # form would fan the judged join out b-fold per endpoint).
-    vstat0a = (
-        vstat0.groupBy("v")
-        .agg(F.array_sort(F.collect_list("m1")).alias("hs0"))
-        .localCheckpoint(eager=True)
-    )
-
-    def _blocked_at(side: str):
-        # blocked at an endpoint: at least b true edges there with
-        # h < ours — strict <, so the edge itself never blocks.
-        vd = broadcast_side(
-            vdelta.select(F.col("v").alias(f"{side}v"), F.col("hs").alias(f"{side}hs")),
-            n_vdelta,
-        )
-        v0 = broadcast_side(
-            vstat0a.select(
-                F.col("v").alias(f"{side}v0"), F.col("hs0").alias(f"{side}hs0")
-            ),
-            n_vstat0,
-        )
-        return vd, v0
-
-    def _blk(side: str):
-        eff = F.coalesce(
-            F.col(f"{side}hs"), F.col(f"{side}hs0"), empty_arr
-        )
-        return F.size(F.filter(eff, lambda hh: hh < F.col("h"))) >= b
-
-    while n_dirty > 0:
-        svd, sv0 = _blocked_at("s")
-        dvd, dv0 = _blocked_at("d")
-        judged = (
-            dirty.join(svd, dirty.src == F.col("sv"), "left")
-            .join(sv0, dirty.src == F.col("sv0"), "left")
-            .join(dvd, dirty.dst == F.col("dv"), "left")
-            .join(dv0, dirty.dst == F.col("dv0"), "left")
-            .withColumn("blk_s", _blk("s"))
-            .withColumn("blk_d", _blk("d"))
-            .withColumn("s_new", ~(F.col("blk_s") | F.col("blk_d")))
-        )
-        changed = (
-            judged.filter(F.col("s_new") != F.col("s"))
-            .select("src", "dst", "h", F.col("s_new").alias("s"))
-            .localCheckpoint(eager=True)
-        )
-        n_changed = changed.count()
-        if n_changed == 0:
-            break
-        delta = (
-            delta.join(
-                changed.select(
-                    F.col("src").alias("dsrc"), F.col("dst").alias("ddst")
-                ),
-                ["dsrc", "ddst"],
-                "left_anti",
-            )
-            .unionByName(
-                changed.select(
-                    F.col("src").alias("dsrc"),
-                    F.col("dst").alias("ddst"),
-                    F.col("s").alias("dls"),
-                )
-            )
-            .localCheckpoint(eager=True)
-        )
-        n_delta = delta.count()
-        # Vertices whose state changed: recompute their true-edge
-        # h-lists from the endpoint index (one broadcast-filtered scan;
-        # group sizes are the handful of true edges per vertex), and
-        # keep the OLD list alongside for the propagation filter.
-        av = (
-            changed.select(F.col("src").alias("v"))
-            .unionByName(changed.select(F.col("dst").alias("v")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n_av = av.count()
-        trues = (
-            x.join(broadcast_side(av, n_av), "v")
-            .join(
-                broadcast_side(delta, n_delta),
-                (F.col("fsrc") == F.col("dsrc"))
-                & (F.col("fdst") == F.col("ddst")),
-                "left",
-            )
-            .filter(F.coalesce(F.col("dls"), F.col("fs")))
-            .groupBy("v")
-            .agg(F.array_sort(F.collect_list("fh")).alias("hs"))
-        )
-        av_states = (
-            av.join(trues, "v", "left")
-            .join(
-                broadcast_side(vdelta.withColumnRenamed("hs", "ohs"), n_vdelta),
-                "v",
-                "left",
-            )
-            .join(
-                broadcast_side(
-                    vstat0a.select(F.col("v").alias("v"), F.col("hs0").alias("ohs0")),
-                    n_vstat0,
-                ),
-                "v",
-                "left",
-            )
-            .select(
-                "v",
-                F.coalesce(F.col("hs"), empty_arr).alias("nhs"),
-                F.coalesce(F.col("ohs"), F.col("ohs0"), empty_arr).alias("ohs"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        vdelta = (
-            vdelta.join(av_states.select("v"), "v", "left_anti")
-            .unionByName(av_states.select("v", F.col("nhs").alias("hs")))
-            .localCheckpoint(eager=True)
-        )
-        n_vdelta = vdelta.count()
-        # Next dirty set: edges at a state-changed vertex whose
-        # blocking predicate ACTUALLY flips there (count-below-b
-        # against the old vs new true-h list differs) — without this
-        # filter a hub's single state change re-dirtied its whole
-        # neighborhood.  Refined further (round 14, fuzz-pinned +
-        # replay-pinned): an edge whose VALUE provably cannot change
-        # is skipped — currently-false f that became MORE blocked at
-        # v stays false; currently-false f unblocked at v but still
-        # blocked at its OTHER endpoint (under the post-round state)
-        # stays false, and a later state change there re-fires
-        # po != pn.  delta/vdelta already carry this round's flips,
-        # so every predicate below reads a round-consistent snapshot.
-        # Cut measured recompute from ~30% to ~4% of |E| on the
-        # hub-heavy deletion cascade (SCALE.md round 14).
-        dirty = (
-            x.join(broadcast_side(av_states, n_av), "v")
-            .withColumn(
-                "po",
-                F.size(F.filter(F.col("ohs"), lambda hh: hh < F.col("fh"))) >= b,
-            )
-            .withColumn(
-                "pn",
-                F.size(F.filter(F.col("nhs"), lambda hh: hh < F.col("fh"))) >= b,
-            )
-            .filter(F.col("po") != F.col("pn"))
-            .join(
-                broadcast_side(delta, n_delta),
-                (F.col("fsrc") == F.col("dsrc"))
-                & (F.col("fdst") == F.col("ddst")),
-                "left",
-            )
-            .withColumn("scur", F.coalesce(F.col("dls"), F.col("fs")))
-            .withColumn("ov", F.col("fsrc") + F.col("fdst") - F.col("v"))
-            .join(
-                broadcast_side(
-                    vdelta.select(
-                        F.col("v").alias("ov"), F.col("hs").alias("uhs")
-                    ),
-                    n_vdelta,
-                ),
-                "ov",
-                "left",
-            )
-            .join(
-                broadcast_side(
-                    vstat0a.select(
-                        F.col("v").alias("ov"), F.col("hs0").alias("uhs0")
-                    ),
-                    n_vstat0,
-                ),
-                "ov",
-                "left",
-            )
-            .withColumn(
-                "ublk",
-                F.size(
-                    F.filter(
-                        F.coalesce(F.col("uhs"), F.col("uhs0"), empty_arr),
-                        lambda hh: hh < F.col("fh"),
-                    )
-                )
-                >= b,
-            )
-            .filter(F.col("scur") | (~F.col("pn") & ~F.col("ublk")))
-            .select(
-                F.col("fsrc").alias("src"),
-                F.col("fdst").alias("dst"),
-                F.col("fh").alias("h"),
-                F.col("scur").alias("s"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n_dirty = dirty.count()
-    return delta, n_delta
 
 
 def _mmi_round_sql(tag: str, k: int) -> str:
@@ -787,175 +565,17 @@ def _mmi_mat_union(tag: str) -> str:
     "propagation. Output: base/warm sizes and endpoint checksums, "
     "|base symmetric-difference warm| as the cascade footprint, and "
     "the matching + maximality proofs on the appended graph. Scale "
-    "shape: base phase is the shared argmin-edge kernel; the warm "
-    "rounds never expand adjacency — blocked(e) reads a per-VERTEX "
-    "matched-state (the sorted h-list of currently-true edges at the "
-    "endpoint: <= 1 at any fixpoint, a few transiently), joined as a "
-    "size-switched broadcast, so per-round exchanged rows are the "
-    "cascade cone's edges, not its degree sum (the audit-caught hub "
-    "blowup of the naive line-graph recompute).",
+    "shape: the edge count is observed on the edge checkpoint job, then "
+    "the whole entry (priorities deduplicated with their pairs, the cold "
+    "greedy of the base graph, the batch-edge seed, the cascade in "
+    "Jacobi rounds, the proofs) is one numpy body over the Arrow edge "
+    "table: on the driver while the entity edges fit "
+    "_SYM_LOCAL_EDGE_MAX // 2 rows, otherwise in one executor task of "
+    "the coalesced edges that sends back only the result row — 3 Spark "
+    "jobs either way with the count.",
 )
 def graph_matching_incremental(spark: SparkSession, sf: str) -> DataFrame:
-    from graphdatabases_spark.functions import text as T
-    from graphdatabases_spark.relational.graph_kernels import _matching_kernel
-
-    g = (
-        entity_edges(spark, sf, dedup=True)
-        .withColumn(
-            "h",
-            T.portable_hash64(
-                F.concat(
-                    F.lit("mat"),
-                    F.col("src").cast("string"),
-                    F.lit(":"),
-                    F.col("dst").cast("string"),
-                )
-            )
-            * F.lit(32768)
-            + (F.col("src") * 31 + F.col("dst")) % 32768,
-        )
-        .localCheckpoint(eager=True)
-    )
-    is_batch = ((F.col("src") + F.col("dst")) % _MI_MOD) == 0
-    # One pass for both edge counts (round 14; was two full scans).
-    _gc = g.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(is_batch, 1)).alias("nb"),
-    ).collect()[0]
-    n_edges, n_batch_edges = _gc["n"], _gc["nb"]
-    g_base = g.filter(~is_batch).localCheckpoint(eager=True)
-    mat_base = _matching_kernel(spark, g_base, n_edges - n_batch_edges)
-    base_row = mat_base.agg(
-        F.count(F.lit(1)).cast("long").alias("sz"),
-        F.sum(F.col("src") + F.col("dst")).cast("long").alias("cks"),
-    ).collect()[0]
-    # Edge-status relation (s = base membership; batch edges false) and
-    # its endpoint index, checkpointed once.  The base matching is a
-    # size-switched broadcast (<= |V|/2 rows, count known) so the
-    # status join never exchanges g; the endpoint index skips the
-    # v-repartition entirely — every per-round consumer broadcasts the
-    # dirty side, so a 2|E| exchange would buy nothing (audit catch:
-    # it was 850 MB of the entry's sf1 shuffle).
-    estat = (
-        g.join(
-            broadcast_side(mat_base.withColumn("s0", F.lit(True)), base_row["sz"]),
-            ["src", "dst"],
-            "left",
-        )
-        .select(
-            "src", "dst", "h", F.coalesce(F.col("s0"), F.lit(False)).alias("s")
-        )
-        .localCheckpoint(eager=True)
-    )
-    x = (
-        estat.select(
-            F.col("src").alias("v"),
-            F.col("src").alias("fsrc"),
-            F.col("dst").alias("fdst"),
-            F.col("h").alias("fh"),
-            F.col("s").alias("fs"),
-        )
-        .unionByName(
-            estat.select(
-                F.col("dst").alias("v"),
-                F.col("src").alias("fsrc"),
-                F.col("dst").alias("fdst"),
-                F.col("h").alias("fh"),
-                F.col("s").alias("fs"),
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    # Initial dirty set: the BATCH EDGES ONLY.  A new edge enters with
-    # status false, and blocked() reads only TRUE adjacent edges — so
-    # existing edges stay consistent until some flip actually reaches
-    # them (the first version seeded every edge at a batch endpoint
-    # and the hub degrees made that ~all of the graph).
-    dirty = estat.filter(is_batch).localCheckpoint(eager=True)
-    n_dirty = dirty.count()
-    # Per-VERTEX matched-state instead of per-edge adjacency scans
-    # (second audit catch: the line-graph recompute join emitted
-    # sum-of-degrees rows over the dirty set — hub degrees made that
-    # 2.9 GB of sf1 shuffle).  blocked(e) only needs, per endpoint,
-    # whether some OTHER matched edge there has smaller h, i.e. the
-    # sorted h-list of currently-true edges at the vertex: <= 1 at any
-    # fixpoint (it's a matching), <= a few transiently.  vstat0 is the
-    # base state (one row per base-matched endpoint); vdelta overlays
-    # the vertices the cascade touched.  All recompute joins broadcast
-    # the vertex-state side — no adjacency expansion anywhere.
-    vstat0 = (
-        estat.filter(F.col("s"))
-        .select(F.col("src").alias("v"), F.col("h").alias("m1"))
-        .unionByName(
-            estat.filter(F.col("s")).select(
-                F.col("dst").alias("v"), F.col("h").alias("m1")
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    n_vstat0 = 2 * base_row["sz"]
-    # Warm phase: the shared line-graph cascade (b = 1 is the
-    # maximal-matching rule) — driver-local below the Arrow bounds
-    # with the hub-degree bail, distributed relaxation above.
-    delta, n_delta = _line_warm_repair(
-        spark, x, vstat0, dirty, n_dirty, n_vstat0, b=1
-    )
-    final = (
-        estat.join(
-            broadcast_side(delta, n_delta),
-            (estat.src == F.col("dsrc")) & (estat.dst == F.col("ddst")),
-            "left",
-        )
-        .select(
-            "src", "dst",
-            F.coalesce(F.col("dls"), F.col("s")).alias("sf"),
-            F.col("s").alias("sb"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    warm_mat = final.filter(F.col("sf")).select("src", "dst").localCheckpoint(
-        eager=True
-    )
-    warm_row = warm_mat.agg(
-        F.count(F.lit(1)).cast("long").alias("sz"),
-        F.sum(F.col("src") + F.col("dst")).cast("long").alias("cks"),
-    ).collect()[0]
-    n_changed_edges = final.filter(F.col("sf") != F.col("sb")).count()
-    mv = (
-        warm_mat.select(F.col("src").alias("v"))
-        .unionByName(warm_mat.select(F.col("dst").alias("v")))
-        .localCheckpoint(eager=True)
-    )
-    conflict = mv.groupBy("v").agg(F.count(F.lit(1)).alias("c")).filter(
-        F.col("c") > 1
-    ).count()
-    n_mv = 2 * warm_row["sz"]
-    free_viol = (
-        g.join(
-            broadcast_side(mv, n_mv).withColumnRenamed("v", "xsrc"),
-            g.src == F.col("xsrc"),
-            "left_anti",
-        )
-        .join(
-            broadcast_side(mv, n_mv).withColumnRenamed("v", "xdst"),
-            F.col("dst") == F.col("xdst"),
-            "left_anti",
-        )
-        .count()
-    )
-    return spark.range(1).select(
-        F.lit(n_edges).cast("long").alias("n_edges"),
-        F.lit(n_edges - n_batch_edges).cast("long").alias("n_base_edges"),
-        F.lit(n_batch_edges).cast("long").alias("n_batch_edges"),
-        F.lit(base_row["sz"]).cast("long").alias("base_matching_size"),
-        F.lit(base_row["cks"]).cast("long").alias("base_sum_ids"),
-        F.lit(warm_row["sz"]).cast("long").alias("warm_matching_size"),
-        F.lit(warm_row["cks"]).cast("long").alias("warm_sum_ids"),
-        F.lit(n_changed_edges).cast("long").alias("n_changed_edges"),
-        F.lit(conflict == 0).alias("is_matching"),
-        F.lit(free_viol == 0).alias("maximal"),
-        F.lit(True).alias("converged"),
-    )
+    return _matching_repair(spark, sf, delete=False, b=1, schema=_MAT_INC_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -965,6 +585,13 @@ def graph_matching_incremental(spark: SparkSession, sf: str) -> DataFrame:
 _BMI_ROUNDS = 8  # oracle unroll per phase (converged guard; the cold
                  # b-matching fixpoint measured 3/4/5 rounds at the 3
                  # sfs — the base split shifts it by at most one)
+
+_BMAT_INC_SCHEMA = _row_schema(
+    ["n_edges", "n_base_edges", "n_batch_edges", "b", "base_bmatch_size",
+     "base_total_weight", "base_sum_ids", "warm_bmatch_size",
+     "warm_total_weight", "warm_sum_ids", "n_changed_edges"],
+    ("feasible", "maximal", "converged"),
+)
 
 
 def _bmi_round_sql(tag: str, k: int) -> str:
@@ -1102,8 +729,8 @@ def _bmi_oracle() -> str:
     "appended graph, which the oracle value-checks by unrolling the "
     "cold b-suitor rounds on base and appended graphs side by side. "
     "Same base/batch split ((src + dst) % 20 == 0, ~5%), cold phase = "
-    "the shared _bmatching_kernel on the base edges, warm phase = the "
-    "shared _line_warm_repair cascade with b = 3: dirty seed is the "
+    "the sequential weight-greedy of the base edges, warm phase = the "
+    "matching entries' cascade with b = 3: dirty seed is the "
     "BATCH EDGES ONLY (they enter with no capacity claim — the "
     "round-13 93%-dirty lesson applied from day one), flips propagate "
     "only to adjacent edges whose count-below-b predicate actually "
@@ -1112,189 +739,12 @@ def _bmi_oracle() -> str:
     "footprint), and the b-FEASIBILITY (no vertex over capacity) and "
     "MAXIMALITY (no rejected edge with spare capacity at both ends) "
     "proofs on the appended graph, computed independently on both "
-    "engines. Scale shape: cold phase is the rank<=cap round kernel "
-    "(per-round one 2|g|-row map-side-combinable window over the "
-    "shrinking undecided set); warm rounds broadcast only the "
-    "cascade-cone-sized dirty/state sides against the once-"
-    "checkpointed endpoint index — per-vertex state is the <= b "
-    "true-h array, never hub adjacency; the driver-local cascade is "
-    "degree-guarded (counts each lazy fetch against the Arrow budget "
-    "and bails to the distributed path on a hub breach).",
+    "engines. Scale shape: graph_matching_incremental's — one numpy "
+    "body (_matching_repair with b = 3) over the Arrow edge table, on "
+    "the driver under _SYM_LOCAL_EDGE_MAX // 2 edge rows and in one "
+    "executor task above it, 3 Spark jobs either way with the count.",
 )
 def graph_bmatching_incremental(spark: SparkSession, sf: str) -> DataFrame:
-    from graphdatabases_spark.functions import text as T
-    from graphdatabases_spark.relational.graph_kernels import _bmatching_kernel
-    from graphdatabases_spark.relational.graph_symmetry_queries import (
-        _BM_B,
-        _BM_P48,
-    )
+    from graphdatabases_spark.relational.graph_symmetry_queries import _BM_B
 
-    w_expr = (F.col("src") * 7 + F.col("dst") * 13) % 100 + 1
-    g = (
-        entity_edges(spark, sf, dedup=True)
-        .withColumn("w", w_expr.cast("long"))
-        .withColumn(
-            "h",
-            (100 - F.col("w")) * F.lit(_BM_P48)
-            + T.portable_hash64(
-                F.concat(
-                    F.lit("bmat"),
-                    F.col("src").cast("string"),
-                    F.lit(":"),
-                    F.col("dst").cast("string"),
-                )
-            ),
-        )
-        .localCheckpoint(eager=True)
-    )
-    is_batch = ((F.col("src") + F.col("dst")) % _MI_MOD) == 0
-    # One pass for both edge counts (round 14; was two full scans).
-    _gc = g.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(is_batch, 1)).alias("nb"),
-    ).collect()[0]
-    n_edges, n_batch_edges = _gc["n"], _gc["nb"]
-    g_base = (
-        g.filter(~is_batch)
-        .select("src", "dst", F.col("h").alias("p"), "w")
-        .localCheckpoint(eager=True)
-    )
-    caps = (
-        g_base.select(F.col("src").alias("v"))
-        .unionByName(g_base.select(F.col("dst").alias("v")))
-        .distinct()
-        .withColumn("c", F.lit(_BM_B).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    n_caps = caps.count()
-    bmat_base = _bmatching_kernel(
-        spark, g_base, n_edges - n_batch_edges, caps, n_caps
-    )
-    base_row = bmat_base.agg(
-        F.count(F.lit(1)).cast("long").alias("sz"),
-        F.sum("w").cast("long").alias("tw"),
-        F.sum(F.col("src") + F.col("dst")).cast("long").alias("cks"),
-    ).collect()[0]
-    # Edge-status relation (s = base acceptance; batch edges false)
-    # and its endpoint index, checkpointed once — the matching
-    # repair's shapes with the weight column along for the ride.
-    estat = (
-        g.join(
-            broadcast_side(
-                bmat_base.select("src", "dst").withColumn("s0", F.lit(True)),
-                base_row["sz"],
-            ),
-            ["src", "dst"],
-            "left",
-        )
-        .select(
-            "src", "dst", "h", "w",
-            F.coalesce(F.col("s0"), F.lit(False)).alias("s"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    x = (
-        estat.select(
-            F.col("src").alias("v"),
-            F.col("src").alias("fsrc"),
-            F.col("dst").alias("fdst"),
-            F.col("h").alias("fh"),
-            F.col("s").alias("fs"),
-        )
-        .unionByName(
-            estat.select(
-                F.col("dst").alias("v"),
-                F.col("src").alias("fsrc"),
-                F.col("dst").alias("fdst"),
-                F.col("h").alias("fh"),
-                F.col("s").alias("fs"),
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    # Per-vertex base state, EXPLODED (one row per base-true h per
-    # endpoint, <= b rows per vertex — the capacity analogue of the
-    # matched-h broadcast; never hub adjacency).
-    vstat0 = (
-        estat.filter(F.col("s"))
-        .select(F.col("src").alias("v"), F.col("h").alias("m1"))
-        .unionByName(
-            estat.filter(F.col("s")).select(
-                F.col("dst").alias("v"), F.col("h").alias("m1")
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
-    n_vstat0 = 2 * base_row["sz"]
-    # Dirty seed: the batch edges only — they enter with status false
-    # and no capacity claim, so no existing edge's dependency changes
-    # until a batch edge actually flips true.
-    dirty = (
-        estat.filter(is_batch)
-        .select("src", "dst", "h", "s")
-        .localCheckpoint(eager=True)
-    )
-    n_dirty = dirty.count()
-    delta, n_delta = _line_warm_repair(
-        spark, x, vstat0, dirty, n_dirty, n_vstat0, b=_BM_B
-    )
-    final = (
-        estat.join(
-            broadcast_side(delta, n_delta),
-            (estat.src == F.col("dsrc")) & (estat.dst == F.col("ddst")),
-            "left",
-        )
-        .select(
-            "src", "dst", "w",
-            F.coalesce(F.col("dls"), F.col("s")).alias("sf"),
-            F.col("s").alias("sb"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    warm_mat = final.filter(F.col("sf")).select("src", "dst", "w").localCheckpoint(
-        eager=True
-    )
-    warm_row = warm_mat.agg(
-        F.count(F.lit(1)).cast("long").alias("sz"),
-        F.sum("w").cast("long").alias("tw"),
-        F.sum(F.col("src") + F.col("dst")).cast("long").alias("cks"),
-    ).collect()[0]
-    n_changed_edges = final.filter(F.col("sf") != F.col("sb")).count()
-    # b-feasibility + maximality proofs over RESULT degrees.
-    wdeg = (
-        warm_mat.select(F.col("src").alias("v"))
-        .unionByName(warm_mat.select(F.col("dst").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_wdeg = 2 * warm_row["sz"]
-    overcap = wdeg.filter(F.col("n") > _BM_B).count()
-    deg_s = wdeg.select(F.col("v").alias("src"), F.col("n").alias("ns"))
-    deg_d = wdeg.select(F.col("v").alias("dst"), F.col("n").alias("nd"))
-    maxviol = (
-        final.filter(~F.col("sf"))
-        .join(broadcast_side(deg_s, n_wdeg), "src", "left")
-        .join(broadcast_side(deg_d, n_wdeg), "dst", "left")
-        .filter(
-            (F.coalesce(F.col("ns"), F.lit(0)) < _BM_B)
-            & (F.coalesce(F.col("nd"), F.lit(0)) < _BM_B)
-        )
-        .count()
-    )
-    return spark.range(1).select(
-        F.lit(n_edges).cast("long").alias("n_edges"),
-        F.lit(n_edges - n_batch_edges).cast("long").alias("n_base_edges"),
-        F.lit(n_batch_edges).cast("long").alias("n_batch_edges"),
-        F.lit(_BM_B).cast("int").alias("b"),
-        F.lit(base_row["sz"]).cast("long").alias("base_bmatch_size"),
-        F.lit(base_row["tw"]).cast("long").alias("base_total_weight"),
-        F.lit(base_row["cks"]).cast("long").alias("base_sum_ids"),
-        F.lit(warm_row["sz"]).cast("long").alias("warm_bmatch_size"),
-        F.lit(warm_row["tw"]).cast("long").alias("warm_total_weight"),
-        F.lit(warm_row["cks"]).cast("long").alias("warm_sum_ids"),
-        F.lit(n_changed_edges).cast("long").alias("n_changed_edges"),
-        F.lit(overcap == 0).alias("feasible"),
-        F.lit(maxviol == 0).alias("maximal"),
-        F.lit(True).alias("converged"),
-    )
+    return _matching_repair(spark, sf, delete=False, b=_BM_B, schema=_BMAT_INC_SCHEMA)

@@ -5,7 +5,7 @@ fixed-priority parallel kernels with their sub-threshold driver-local
 tails, the once-partitioned symmetric-relation builder, and the
 driver-local greedy replays.  Consumed by graph_queries (Luby MIS,
 greedy matching), graph_symmetry_queries (coloring, b-matching) and
-graph_incremental_queries (base phases of the repair entries).
+graph_incremental_queries (the greedies inside the repair bodies).
 
 Reference parity: the reference (eragon2404/GraphDatabases) has no MIS
 or matching operator — these are engine-widening entries; the kernels
@@ -14,7 +14,7 @@ cite their scale discipline in SCALE.md (rounds 12-13 audits).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -108,24 +108,88 @@ def _mis_greedy(rank, src, dst):
     return mis
 
 
-def _matching_greedy_py(edges_pdf) -> list[tuple[int, int]]:
-    """Driver-local lexicographically-first maximal matching: edges in
-    (h, src, dst) order, take one iff both endpoints are free."""
+def _pair_hash(tag: str) -> Column:
+    """md5-48 of ``tag || src || ':' || dst``: the hash part of the
+    (b-)matching entries' edge priorities."""
+    from graphdatabases_spark.functions import text as T
+
+    src, dst = F.col("src").cast("string"), F.col("dst").cast("string")
+    return T.portable_hash64(F.concat(F.lit(tag), src, F.lit(":"), dst))
+
+
+def _matching_priority() -> Column:
+    """The maximal-matching entries' edge priority ``h`` (lowest
+    first; ties go to ``(src, dst)``)."""
+    return _pair_hash("mat") * F.lit(32768) + (F.col("src") * 31 + F.col("dst")) % 32768
+
+
+def _capacity_greedy(rank, s, d, cap):
+    """The sequential capacity greedy as an edge mask: edges in ``rank``
+    order (distinct values, lowest first), each taken iff both endpoint
+    positions ``s``/``d`` have capacity left in ``cap`` (per vertex; a
+    taken edge uses one unit at each end, so a self-loop uses two).
+    Runs in rounds over the incidences sorted once by (vertex, rank):
+    an undecided edge is taken when at both endpoints the taken and
+    undecided incidences ranked below it leave capacity, and dropped
+    when at an endpoint the taken ones alone use it up. The lowest
+    undecided edge is always decided, and the result equals the
+    sequential pass."""
     import numpy as np
 
-    h = edges_pdf["h"].to_numpy()
-    s = edges_pdf["src"].to_numpy()
-    d = edges_pdf["dst"].to_numpy()
-    order = np.lexsort((d, s, h))
-    used: set[int] = set()
-    out: list[tuple[int, int]] = []
-    for i in order:
-        a, b = int(s[i]), int(d[i])
-        if a not in used and b not in used:
-            out.append((a, b))
-            used.add(a)
-            used.add(b)
-    return out
+    m = len(rank)
+    take = np.zeros(m, dtype=bool)
+    undecided = np.ones(m, dtype=bool)
+    # int32 edge ids and per-incidence counts halve the peak memory.
+    v, e = np.concatenate([s, d]), np.tile(np.arange(m, dtype=np.int32), 2)
+    order = np.argsort(v * (rank.max(initial=0) + 1) + rank[e])
+    v, e = v[order], e[order]
+    while undecided.any():
+        i = np.arange(len(e), dtype=np.int32)
+        group = np.r_[True, v[1:] != v[:-1]]
+        run = group | np.r_[True, e[1:] != e[:-1]]  # a self-loop's pair ties
+        g = np.maximum.accumulate(np.where(group, i, 0))
+        r = np.maximum.accumulate(np.where(run, i, 0))
+
+        def below(flag):  # flagged incidences ranked below, per incidence
+            ex = np.cumsum(flag, dtype=np.int32) - flag
+            return ex[r] - ex[g]
+
+        taken = below(take[e])
+        full, short = np.zeros(m, dtype=bool), np.zeros(m, dtype=bool)
+        full[e[taken >= cap[v]]] = True
+        short[e[taken + below(undecided[e]) >= cap[v]]] = True
+        take |= undecided & ~short
+        undecided &= short & ~full
+        v, e = v[~full[e]], e[~full[e]]
+    return take
+
+
+def _greedy_tail(
+    spark, g: DataFrame, prio: str, schema: StructType, caps: DataFrame | None = None
+) -> DataFrame:
+    """The rest of a (b-)matching kernel on the driver: one Arrow
+    collect of the undecided edges ``g``, ``_capacity_greedy`` in
+    ``(prio, src, dst)`` order with the capacity left per vertex
+    (``caps[v, c]`` for g's vertices, else 1 everywhere), and the taken
+    edges' ``schema`` columns as a ``local_frame``."""
+    import numpy as np
+
+    t = g.select(prio, *schema.names).toArrow()
+    src, dst, p = (t.column(c).to_numpy() for c in ("src", "dst", prio))
+    ids, pos = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    s, d = pos[: len(src)], pos[len(src) :]
+    if caps is None:
+        cap = np.ones(len(ids), dtype=np.int64)
+    else:
+        gverts = g.select(F.col("src").alias("v")).unionByName(
+            g.select(F.col("dst").alias("v"))
+        ).distinct()
+        c = caps.join(F.broadcast(gverts), "v", "left_semi").toArrow()
+        cap = np.zeros(len(ids), dtype=np.int64)
+        cap[np.searchsorted(ids, c.column("v").to_numpy())] = c.column("c").to_numpy()
+    take = _capacity_greedy(np.lexsort((d, s, p)).argsort(), s, d, cap)
+    cols = [t.column(c).to_numpy()[take].tolist() for c in schema.names]
+    return local_frame(spark, list(zip(*cols)), schema)
 
 
 def _ids_df(spark, ids: list[int]) -> DataFrame:
@@ -323,17 +387,7 @@ def _matching_kernel(spark, g: DataFrame, n_g: int) -> DataFrame:
         # pull + the sequential greedy over (h, src, dst) order equals
         # the remaining fixpoint exactly.
         if n_g <= _SYM_LOCAL_EDGE_MAX:
-            import pandas as pd
-
-            pairs = _matching_greedy_py(g.select("h", "src", "dst").toPandas())
-            m = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "src": pd.Series([p[0] for p in pairs], dtype="int64"),
-                        "dst": pd.Series([p[1] for p in pairs], dtype="int64"),
-                    }
-                )
-            ).localCheckpoint(eager=True)
+            m = _greedy_tail(spark, g, "h", StructType.fromDDL("src long, dst long"))
             mat = m if mat is None else mat.unionByName(m)
             break
         # Winners WITHOUT a join back against the edge set: each
@@ -416,43 +470,10 @@ def _bmatching_kernel(
     while n_g > 0:
         if n_g <= _SYM_LOCAL_EDGE_MAX:
             # Driver-local tail: the undecided edges plus their
-            # vertices' remaining capacities are the whole state; the
-            # sequential greedy over (p, src, dst) with capacity
-            # bookkeeping equals the remaining fixpoint exactly.
-            import numpy as np
-            import pandas as pd
-
-            epdf = g.select("p", "src", "dst", "w").toPandas()
-            gverts = g.select(F.col("src").alias("v")).unionByName(
-                g.select(F.col("dst").alias("v"))
-            ).distinct()
-            cpdf = caps.join(
-                F.broadcast(gverts), "v", "left_semi"
-            ).toPandas()
-            cap = dict(
-                zip(cpdf["v"].to_numpy().tolist(), cpdf["c"].to_numpy().tolist())
+            # vertices' remaining capacities are the whole state.
+            m = _greedy_tail(
+                spark, g, "p", StructType.fromDDL("src long, dst long, w long"), caps
             )
-            ps = epdf["p"].to_numpy()
-            ss = epdf["src"].to_numpy()
-            ds = epdf["dst"].to_numpy()
-            ws = epdf["w"].to_numpy()
-            order = np.lexsort((ds, ss, ps))
-            rows = []
-            for i in order:
-                a, bb = int(ss[i]), int(ds[i])
-                if cap.get(a, 0) > 0 and cap.get(bb, 0) > 0:
-                    rows.append((a, bb, int(ws[i])))
-                    cap[a] -= 1
-                    cap[bb] -= 1
-            m = spark.createDataFrame(
-                pd.DataFrame(
-                    {
-                        "src": pd.Series([r[0] for r in rows], dtype="int64"),
-                        "dst": pd.Series([r[1] for r in rows], dtype="int64"),
-                        "w": pd.Series([r[2] for r in rows], dtype="int64"),
-                    }
-                )
-            ).localCheckpoint(eager=True)
             bmat = m if bmat is None else bmat.unionByName(m)
             break
         ex = g.select(

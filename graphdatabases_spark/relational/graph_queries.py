@@ -96,10 +96,12 @@ def entity_edges(spark: SparkSession, sf: str, dedup: bool = True) -> DataFrame:
     return out.distinct() if dedup else out
 
 
-def _edge_positions(edges) -> tuple:
-    """``(src, dst, ids, s, d)`` of an Arrow edge table: its distinct
-    ``(src, dst)`` pairs as int64 arrays, the sorted vertex ids, and
-    each pair's endpoints as positions in ``ids``."""
+def _edge_positions(edges, *cols: str) -> tuple:
+    """``(src, dst, ids, s, d, *cols)`` of an Arrow edge table: its
+    distinct ``(src, dst)`` pairs as int64 arrays, the sorted vertex
+    ids, each pair's endpoints as positions in ``ids``, and the pairs'
+    values of the columns ``cols``, which must be functions of the
+    pair."""
     import numpy as np
 
     src, dst = (
@@ -108,8 +110,17 @@ def _edge_positions(edges) -> tuple:
     )
     ids, pos = np.unique(np.concatenate([src, dst]), return_inverse=True)
     # One key per pair; it fits int64 up to 3e9 vertices.
-    s, d = np.divmod(np.unique(pos[: len(src)] * len(ids) + pos[len(src) :]), len(ids))
-    return ids[s], ids[d], ids, s, d
+    key = pos[: len(src)] * len(ids) + pos[len(src) :]
+    if cols:  # one row per pair, any of its duplicates
+        order = np.argsort(key)
+        key = key[order]
+        first = np.r_[True, key[1:] != key[:-1]]
+        key, order = key[first], order[first]
+    else:
+        key = np.unique(key)
+    s, d = np.divmod(key, len(ids))
+    extra = (edges.column(c).to_numpy()[order] for c in cols)
+    return (ids[s], ids[d], ids, s, d, *extra)
 
 
 def _task_frame(edges: DataFrame, body, schema: StructType) -> DataFrame:
@@ -138,7 +149,9 @@ def _numpy_entry(
     Up to ``max_edges`` rows the table comes to the driver; above it
     one executor task runs ``body`` and only the rows come back: the
     bound caps driver memory, it is not a speed crossover. The rows
-    return as one partition, which ``count()`` reads in one job."""
+    return as one partition, which ``count()`` reads in one job. The
+    incremental PageRank and CC entries and the MIS and (b-)matching
+    repair entries all run this way."""
     obs = Observation()
     ckpt = edges.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(True)
     try:
@@ -1370,6 +1383,7 @@ _MIS_ROUNDS = 8  # measured fixpoint: 4/4/5 rounds at sf0.001/0.01/0.1
 
 from graphdatabases_spark.relational.graph_kernels import (
     _matching_kernel,
+    _matching_priority,
     _mis_kernel,
     _sym_und_build,
 )
@@ -1593,23 +1607,9 @@ def _mm_round_sql(k: int) -> str:
     "geometric in |E|, no static relation re-shuffles per round.",
 )
 def graph_matching_greedy(spark: SparkSession, sf: str) -> DataFrame:
-    from graphdatabases_spark.functions import text as T
-
     g = (
         entity_edges(spark, sf, dedup=True)
-        .withColumn(
-            "h",
-            T.portable_hash64(
-                F.concat(
-                    F.lit("mat"),
-                    F.col("src").cast("string"),
-                    F.lit(":"),
-                    F.col("dst").cast("string"),
-                )
-            )
-            * F.lit(32768)
-            + (F.col("src") * 31 + F.col("dst")) % 32768,
-        )
+        .withColumn("h", _matching_priority())
         .localCheckpoint(eager=True)
     )
     n_edges = g.count()

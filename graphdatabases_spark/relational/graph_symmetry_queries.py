@@ -385,27 +385,16 @@ def _bm_round_sql(k: int) -> str:
     "Arrow collect.",
 )
 def graph_bmatching_greedy(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from graphdatabases_spark.functions import text as T
-    from graphdatabases_spark.relational.graph_kernels import _bmatching_kernel
+    from graphdatabases_spark.relational.graph_kernels import (
+        _bmatching_kernel,
+        _pair_hash,
+    )
 
     w_expr = (F.col("src") * 7 + F.col("dst") * 13) % 100 + 1
     g = (
         entity_edges(spark, sf, dedup=True)
         .withColumn("w", w_expr.cast("long"))
-        .withColumn(
-            "p",
-            (100 - F.col("w")) * F.lit(_BM_P48)
-            + T.portable_hash64(
-                F.concat(
-                    F.lit("bmat"),
-                    F.col("src").cast("string"),
-                    F.lit(":"),
-                    F.col("dst").cast("string"),
-                )
-            ),
-        )
+        .withColumn("p", (100 - F.col("w")) * F.lit(_BM_P48) + _pair_hash("bmat"))
         .localCheckpoint(eager=True)
     )
     n_edges = g.count()

@@ -59,7 +59,6 @@ _SLOW_TESTS = (
     "test_round12_graph.py::TestMisLuby::test_sequential_greedy_equals_parallel_rounds",
     "test_round12_ops.py::TestKllQuantiles::test_python_replay_bit_exact",
     "test_round12_ops.py::TestMultiprobeRecall",
-    "test_round14_graph.py::test_bmatching_incremental_entry_matches_replay",
     "test_round14_graph.py::test_matching_deletion_repair_replay_equals_cold",
     "test_llm_ops.py::TestIvfRecallCurve::test_recall_monotone_in_nprobe",
     "test_batch6_pipeline.py::test_srp_band_pairs_subset_and_recall",

@@ -1,11 +1,16 @@
 """Whole-entry numpy hosts of the ``graph_iterative`` entries.
 
-* ``graph_pagerank_incremental``, ``graph_cc_incremental`` and the MIS
-  append and deletion repair entries each run one numpy body over one
-  Arrow edge table (``graph_queries._numpy_entry``): on the driver
-  under the entry's bound and in one executor task above it. Both
-  hosts return the same rows and leave nothing persisted behind, the
-  edge checkpoint included.
+* ``graph_pagerank_incremental``, ``graph_cc_incremental``, the MIS
+  append and deletion repair entries and the three matching repair
+  entries each run one numpy body over one Arrow edge table
+  (``graph_queries._numpy_entry``): on the driver under the entry's
+  bound and in one executor task above it. Both hosts return the same
+  rows and leave nothing persisted behind, the edge checkpoint
+  included.
+* The matching repair body, fuzzed: on random small multigraphs with
+  a hub, self-loops and duplicate pairs, for capacities 1 and 3, on
+  append and on delete, repairing from the base fixpoint gives the
+  cold greedy of the warm graph.
 * The Python worker of the task host imports the package from any
   working directory, with ``PYTHONPATH`` unset.
 * A table read after the first one supplies the cached schema, so it
@@ -20,9 +25,11 @@
 from __future__ import annotations
 
 import os
+import random
 import subprocess
 import sys
 import uuid
+from collections import Counter
 
 import pytest
 
@@ -39,7 +46,10 @@ from tests.test_algorithms import _persisted_rdd_ids
 from tests.test_round13_graph import SF_SMALL
 
 _ENTRIES = [
+    "graph_bmatching_incremental",
     "graph_cc_incremental",
+    "graph_matching_decremental",
+    "graph_matching_incremental",
     "graph_mis_decremental",
     "graph_mis_incremental",
     "graph_pagerank_incremental",
@@ -88,8 +98,74 @@ def test_local_cascade_equals_distributed(spark, monkeypatch, name):
     assert calls == [1]
     assert _persisted_rdd_ids(spark) - before == set()
     assert driver and driver == task
-    if name.startswith("graph_mis"):
-        assert driver[0]["independent"] and driver[0]["maximal"]
+    row = driver[0].asDict()
+    proofs = ("independent", "is_matching", "feasible", "maximal")
+    assert all(row[c] for c in proofs if c in row)
+
+
+def _greedy(pairs, b, prio) -> set:
+    """The sequential capacity greedy in (prio, src, dst) order."""
+    cap: dict[int, int] = {}
+    taken = set()
+    for _p, s, d in sorted((prio[e], *e) for e in pairs):
+        if cap.get(s, b) > 0 and cap.get(d, b) > 0:
+            taken.add((s, d))
+            cap[s] = cap.get(s, b) - 1
+            cap[d] = cap.get(d, b) - 1
+    return taken
+
+
+@pytest.mark.parametrize("b", [1, 3])
+@pytest.mark.parametrize("delete", [False, True])
+def test_matching_repair_equals_cold_greedy_fuzz(delete, b):
+    """The matching repair body on random small multigraphs (a hub,
+    self-loops, duplicate pairs, priority ties): its base and warm
+    states, read through the result row, are the cold sequential greedy
+    of the base and the warm graph. Ids are multiples of 5, so about a
+    quarter of the pairs fall in the batch."""
+    import pyarrow as pa
+
+    from graphdatabases_spark.relational.graph_incremental_queries import (
+        _MI_MOD,
+        _matching_repair_local,
+    )
+
+    rng = random.Random(2 * b + delete)
+    for trial in range(300):
+        pool = rng.sample(range(0, 400, 5), rng.randint(2, 10))
+        rows = [
+            (pool[0] if rng.random() < 0.4 else rng.choice(pool), rng.choice(pool))
+            for _ in range(rng.randint(1, 40))
+        ]
+        rows += rng.sample(rows, len(rows) // 4)
+        pairs = set(rows)
+        prio = {e: rng.randrange(30) for e in pairs}
+        weight = {e: rng.randint(1, 100) for e in pairs}
+        cols = {"src": [s for s, _ in rows], "dst": [d for _, d in rows],
+                "h": [prio[e] for e in rows]}
+        if b > 1:
+            cols["w"] = [weight[e] for e in rows]
+        row = _matching_repair_local(pa.table(cols), delete=delete, b=b)[0]
+
+        batch = {e for e in pairs if sum(e) % _MI_MOD == 0}
+        base_g, warm_g = (pairs, pairs - batch) if delete else (pairs - batch, pairs)
+        base, warm = _greedy(base_g, b, prio), _greedy(warm_g, b, prio)
+
+        def side(taken):
+            sums = ([sum(weight[e] for e in taken)] if b > 1 else []) + [
+                sum(map(sum, taken))
+            ]
+            return [len(taken)] + [x if taken else None for x in sums]
+
+        deg = Counter(v for e in warm for v in e)
+        expected = (
+            len(pairs), len(pairs - batch), len(batch), *([b] if b > 1 else []),
+            *side(base), *side(warm), len(base ^ warm),
+            all(n <= b for n in deg.values()),
+            all(deg[s] >= b or deg[d] >= b for s, d in warm_g - warm),
+            True,
+        )
+        assert row == expected, (trial, rows)
 
 
 def test_task_host_imports_package_from_any_directory(tmp_path):
@@ -145,6 +221,8 @@ def test_table_schema_is_inferred_once_per_file_version(spark, tmp_path):
 # count of the one-partition result. As Spark compositions
 # graph_pagerank_incremental ran 9 jobs and graph_cc_incremental 19;
 # with the distributed loops they ran 62 and 56, and the MIS entries 97.
+# The matching repair entries ran 61 (append), 68 (delete) and 58
+# (b-matching) with their Spark compositions and cascades.
 _JOB_BUDGET = {
     f"{name}{host}": 4 for name in _ENTRIES for host in ("", ":task")
 }

@@ -79,7 +79,7 @@ def _cap_cascade(universe, base_true, seed, b, hfun):
     """Priority-DAG chaotic relaxation over ``universe`` starting from
     ``base_true`` with dirty ``seed``: blocked(e at v) = at least b
     true adjacent edges with smaller h.  Returns (result, recomputed,
-    rounds) — the replay of _line_warm_repair / _mat_cascade_local,
+    rounds) — the replay of _matching_repair_local's cascade,
     including the round-14 REFINED propagation: a neighbor edge whose
     value provably cannot change is not dirtied (false & newly
     blocked, or false & still blocked at the other endpoint).  The
